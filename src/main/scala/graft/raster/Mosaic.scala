@@ -1,7 +1,7 @@
 package graft.raster
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Dataset
 
 import graft.model.{Raster, TileGeometry}
 import graft.sources.GeoTiff
@@ -70,15 +70,7 @@ object Mosaic {
     val spark = items.sparkSession
     import spark.implicits._
 
-    val tiles = splitTilesWithOffsets(region, maxCells)
-    val tilesB = spark.sparkContext.broadcast(tiles.toArray)
-    // regular tx-major layout: the window of intersecting tile indices is
-    // O(1) arithmetic per item (never a scan of all tiles — at 10^6 tiles an
-    // O(items * T) assignment would dominate the job)
-    val side = math.max(1, math.sqrt(maxCells.toDouble).toInt)
-    val nx = (region.width + side - 1) / side
-    val ny = (region.height + side - 1) / side
-    val cw = region.cellWidth; val ch = region.cellHeight
+    val gridB = spark.sparkContext.broadcast(new TileGrid(region, maxCells))
     // apron: 2 source cells (bicubic support) expressed in world units of the
     // item's own resolution, applied on the tile bbox intersection test.
     // Items in a different CRS are prefiltered by their envelope transformed
@@ -91,6 +83,26 @@ object Mosaic {
         else Crs.transformEnvelope(r.epsg, region.epsg, r.minX, r.maxX, r.minY, r.maxY)
       // item resolution re-expressed in region units via the envelope span
       val ax = 2 * (eMaxX - eMinX) / r.width; val ay = 2 * (eMaxY - eMinY) / r.height
+      gridB.value.hits(eMinX, eMaxX, eMinY, eMaxY, ax, ay).map { case (i, _) => (i, r) }
+    }
+    mergeAssigned(assigned, gridB, mode, kernel)
+  }
+
+  /** A region's regular tx-major tile grid (tile i = tx * ny + ty), with
+    * each tile's global cell offset. */
+  private final class TileGrid(val region: TileGeometry, maxCells: Long) extends Serializable {
+    val tiles: Array[(TileGeometry, Int, Int)] = splitTilesWithOffsets(region, maxCells).toArray
+    private val side = math.max(1, math.sqrt(maxCells.toDouble).toInt)
+    private val nx = (region.width + side - 1) / side
+    private val ny = (region.height + side - 1) / side
+
+    /** The tiles whose bbox grown by the apron (ax, ay) meets the envelope.
+      * The window of candidate tile indices is O(1) arithmetic per item
+      * (never a scan of all tiles — at 10^6 tiles an O(items * T)
+      * assignment would dominate the job). */
+    def hits(eMinX: Double, eMaxX: Double, eMinY: Double, eMaxY: Double,
+             ax: Double, ay: Double): IndexedSeq[(Int, TileGeometry)] = {
+      val cw = region.cellWidth; val ch = region.cellHeight
       @inline def clamp(v: Int, hi: Int) = math.max(0, math.min(v, hi))
       val txLo = clamp(math.floor((eMinX - ax - region.minX) / cw).toInt / side, nx - 1)
       val txHi = clamp(math.floor((eMaxX + ax - region.minX) / cw).toInt / side, nx - 1)
@@ -100,21 +112,26 @@ object Mosaic {
         tx <- txLo to txHi
         ty <- tyLo to tyHi
         i = tx * ny + ty
-        t = tilesB.value(i)._1
+        t = tiles(i)._1
         if eMinX < t.maxX + ax && eMaxX > t.minX - ax &&
            eMinY < t.maxY + ay && eMaxY > t.minY - ay
-      } yield (i, r)
+      } yield (i, t)
     }
+  }
 
-    val emptyTiles = spark.createDataset(tiles.indices.toSeq)
+  /** Merge the (tile index, fragment) pairs into one Raster per tile of the
+    * grid; every tile is emitted, nodata-filled where no fragment lands. */
+  private def mergeAssigned(assigned: Dataset[(Int, Raster)], gridB: Broadcast[TileGrid],
+                            mode: MergeMode, kernel: Resample.Kernel): Dataset[Raster] = {
+    val spark = assigned.sparkSession
+    import spark.implicits._
+    val emptyTiles = spark.createDataset(gridB.value.tiles.indices)
       .map(i => (i, null.asInstanceOf[Raster]))
-
-    val regionB = spark.sparkContext.broadcast(region)
     assigned.union(emptyTiles)
       .groupByKey(_._1)
       .mapGroups { (tileIdx, rows) =>
-        mergeFragments(tileIdx, rows.map(_._2), tilesB.value(tileIdx),
-                       regionB.value, mode, kernel)
+        mergeFragments(tileIdx, rows.map(_._2), gridB.value.tiles(tileIdx),
+                       gridB.value.region, mode, kernel)
       }
   }
 
@@ -180,19 +197,13 @@ object Mosaic {
     val spark = files.sparkSession
     import spark.implicits._
 
-    val tiles = splitTilesWithOffsets(region, maxCells)
-    val tilesB = spark.sparkContext.broadcast(tiles.toArray)
-    val side = math.max(1, math.sqrt(maxCells.toDouble).toInt)
-    val nx = (region.width + side - 1) / side
-    val ny = (region.height + side - 1) / side
-    val cw = region.cellWidth; val ch = region.cellHeight
-    val regionB = spark.sparkContext.broadcast(region)
+    val gridB = spark.sparkContext.broadcast(new TileGrid(region, maxCells))
 
     val fragments = files.flatMap { f =>
       val p = GeoTiff.probe(f.bytes, f.item_id)
       val (eMinX, eMaxX, eMinY, eMaxY) =
         if (p.epsg == region.epsg) (p.minX, p.maxX, p.minY, p.maxY)
-        else Crs.transformEnvelope(p.epsg, regionB.value.epsg,
+        else Crs.transformEnvelope(p.epsg, region.epsg,
                                    p.minX, p.maxX, p.minY, p.maxY)
       // kernel apron = 2 cells of the COARSEST subfile this targetCellWidth
       // can select (overview selection picks the coarsest subfile whose
@@ -205,24 +216,14 @@ object Mosaic {
       val scw = (eMaxX - eMinX) / p.width; val sch = (eMaxY - eMinY) / p.height
       val fBound = if (targetCellWidth > 0) math.max(1.0, targetCellWidth / scw) else 1.0
       val ax = 2 * scw * fBound; val ay = 2 * sch * fBound
-      @inline def clamp(v: Int, hi: Int) = math.max(0, math.min(v, hi))
-      val txLo = clamp(math.floor((eMinX - ax - regionB.value.minX) / cw).toInt / side, nx - 1)
-      val txHi = clamp(math.floor((eMaxX + ax - regionB.value.minX) / cw).toInt / side, nx - 1)
-      val tyLo = clamp(math.floor((eMinY - ay - regionB.value.minY) / ch).toInt / side, ny - 1)
-      val tyHi = clamp(math.floor((eMaxY + ay - regionB.value.minY) / ch).toInt / side, ny - 1)
       for {
-        tx <- txLo to txHi
-        ty <- tyLo to tyHi
-        i = tx * ny + ty
-        t = tilesB.value(i)._1
-        if eMinX < t.maxX + ax && eMaxX > t.minX - ax &&
-           eMinY < t.maxY + ay && eMaxY > t.minY - ay
+        (i, t) <- gridB.value.hits(eMinX, eMaxX, eMinY, eMaxY, ax, ay)
         // tile window in the SOURCE frame (+ apron); conservative envelope
         // transform for mixed CRS, exact when frames match
         (wx0, wx1, wy0, wy1) =
           if (p.epsg == region.epsg)
             (t.minX - ax, t.maxX + ax, t.minY - ay, t.maxY + ay)
-          else Crs.transformEnvelope(regionB.value.epsg, p.epsg,
+          else Crs.transformEnvelope(region.epsg, p.epsg,
                                      t.minX - ax, t.maxX + ax, t.minY - ay, t.maxY + ay)
         // None = the (conservative, apron-padded) window missed — cheap and
         // silent; a CORRUPT file still throws and fails the task loudly
@@ -230,14 +231,6 @@ object Mosaic {
                                        Some(Seq(band)), targetCellWidth)
       } yield (i, frag)
     }
-
-    val emptyTiles = spark.createDataset(tiles.indices.toSeq)
-      .map(i => (i, null.asInstanceOf[Raster]))
-    fragments.union(emptyTiles)
-      .groupByKey(_._1)
-      .mapGroups { (tileIdx, rows) =>
-        mergeFragments(tileIdx, rows.map(_._2), tilesB.value(tileIdx),
-                       regionB.value, mode, kernel)
-      }
+    mergeAssigned(fragments, gridB, mode, kernel)
   }
 }

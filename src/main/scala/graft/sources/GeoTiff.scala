@@ -892,18 +892,59 @@ object GeoTiff {
   def probe(bytes: Array[Byte], itemId: String = "tiff"): Probe = {
     val (buf, order, first, big) = openTiff(bytes, itemId)
     val (tags, _) = readIfd(bytes, buf, order, first, big)
-    val w = tags.scalar(TImageWidth).toInt; val h = tags.scalar(TImageLength).toInt
-    val scale = tags.doubles(TModelPixelScale)
-    val tie = tags.doubles(TModelTiepoint)
+    val g = georef(tags, itemId)
+    Probe(g.minX, g.maxX, g.minY, g.maxY, g.epsg,
+          tags.scalar(TImageWidth).toInt, tags.scalar(TImageLength).toInt,
+          math.max(1, tags.scalar(TSamplesPerPixel, 1).toInt))
+  }
+
+  /** IFD0's full tag-derived envelope and EPSG. */
+  private final case class Georef(minX: Double, maxX: Double, minY: Double, maxY: Double,
+                                  epsg: Int)
+
+  /** Georeferencing of IFD0: tiepoint (i,j,k, X,Y,Z) + pixel scale in IFD0's
+    * grid. Overview subfiles carry none; the envelope (not the cell size)
+    * transfers to them. */
+  private def georef(tags0: Tags, itemId: String): Georef = {
+    val scale = tags0.doubles(TModelPixelScale)
+    val tie = tags0.doubles(TModelTiepoint)
     require(scale.length >= 2 && tie.length >= 5,
             s"$itemId: missing GeoTIFF georeferencing tags")
+    val w0 = tags0.scalar(TImageWidth).toInt
+    val h0 = tags0.scalar(TImageLength).toInt
     val minX = tie(3) - tie(0) * scale(0)
     val maxY = tie(4) + tie(1) * scale(1)
-    val keys = tags.longs(TGeoKeyDirectory)
+    // EPSG from the GeoKeyDirectory (2048 geographic / 3072 projected)
+    // projected CRS key (3072) takes precedence: projected files carry BOTH
+    // a geographic datum key (2048) and the projected code, and keys are
+    // sorted ascending — matching 2048 first would misread UTM as 4326
+    val keys = tags0.longs(TGeoKeyDirectory)
     val keyMap = keys.grouped(4).collect { case Array(k, _, _, v) => k -> v.toInt }.toMap
-    Probe(minX, minX + w * scale(0), maxY - h * scale(1), maxY,
-          keyMap.get(3072L).orElse(keyMap.get(2048L)).getOrElse(4326), w, h,
-          math.max(1, tags.scalar(TSamplesPerPixel, 1).toInt))
+    Georef(minX, minX + w0 * scale(0), maxY - h0 * scale(1), maxY,
+           keyMap.get(3072L).orElse(keyMap.get(2048L)).getOrElse(4326))
+  }
+
+  /** Overview selection: the COARSEST subfile of the chain whose cell width
+    * still resolves `targetCellWidth` (cell <= target); IFD0 when every
+    * overview is coarser than requested. */
+  private def coarsestSubfile(bytes: Array[Byte], buf: ByteBuffer, order: ByteOrder,
+                              big: Boolean, tags0: Tags, next0: Long,
+                              targetCellWidth: Double, itemId: String): Tags = {
+    val w0 = tags0.scalar(TImageWidth).toInt
+    val scale0 = tags0.doubles(TModelPixelScale)
+    require(scale0.length >= 2, s"$itemId: missing GeoTIFF georeferencing tags")
+    val spanX = w0 * scale0(0)
+    var best = tags0
+    var bestCw = spanX / w0
+    var off = next0
+    var guard = 0
+    while (off != 0 && guard < 64) {
+      val (t, next) = readIfd(bytes, buf, order, off, big)
+      val cw = spanX / t.scalar(TImageWidth).toInt
+      if (cw <= targetCellWidth && cw > bestCw) { best = t; bestCw = cw }
+      off = next; guard += 1
+    }
+    best
   }
 
   /** Read a GeoTIFF into a [[Raster]] (all bands, full resolution).
@@ -961,33 +1002,12 @@ object GeoTiff {
                      targetCellWidth: Double = 0.0): Option[Raster] = {
     val (buf, order, first, big) = openTiff(bytes, itemId)
     val (tags0, next0) = readIfd(bytes, buf, order, first, big)
-    // choose the subfile (overview selection as in parseOverview)
-    var chosen = tags0
-    if (targetCellWidth > 0) {
-      val w0 = tags0.scalar(TImageWidth).toInt
-      val scale0 = tags0.doubles(TModelPixelScale)
-      require(scale0.length >= 2, s"$itemId: missing GeoTIFF georeferencing tags")
-      val spanX = w0 * scale0(0)
-      var bestCw = spanX / w0
-      var off = next0
-      var guard = 0
-      while (off != 0 && guard < 64) {
-        val (t, next) = readIfd(bytes, buf, order, off, big)
-        val cw = spanX / t.scalar(TImageWidth).toInt
-        if (cw <= targetCellWidth && cw > bestCw) { chosen = t; bestCw = cw }
-        off = next; guard += 1
-      }
-    }
+    val chosen =
+      if (targetCellWidth > 0)
+        coarsestSubfile(bytes, buf, order, big, tags0, next0, targetCellWidth, itemId)
+      else tags0
     // world window -> pixel window in the chosen subfile's grid
-    val scale = tags0.doubles(TModelPixelScale)
-    val tie = tags0.doubles(TModelTiepoint)
-    require(scale.length >= 2 && tie.length >= 5,
-            s"$itemId: missing GeoTIFF georeferencing tags")
-    val w0 = tags0.scalar(TImageWidth).toInt; val h0 = tags0.scalar(TImageLength).toInt
-    val minX = tie(3) - tie(0) * scale(0)
-    val maxY = tie(4) + tie(1) * scale(1)
-    val maxX = minX + w0 * scale(0)
-    val minY = maxY - h0 * scale(1)
+    val Georef(minX, maxX, minY, maxY, _) = georef(tags0, itemId)
     val w = chosen.scalar(TImageWidth).toInt; val h = chosen.scalar(TImageLength).toInt
     val cw = (maxX - minX) / w; val chh = (maxY - minY) / h
     @inline def clampI(v: Int, hi: Int) = math.max(0, math.min(v, hi))
@@ -1014,21 +1034,8 @@ object GeoTiff {
                     select: Option[Seq[Int]] = None): Raster = {
     val (buf, order, first, big) = openTiff(bytes, itemId)
     val (tags0, next0) = readIfd(bytes, buf, order, first, big)
-    val w0 = tags0.scalar(TImageWidth).toInt
-    val scale0 = tags0.doubles(TModelPixelScale)
-    require(scale0.length >= 2, s"$itemId: missing GeoTIFF georeferencing tags")
-    val spanX = w0 * scale0(0)
-    // chain candidates: (tags, cellWidth)
-    var best = (tags0, spanX / w0)
-    var off = next0
-    var guard = 0
-    while (off != 0 && guard < 64) {
-      val (t, next) = readIfd(bytes, buf, order, off, big)
-      val cw = spanX / t.scalar(TImageWidth).toInt
-      if (cw <= targetCellWidth && cw > best._2) best = (t, cw)
-      off = next; guard += 1
-    }
-    decodeSubfile(bytes, buf, order, best._1, tags0, itemId, ts, select, None)
+    val best = coarsestSubfile(bytes, buf, order, big, tags0, next0, targetCellWidth, itemId)
+    decodeSubfile(bytes, buf, order, best, tags0, itemId, ts, select, None)
   }
 
   /** Decode one subfile's pixel grid; georeferencing, EPSG and nodata are
@@ -1198,26 +1205,7 @@ object GeoTiff {
       }
     }
 
-    // georeferencing from IFD0: tiepoint (i,j,k, X,Y,Z) + pixel scale in
-    // IFD0's grid; the envelope (not the cell size) transfers to overviews
-    val scale = geoTags.doubles(TModelPixelScale)
-    val tie = geoTags.doubles(TModelTiepoint)
-    require(scale.length >= 2 && tie.length >= 5,
-            s"$itemId: missing GeoTIFF georeferencing tags")
-    val w0 = geoTags.scalar(TImageWidth).toInt
-    val h0 = geoTags.scalar(TImageLength).toInt
-    val minX = tie(3) - tie(0) * scale(0)
-    val maxY = tie(4) + tie(1) * scale(1)
-    val maxX = minX + w0 * scale(0)
-    val minY = maxY - h0 * scale(1)
-
-    // EPSG from the GeoKeyDirectory (2048 geographic / 3072 projected)
-    // projected CRS key (3072) takes precedence: projected files carry BOTH
-    // a geographic datum key (2048) and the projected code, and keys are
-    // sorted ascending — matching 2048 first would misread UTM as 4326
-    val keys = geoTags.longs(TGeoKeyDirectory)
-    val keyMap = keys.grouped(4).collect { case Array(k, _, _, v) => k -> v.toInt }.toMap
-    val epsg = keyMap.get(3072L).orElse(keyMap.get(2048L)).getOrElse(4326)
+    val Georef(minX, maxX, minY, maxY, epsg) = georef(geoTags, itemId)
 
     // window envelope: cut from the full envelope along this subfile's
     // grid. Edges that coincide with the image keep the ORIGINAL bound

@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures IVF/LSH ANN recall vs the q40 brute force at a given sf, and
   * prints the q43 assignment-stage plan check (no Window/Exchange before the
   * probe join). Run: sbt "runMain graft.tools.AnnRecall [sfDir]" */
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark(16)
     import spark.implicits._
 
     def topSet(q: String): Map[Long, Set[Long]] =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.{Raster, TileGeometry}
 import graft.raster.{DataKey, Mosaic}
 import graft.sources.GeodataIO
@@ -13,10 +11,7 @@ object RasterIoDemo {
   def main(args: Array[String]): Unit = {
     val outDir = new java.io.File(if (args.nonEmpty) args(0) else "/tmp/graft_raster_demo")
     outDir.mkdirs()
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark(8)
     import spark.implicits._
 
     val items = spark.createDataset((0 until 25).map { k =>

@@ -34,7 +34,7 @@ object ScalingBench {
     * streaming) dominates. A bandwidth-bound toy join would misreport
     * scaling: this host's memory bus saturates near 8 cores while its 32
     * hardware threads give ~3.2x more compute. */
-  def zones(spark: SparkSession): DataFrame = {
+  private def zones(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val spanX = Geo.maxX - Geo.minX; val spanY = Geo.maxY - Geo.minY
     val rows = (0 until 400).map { k =>
@@ -51,7 +51,7 @@ object ScalingBench {
     rows.toDF("zone_id", "ring")
   }
 
-  def pipeline(spark: SparkSession, n: Long): DataFrame = {
+  private def pipeline(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     val pts = spark.range(0, n)
       .select($"id".as("doc_id"),
@@ -101,15 +101,7 @@ object ScalingBench {
     else pipeline(spark, n)
 
   def runAt(cores: Int, n: Long): (Double, Long) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark(cores)
     GraftFunctions.register(spark)
     // warmup (JIT + codegen) on 10% of the load, then min-of-3 timed runs
     // (JIT compilation noise on a shared host otherwise dominates)

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.api.AnnQueries
 
@@ -11,15 +10,7 @@ import graft.api.AnnQueries
   * thousands) and the broadcast-codebook assignment (executor broadcast +
   * UDF — the K ~ sqrt(N) scale path) must produce BIT-IDENTICAL probe
   * assignments: same dot accumulation order, same (-dot, c) tiebreak. */
-class AnnEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AnnEquivalenceSpec extends AnyFunSuite with SparkSuite {
 
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.api.AnnQueries
 import graft.operators.BucketedSelfJoin
@@ -12,15 +11,9 @@ import graft.operators.BucketedSelfJoin
   * scale path): OR'ing 3 x 16-plane tables must recover nearly all planted
   * pairs and strictly beat a single table — the quantitative basis for the
   * 65536-buckets-per-table design. */
-class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnRecallSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override lazy val spark: SparkSession = LocalSpark(8)
 
   test("3x16-plane OR recovers planted near-dups; beats one table; random pairs stay rare") {
     import spark.implicits._

@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.BucketedSelfJoin
 
 /** The LSH bucket cap under adversarial input: one degenerate bucket (an
   * all-identical band signature) would self-join O(n^2); the cap must drop
   * it entirely while leaving under-cap buckets untouched. */
-class BucketCapSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BucketCapSpec extends AnyFunSuite with SparkSuite {
 
   test("adversarial all-identical band is dropped; small buckets survive; boundary kept") {
     import spark.implicits._

@@ -4,7 +4,6 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
 import graft.index.CellIndex
-import graft.operators.CellPartitioning
 
 /** Pure ScalaCheck properties (sbt runs Properties natively — no
   * scalatest bridge in the offline cache). */
@@ -21,7 +20,7 @@ object CellIndexProps extends Properties("CellIndex") {
   property("parent chain == direct coarse encode") = forAll(lon, lat, lvl) { (x, y, l) =>
     val id = CellIndex.cellId(x, y, l)
     val p = Gen.chooseNum(0, l).sample.getOrElse(0)
-    CellPartitioning.prefixOf(id, p) == CellIndex.cellId(x, y, p)
+    Iterator.iterate(id)(CellIndex.parent).drop(l - p).next() == CellIndex.cellId(x, y, p)
   }
 
   property("neighbors at ring 1 differ by <=1 in each axis") =

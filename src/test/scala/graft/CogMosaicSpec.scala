@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.model.{Raster, TileGeometry}
 import graft.raster.{CogFile, Mosaic, Resample}
@@ -12,15 +10,7 @@ import graft.sources.GeoTiff
   * shuffle) must be BIT-IDENTICAL to mosaicking the fully decoded rasters:
   * the window + apron never changes a sampled value, only the bytes
   * touched. */
-class CogMosaicSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CogMosaicSpec extends AnyFunSuite with SparkSuite {
 
   private def mkItem(id: String, ts: Long, w: Int, h: Int,
                      x0: Double, y0: Double, cell: Double, epsg: Int = 4326,

@@ -1,8 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 
 import graft.model.{Raster, TileGeometry}
 import graft.raster.{Crs, Mosaic, Resample}
@@ -10,15 +8,7 @@ import graft.raster.{Crs, Mosaic, Resample}
 /** CRS transforms (J3 completion): round-trip properties, known anchor
   * points, conservative envelopes, the Resample CRS hook, mixed-CRS mosaic
   * vs a direct per-cell reference, and the semantic interpolation chooser. */
-class CrsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CrsSpec extends AnyFunSuite with SparkSuite {
 
   test("web mercator anchor points") {
     val (x0, y0) = Crs.WebMercator.fromLonLat(0, 0)

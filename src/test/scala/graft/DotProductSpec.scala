@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native graft_dot / graft_idot must be bit-identical to the
@@ -10,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (assignment dots, cosine refines, integer Lloyd arithmetic) — same
   * left-to-right accumulation order, same NaN/Inf propagation, same
   * empty-array result. */
-class DotProductSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DotProductSpec extends AnyFunSuite with SparkSuite {
 
   test("graft_dot equals the aggregate(zip_with) fold bitwise") {
     import spark.implicits._

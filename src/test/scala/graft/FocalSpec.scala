@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.model.{Raster, TileGeometry}
 import graft.raster.{Focal, Mosaic, Terrain}
 
-class FocalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class FocalSpec extends AnyFunSuite with SparkSuite {
 
   test("terrain: deterministic, in range, split-transparent") {
     val region = TileGeometry(120, 90, 0, 12, 0, 9, 4326, 0, 0)

@@ -878,6 +878,33 @@ class GeoTiffSpec extends AnyFunSuite {
     // header-only probe sees through the BigTIFF IFD
     val p = GeoTiff.probe(bytes, "bigcog")
     assert((p.width, p.height, p.bands, p.epsg) == (64, 48, 3, 32618))
+    // probe and parse share one georeference reader: envelope and EPSG agree
+    // bit for bit on classic, BigTIFF and projected (UTM) files
+    def envBits(minX: Double, maxX: Double, minY: Double, maxY: Double) =
+      Seq(minX, maxX, minY, maxY).map(java.lang.Double.doubleToRawLongBits)
+    // coordinates where regrouping the envelope arithmetic moves the last ulp
+    val utm = Raster("utm", 3L, 17, 11, 499980.13, 499980.13 + 17 * 29.97,
+                     4100456.9, 4100456.9 + 11 * 29.7, 32633, mkRaster(32633).bands)
+    for ((label, f) <- Seq("classic" -> GeoTiff.encode(mkRaster(4326)), "bigtiff" -> bytes,
+                           "utm" -> GeoTiff.encode(utm, lzw = true, tile = Some((16, 16))))) {
+      val pr = GeoTiff.probe(f, label)
+      val full = GeoTiff.parse(f, label)
+      assert(envBits(pr.minX, pr.maxX, pr.minY, pr.maxY) ==
+             envBits(full.minX, full.maxX, full.minY, full.maxY), label)
+      assert(pr.epsg == full.epsg, label)
+    }
+    assert(GeoTiff.probe(GeoTiff.encode(utm), "utm").epsg == 32633)
+    // and one overview selector: parseOverview at t == the full-extent
+    // window at the same t, down to the envelope bits
+    for (t <- Seq(0.5, 1.0, 2.0, 3.9, 4.0, 100.0)) {
+      val ov = GeoTiff.parseOverview(bytes, "bigcog", 7L, t)
+      val win = GeoTiff.parseWindowOpt(bytes, "bigcog", 7L, p.minX, p.maxX, p.minY, p.maxY,
+                                       targetCellWidth = t).get
+      assert((win.width, win.height, win.epsg) == (ov.width, ov.height, ov.epsg), s"t=$t")
+      assert(envBits(win.minX, win.maxX, win.minY, win.maxY) ==
+             envBits(ov.minX, ov.maxX, ov.minY, ov.maxY), s"t=$t")
+      for (b <- 0 until 3) sameValues(ov.bands(b), win.bands(b))
+    }
     // IFD0 + two overview subfiles, reduced flags set
     val chain = GeoTiff.ifdChain(bytes, "bigcog")
     assert(chain.map(i => (i.width, i.height, i.reduced)) ==

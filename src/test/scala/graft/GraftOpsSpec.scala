@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.api.GraftOps._
 import graft.extract.InterleavedDocs
 
-class GraftOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraftOpsSpec extends AnyFunSuite with SparkSuite {
 
   val dir = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   test("typed facade: docs.geoSpans.withCell.pipJoin == q16") {
     import spark.implicits._

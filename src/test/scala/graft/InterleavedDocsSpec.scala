@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.extract.InterleavedDocs
 import graft.model.{Doc, Span}
@@ -10,18 +8,9 @@ import graft.model.{Doc, Span}
 /** Span-sequence equality is the per-row invariant vs the reference
   * (BASELINE.json input_hint): (kind, text, media_ref) tuples in array order
   * per doc_id — the analog of the D2_XY fill-curve output order. */
-class InterleavedDocsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class InterleavedDocsSpec extends AnyFunSuite with SparkSuite {
 
   val dir = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   test("typed Dataset[Doc] round-trips the schema") {
     val ds = InterleavedDocs.typedDocs(spark, dir)

@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 
 import graft.lineage.TileLineage
 
 /** Resumability contract (north rule): a killed run resumes without
   * recomputing completed tiles; the lineage log is the commit record. */
-class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LineageSpec extends AnyFunSuite with SparkSuite {
 
   private def freshDir(): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_lineage").toFile

@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native graft_minhash_band_sig must be bit-identical to the Column
   * pipeline it replaced in neardupPairs (q37/q76 signature projection):
   * concat over j of array_min(transform(md5(band|t), substr(4j+1, 4))). */
-class MinhashBandSigSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MinhashBandSigSpec extends AnyFunSuite with SparkSuite {
 
   test("native band sig equals the transform/array_min/substring pipeline") {
     import spark.implicits._

@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Plan-shape regressions: the properties that make the hot queries
   * scale-sound, asserted on the actual plans so a refactor cannot silently
   * reintroduce a known scale-killer. */
-class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanShapeSpec extends AnyFunSuite with SparkSuite {
 
   val dir = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   private def optimized(q: String): String =
     SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan.toString

@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.SpatialJoin
 
-class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QueriesSpec extends AnyFunSuite with SparkSuite {
 
   val dir = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)

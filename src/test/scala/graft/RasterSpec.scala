@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.model.{Raster, TileGeometry}
 import graft.raster._
 
 /** Golden tests for the dense raster semantics, incl. every reference quirk
   * called out in SURVEY.md §2.10/§7.4 (fixture families from FIXTURES.md §3). */
-class RasterSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RasterSpec extends AnyFunSuite with SparkSuite {
 
   val NaN = Double.NaN
 

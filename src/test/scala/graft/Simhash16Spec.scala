@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft_simhash16 must be bit-identical to the explode + 16-aggregate
   * pipeline it replaced in q36 (ASCII-parity votes over the token
   * MULTISET, bit set iff the vote sum is positive). */
-class Simhash16Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Simhash16Spec extends AnyFunSuite with SparkSuite {
 
   test("native simhash equals the explode/aggregate pipeline") {
     import spark.implicits._

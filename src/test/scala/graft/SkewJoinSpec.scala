@@ -1,23 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.SpatialJoin
 
 /** Skew-aware join planning: histogram-driven broadcast-vs-salted-shuffle
   * selection must not change results, and hot cells must get salt fan-out. */
-class SkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SkewJoinSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+  }
 
   import graft.api.Geo
 
@@ -80,29 +75,6 @@ class SkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     SpatialJoin.pointsInZonesAuto(skewedPoints, zones, level = 11,
       broadcastMaxCells = 7, sampleFraction = 0.5, hotCellCap = 1000).limit(1).count()
     assert(SpatialJoin.plannerRuns.get() == afterFirst + 1, "level change must re-plan")
-  }
-
-  test("repartitionByCellPrefix yields range-contiguous partitions") {
-    import spark.implicits._
-    import graft.operators.CellPartitioning
-    val pts = skewedPoints.withColumn("cell",
-      graft.functions.GraftFunctions.cell_id($"lon", $"lat", lit(14)))
-    val parted = CellPartitioning.repartitionByCellPrefix(pts, "cell", level = 14,
-      prefixLevel = 6, numPartitions = 8)
-    // prefix column equals the scalar parent-chain computation
-    val mism = parted.filter($"cell_prefix" =!=
-      udf((c: Long) => CellPartitioning.prefixOf(c, 6)).apply($"cell")).count()
-    assert(mism === 0)
-    // ranges of distinct prefixes must not interleave across partitions
-    val ranges = parted.select($"cell_prefix").rdd
-      .mapPartitionsWithIndex { (i, rows) =>
-        val vs = rows.map(_.getLong(0)).toSeq
-        if (vs.isEmpty) Iterator.empty else Iterator((i, vs.min, vs.max))
-      }.collect().sortBy(_._2)
-    ranges.sliding(2).foreach {
-      case Array((_, _, hi1), (_, lo2, _)) => assert(hi1 <= lo2, s"overlap: $hi1 > $lo2")
-      case _ => ()
-    }
   }
 
   test("auto path picks broadcast when covers are small and still matches") {

@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.model.{Raster, TileGeometry}
 import graft.raster.DataKey
 import graft.sources.{GeodataIO, StacCatalog, WcsCatalog}
 import graft.functions.TransformExpr
 
-class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SourcesSpec extends AnyFunSuite with SparkSuite {
 
   // ---- WCS ----------------------------------------------------------------
 

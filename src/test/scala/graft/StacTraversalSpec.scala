@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.StacTraversal
 
 /** Catalog traversal unit contract: href resolution, search-vs-static
   * branching, orphan exclusion, and next-chain reassembly lengths the q70
   * oracle query cannot isolate individually. */
-class StacTraversalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StacTraversalSpec extends AnyFunSuite with SparkSuite {
 
   private def item(id: String): String =
     s"""{"type":"Feature","stac_version":"1.0.0","id":"$id","bbox":[0.0,0.0,1.0,1.0],"properties":{"datetime":"2024-01-01T00:00:00.000000Z","proj:epsg":4326},"assets":{},"links":[]}"""

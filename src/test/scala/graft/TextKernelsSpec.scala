@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-6 native text kernels must be bit-identical to the exact
   * Column pipelines they replaced (q31 count-eq, q45 stopword count-in,
   * q38 langid marker score, q39 max-unit-length fold, q52 repetition
   * facts, q33 4-window MinHash signature). */
-class TextKernelsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TextKernelsSpec extends AnyFunSuite with SparkSuite {
 
   import graft.functions.GraftFunctions
 

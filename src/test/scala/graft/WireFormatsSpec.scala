@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.{StacIngest, WcsCatalog, WcsXml}
 
 /** Wire-format parsers: STAC JSON (from_json schemas + link/asset columns)
   * and WCS XML (DOM) against canned fixtures mirroring real service output. */
-class WireFormatsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class WireFormatsSpec extends AnyFunSuite with SparkSuite {
 
   private val itemJson =
     """{"type":"Feature","stac_version":"1.0.0","id":"S2A_T18NXL_20210101",
