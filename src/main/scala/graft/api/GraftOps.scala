@@ -54,8 +54,8 @@ object GraftOps {
   }
 
   implicit class CogFrameOps(private val files: Dataset[graft.raster.CogFile]) extends AnyVal {
-    /** COG-native mosaic: probe -> per-tile window decode -> fragment
-      * shuffle (see Mosaic.mergeToTilesCog). */
+    /** COG-native mosaic: probe -> per-tile window decode and resample ->
+      * tile-addressed patch shuffle (see Mosaic.mergeToTilesCog). */
     def cogMosaic(region: graft.model.TileGeometry,
                   mode: graft.raster.Mosaic.MergeMode,
                   kernel: graft.raster.Resample.Kernel = graft.raster.Resample.Nearest,

@@ -537,11 +537,11 @@ object RasterQueries {
     },
 
     // the COG-NATIVE mosaic pipeline end-to-end (probe -> per-tile window
-    // decode -> fragment shuffle, Mosaic.mergeToTilesCog): same fixture and
-    // oracle as q73, but files are never fully decoded — each (item, tile)
-    // pair inflates only the strips/tiles under the tile bbox + apron at
-    // the selected overview level, so the shuffle carries fragments sized
-    // by the REGION, not the source resolution. Bit-equality of the two
+    // decode and resample -> patch shuffle, Mosaic.mergeToTilesCog): same
+    // fixture and oracle as q73, but files are never fully decoded — each
+    // (item, tile) pair inflates only the strips/tiles under the tile bbox +
+    // apron at the selected overview level, and the shuffle carries patches
+    // sized by the REGION, not the source resolution. Bit-equality of the two
     // pipelines is additionally proven across kernels/modes/CRS in
     // CogMosaicSpec; this entry pins the result to the DuckDB oracle.
     "q74_cog_window_mosaic" -> { (s, dir) =>

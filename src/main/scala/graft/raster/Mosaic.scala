@@ -2,6 +2,8 @@ package graft.raster
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.model.{Raster, TileGeometry}
 import graft.sources.GeoTiff
@@ -9,6 +11,14 @@ import graft.sources.GeoTiff
 /** One COG file for [[Mosaic.mergeToTilesCog]] (top-level: Catalyst encoders
   * cannot codegen case classes nested inside objects). */
 final case class CogFile(item_id: String, ts: Long, bytes: Array[Byte])
+
+/** One item resampled onto the region cells it covers in one target tile:
+  * a (w x h) D2_XY block at cell offset (px, py) inside tile `tile`. Every
+  * tile also gets one empty (0 x 0) placeholder, so it is emitted.
+  * (Top-level for the Catalyst encoder, like [[CogFile]].) */
+private[raster] final case class MosaicPatch(tile: Int, ts: Long, item_id: String,
+                                             px: Int, py: Int, w: Int, h: Int,
+                                             values: Array[Double])
 
 /**
  * Distributed mosaic merge (J4/A2): N overlapping raster items -> one value
@@ -27,9 +37,13 @@ final case class CogFile(item_id: String, ts: Long, bytes: Array[Byte])
  *
  * Distribution shape: target tiles are broadcast (a region split into <=1M
  * cell tiles is a small list); items are range-joined to the tiles they
- * intersect (flatMap -> (tileIdx, item)), then groupByKey(tileIdx) merges
- * each tile's fragment list in one reduce — the only shuffle moves each item
- * once per intersecting tile, never the dense target grid.
+ * intersect, and each (tile, item) pair is resampled where the item is
+ * read, on the map side, into a patch covering only the item's footprint
+ * in that tile. The one shuffle is addressed by tile (repartitionById into
+ * min(tiles, spark.sql.shuffle.partitions) partitions, a count AQE never
+ * coalesces), so every tile's composite gets its own reduce task up to the
+ * shuffle width; it moves covered-window grids, never whole items or the
+ * dense target grid.
  */
 object Mosaic {
 
@@ -73,19 +87,23 @@ object Mosaic {
     val gridB = spark.sparkContext.broadcast(new TileGrid(region, maxCells))
     // apron: 2 source cells (bicubic support) expressed in world units of the
     // item's own resolution, applied on the tile bbox intersection test.
-    // Items in a different CRS are prefiltered by their envelope transformed
-    // into the REGION frame (conservative boundary-sampled bbox,
-    // Crs.transformEnvelope) — the per-cell coverage test in the merge
-    // refines exactly, so over-assignment only costs a little extra work.
-    val assigned = items.flatMap { r =>
+    // Items in a different CRS are prefiltered, and their patches bounded, by
+    // their envelope transformed into the REGION frame (conservative
+    // boundary-sampled bbox, Crs.transformEnvelope) — the per-cell coverage
+    // test in the resample refines exactly, so over-assignment only costs a
+    // little extra work.
+    val patches = items.flatMap { r =>
       val (eMinX, eMaxX, eMinY, eMaxY) =
         if (r.epsg == region.epsg) (r.minX, r.maxX, r.minY, r.maxY)
         else Crs.transformEnvelope(r.epsg, region.epsg, r.minX, r.maxX, r.minY, r.maxY)
       // item resolution re-expressed in region units via the envelope span
       val ax = 2 * (eMaxX - eMinX) / r.width; val ay = 2 * (eMaxY - eMinY) / r.height
-      gridB.value.hits(eMinX, eMaxX, eMinY, eMaxY, ax, ay).map { case (i, _) => (i, r) }
+      gridB.value.hits(eMinX, eMaxX, eMinY, eMaxY, ax, ay).flatMap { case (i, _) =>
+        gridB.value.patch(i, r.item_id, r.ts, r.bands.head, r.geom, 0, 0,
+                          r.width, r.height, eMinX, eMaxX, eMinY, eMaxY, kernel)
+      }
     }
-    mergeAssigned(assigned, gridB, mode, kernel)
+    mergeAssigned(patches, gridB, mode)
   }
 
   /** A region's regular tx-major tile grid (tile i = tx * ny + ty), with
@@ -117,54 +135,92 @@ object Mosaic {
            eMinY < t.maxY + ay && eMaxY > t.minY - ay
       } yield (i, t)
     }
+
+    /** Resample one item onto tile i over the region cells of its envelope
+      * (eMinX..eMaxY, in the region's CRS) plus one cell of margin; the
+      * per-cell coverage test decides exactly, and outside the envelope
+      * every cell is nodata. The source is a (vw x vh) window at offset
+      * (ox, oy) of the item grid `src` (see Resample.toGridAnchoredWindow).
+      * Sampling is region-anchored, so a patch holds exactly the values a
+      * whole-tile resample gives on its cells. */
+    def patch(i: Int, itemId: String, ts: Long, values: Array[Double], src: TileGeometry,
+              ox: Int, oy: Int, vw: Int, vh: Int,
+              eMinX: Double, eMaxX: Double, eMinY: Double, eMaxY: Double,
+              kernel: Resample.Kernel): Option[MosaicPatch] = {
+      val (t, x0, y0) = tiles(i)
+      // [lo, hi) region cells of the envelope span, clamped to the tile
+      def span(eMin: Double, eMax: Double, origin: Double, cell: Double,
+               from: Int, n: Int): (Int, Int) =
+        (math.max(from.toDouble, math.floor((eMin - origin) / cell) - 1).toInt,
+         math.min((from + n).toDouble, math.floor((eMax - origin) / cell) + 2).toInt)
+      val (c0, c1) = span(eMinX, eMaxX, region.minX, region.cellWidth, x0, t.width)
+      val (r0, r1) = span(eMinY, eMaxY, region.minY, region.cellHeight, y0, t.height)
+      if (c1 <= c0 || r1 <= r0) None
+      else {
+        // mixed-CRS items sample through the world->source CRS hook (the
+        // reference's resample-with-CRS, RasterEncoder.java:376-389)
+        val hook = if (src.epsg == region.epsg) null else Crs.transform(region.epsg, src.epsg)
+        val vals = Resample.toGridAnchoredWindow(values, src, ox, oy, vw, vh, region,
+                                                 c0, r0, c1 - c0, r1 - r0, kernel, hook)
+        Some(MosaicPatch(i, ts, itemId, c0 - x0, r0 - y0, c1 - c0, r1 - r0, vals))
+      }
+    }
   }
 
-  /** Merge the (tile index, fragment) pairs into one Raster per tile of the
-    * grid; every tile is emitted, nodata-filled where no fragment lands. */
-  private def mergeAssigned(assigned: Dataset[(Int, Raster)], gridB: Broadcast[TileGrid],
-                            mode: MergeMode, kernel: Resample.Kernel): Dataset[Raster] = {
-    val spark = assigned.sparkSession
+  /** Composite the patches into one Raster per tile of the grid; every tile
+    * is emitted, nodata-filled where no patch lands. Partition p of the
+    * tile-addressed shuffle holds the tiles i with i mod P == p; sorted by
+    * tile, it is composited one tile at a time, so a task holds one tile's
+    * patches however many tiles share its partition. */
+  private def mergeAssigned(patches: Dataset[MosaicPatch], gridB: Broadcast[TileGrid],
+                            mode: MergeMode): Dataset[Raster] = {
+    val spark = patches.sparkSession
     import spark.implicits._
-    val emptyTiles = spark.createDataset(gridB.value.tiles.indices)
-      .map(i => (i, null.asInstanceOf[Raster]))
-    assigned.union(emptyTiles)
-      .groupByKey(_._1)
-      .mapGroups { (tileIdx, rows) =>
-        mergeFragments(tileIdx, rows.map(_._2), gridB.value.tiles(tileIdx),
-                       gridB.value.region, mode, kernel)
+    val nTiles = gridB.value.tiles.length
+    val parts = math.min(nTiles, spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt)
+    val placeholders = spark.createDataset(0 until nTiles)
+      .map(i => MosaicPatch(i, 0L, "", 0, 0, 0, 0, Array.emptyDoubleArray))
+    patches.union(placeholders)
+      .repartitionById(parts, pmod(col("tile"), lit(parts)))
+      .sortWithinPartitions("tile")
+      .mapPartitions { rows =>
+        val it = rows.buffered
+        new Iterator[Raster] {
+          def hasNext: Boolean = it.hasNext
+          def next(): Raster = {
+            val i = it.head.tile
+            val tilePatches = Array.newBuilder[MosaicPatch]
+            while (it.hasNext && it.head.tile == i) tilePatches += it.next()
+            composite(i, tilePatches.result(), gridB.value.tiles(i)._1, mode)
+          }
+        }
       }
   }
 
-  /** Merge one tile's fragment list (shared by the decoded-raster and the
-    * COG-window paths — a window fragment is just a smaller Raster whose
-    * cell grid is aligned with its item's). */
-  private def mergeFragments(tileIdx: Int, rows: Iterator[Raster],
-                             tileAt: (TileGeometry, Int, Int), region: TileGeometry,
-                             mode: MergeMode, kernel: Resample.Kernel): Raster = {
-    val (t, x0, y0) = tileAt
-    val frags = rows.filter(_ != null).toArray
+  /** Paste one tile's patches onto a nodata grid. */
+  private def composite(tileIdx: Int, patches: Array[MosaicPatch], t: TileGeometry,
+                        mode: MergeMode): Raster = {
     // determinism: sort by (ts, item_id) so SUBSTITUTE's later items win
     // independently of shuffle arrival order
-    val sorted = frags.sortBy(r => (r.ts, r.item_id))
-    val acc = Array.fill(t.width * t.height)(Double.NaN)
-    sorted.foreach { r =>
-      // region-anchored sampling: split size never changes values.
-      // Mixed-CRS items sample through the world->source CRS hook (the
-      // reference's resample-with-CRS, RasterEncoder.java:376-389)
-      val hook = if (r.epsg == region.epsg) null
-                 else Crs.transform(region.epsg, r.epsg)
-      val vals = Resample.toGridAnchored(r, region, x0, y0, t.width, t.height,
-                                         kernel, 0, hook)
-      var i = 0
-      while (i < acc.length) {
-        val v = vals(i)
-        if (!java.lang.Double.isNaN(v)) {
-          mode match {
-            case Substitute => acc(i) = v
-            case Sum        => acc(i) = if (java.lang.Double.isNaN(acc(i))) v else acc(i) + v
+    val sorted = patches.sortBy(p => (p.ts, p.item_id))
+    val acc = new Array[Double](t.width * t.height)
+    java.util.Arrays.fill(acc, Double.NaN)
+    val sum = mode == Sum
+    sorted.foreach { p =>
+      var x = 0
+      while (x < p.w) {
+        val dst = (p.px + x) * t.height + p.py
+        val src = x * p.h
+        var y = 0
+        while (y < p.h) {
+          val v = p.values(src + y)
+          if (!java.lang.Double.isNaN(v)) {
+            val a = acc(dst + y)
+            acc(dst + y) = if (sum && !java.lang.Double.isNaN(a)) a + v else v
           }
+          y += 1
         }
-        i += 1
+        x += 1
       }
     }
     Raster(s"tile-$tileIdx", 0L, t.width, t.height,
@@ -172,17 +228,18 @@ object Mosaic {
   }
 
   /**
-   * COG-native mosaic: files stay WHERE THEY ARE; only window fragments
+   * COG-native mosaic: files stay WHERE THEY ARE; only resampled patches
    * move. Each file is header-probed (GeoTiff.probe — no pixel decode) for
    * tile assignment, then for every intersecting tile the executor decodes
    * ONLY the strips/tiles under that tile's bbox + kernel apron, at the
-   * overview level matching the region's cell size (GeoTiff.parseWindow).
-   * The shuffle therefore carries O(region cells) of fragment data
-   * regardless of source resolution — mosaicking a 100x80-cell region out
-   * of 10^5-pixel COGs moves kilobytes per (item, tile) pair, where
-   * [[mergeToTiles]] over fully decoded rasters would move the full grids.
-   * Merging reuses the exact fragment semantics of [[mergeToTiles]]
-   * (CogMosaicSpec proves bit-equality against the full-decode path).
+   * overview level matching the region's cell size (GeoTiff.parseWindow),
+   * and resamples that window into the tile's patch. Decode work is
+   * therefore O(window) regardless of source resolution — mosaicking a
+   * 100x80-cell region out of 10^5-pixel COGs inflates kilobytes per
+   * (item, tile) pair, where [[mergeToTiles]] needs the full grids decoded.
+   * A window is sampled in its subfile's full grid, indexed by its integer
+   * pixel offset, so the result equals [[mergeToTiles]] over the fully
+   * decoded subfile bit for bit, for every kernel (CogMosaicSpec).
    *
    * @param band            band to mosaic (the reference's BAND_PARAM /
    *                        selectSampleDimension, RasterEncoder.java:107-113)
@@ -199,7 +256,7 @@ object Mosaic {
 
     val gridB = spark.sparkContext.broadcast(new TileGrid(region, maxCells))
 
-    val fragments = files.flatMap { f =>
+    val patches = files.flatMap { f =>
       val p = GeoTiff.probe(f.bytes, f.item_id)
       val (eMinX, eMaxX, eMinY, eMaxY) =
         if (p.epsg == region.epsg) (p.minX, p.maxX, p.minY, p.maxY)
@@ -227,10 +284,17 @@ object Mosaic {
                                      t.minX - ax, t.maxX + ax, t.minY - ay, t.maxY + ay)
         // None = the (conservative, apron-padded) window missed — cheap and
         // silent; a CORRUPT file still throws and fails the task loudly
-        frag <- GeoTiff.parseWindowOpt(f.bytes, f.item_id, f.ts, wx0, wx1, wy0, wy1,
-                                       Some(Seq(band)), targetCellWidth)
-      } yield (i, frag)
+        win <- GeoTiff.parseSubfileWindow(f.bytes, f.item_id, f.ts, wx0, wx1, wy0, wy1,
+                                          Some(Seq(band)), targetCellWidth)
+        // sample in the chosen subfile's full grid (the IFD0 envelope over
+        // its dimensions), exactly as the full decode of that subfile does
+        grid = TileGeometry(win.gridW, win.gridH, p.minX, p.maxX, p.minY, p.maxY,
+                            p.epsg, 0L, 0L)
+        patch <- gridB.value.patch(i, f.item_id, f.ts, win.raster.bands.head, grid,
+                                   win.ox, win.oy, win.raster.width, win.raster.height,
+                                   eMinX, eMaxX, eMinY, eMaxY, kernel)
+      } yield patch
     }
-    mergeAssigned(fragments, gridB, mode, kernel)
+    mergeAssigned(patches, gridB, mode)
   }
 }

@@ -13,9 +13,11 @@ import graft.model.{Raster, TileGeometry}
  * taps clamp to the border (JAI border extension) and NaN taps poison the
  * window (nodata stays nodata — matches coverage resampling of nodata-filled
  * rasters). These kernels need a +-2-cell apron when a tile is resampled in
- * isolation; the distributed path (Mosaic.resampleToTiles) fetches source
- * fragments intersecting the tile bbox *plus apron*, reproducing the
- * reference's fetch-overlapping-coverage-per-tile behavior (SURVEY.md §7.4.4).
+ * isolation; the distributed paths (Mosaic.mergeToTiles and
+ * Mosaic.mergeToTilesCog) resample each item where it is read, over the
+ * region cells it covers in a tile, from source data that holds the tile
+ * bbox *plus apron* — the reference's fetch-overlapping-coverage-per-tile
+ * behavior (SURVEY.md §7.4.4).
  */
 object Resample {
 
@@ -65,25 +67,30 @@ object Resample {
   @inline private def clamp(i: Int, hi: Int): Int =
     if (i < 0) 0 else if (i > hi) hi else i
 
-  /** Sample one band of a source raster at fractional source-grid coords
-    * (cell-center convention: cell i's center is at i + 0.5). */
-  def sample(values: Array[Double], w: Int, h: Int, sx: Double, sy: Double,
-             kernel: Kernel): Double = {
+  /** Sample one band of a source grid at fractional grid coords (cell-center
+    * convention: cell i's center is at i + 0.5). `values` holds a (vw x vh)
+    * window of the (gw x gh) grid whose cell (0, 0) is the grid's cell
+    * (ox, oy): coordinates, weights and the border clamp are those of the
+    * full grid, and only the final tap index subtracts the integer offset
+    * (exact), so a window samples bit-identically to the whole grid wherever
+    * its taps lie inside it. Taps outside the window clamp to its border. */
+  private def sample(values: Array[Double], gw: Int, gh: Int, ox: Int, oy: Int,
+                     vw: Int, vh: Int, sx: Double, sy: Double, kernel: Kernel): Double = {
+    @inline def col(x: Int): Int = clamp(clamp(x, gw - 1) - ox, vw - 1)
+    @inline def row(y: Int): Int = clamp(clamp(y, gh - 1) - oy, vh - 1)
     kernel match {
       case Nearest =>
-        val x = clamp(math.floor(sx).toInt, w - 1)
-        val y = clamp(math.floor(sy).toInt, h - 1)
-        values(x * h + y)
+        values(col(math.floor(sx).toInt) * vh + row(math.floor(sy).toInt))
 
       case Bilinear =>
         // align to cell centers
         val gx = sx - 0.5; val gy = sy - 0.5
         val x0 = math.floor(gx).toInt; val y0 = math.floor(gy).toInt
         val fx = gx - x0; val fy = gy - y0
-        val x0c = clamp(x0, w - 1); val x1c = clamp(x0 + 1, w - 1)
-        val y0c = clamp(y0, h - 1); val y1c = clamp(y0 + 1, h - 1)
-        val v00 = values(x0c * h + y0c); val v10 = values(x1c * h + y0c)
-        val v01 = values(x0c * h + y1c); val v11 = values(x1c * h + y1c)
+        val x0c = col(x0); val x1c = col(x0 + 1)
+        val y0c = row(y0); val y1c = row(y0 + 1)
+        val v00 = values(x0c * vh + y0c); val v10 = values(x1c * vh + y0c)
+        val v01 = values(x0c * vh + y1c); val v11 = values(x1c * vh + y1c)
         (v00 * (1 - fx) + v10 * fx) * (1 - fy) + (v01 * (1 - fx) + v11 * fx) * fy
 
       case Bicubic | Bicubic2 =>
@@ -95,12 +102,11 @@ object Resample {
         var acc = 0.0
         var i = 0
         while (i < 4) {
-          val xc = clamp(x0 - 1 + i, w - 1)
+          val xc = col(x0 - 1 + i)
           var rowAcc = 0.0
           var j = 0
           while (j < 4) {
-            val yc = clamp(y0 - 1 + j, h - 1)
-            rowAcc += wy(j) * values(xc * h + yc)
+            rowAcc += wy(j) * values(xc * vh + row(y0 - 1 + j))
             j += 1
           }
           acc += wx(i) * rowAcc
@@ -147,23 +153,35 @@ object Resample {
    */
   def toGridAnchored(src: Raster, region: TileGeometry, x0: Int, y0: Int,
                      w: Int, h: Int, kernel: Kernel, band: Int = 0,
-                     worldToSrc: (Double, Double) => (Double, Double) = null): Array[Double] = {
-    val s = src.geom
-    val values = src.bands(band)
+                     worldToSrc: (Double, Double) => (Double, Double) = null): Array[Double] =
+    toGridAnchoredWindow(src.bands(band), src.geom, 0, 0, src.width, src.height,
+                         region, x0, y0, w, h, kernel, worldToSrc)
+
+  /** [[toGridAnchored]] over a (vw x vh) window at cell offset (ox, oy) of
+    * the source grid `grid` (its full envelope and dimensions): sample
+    * coordinates and the coverage test use the full grid, so a window that
+    * holds every kernel tap yields the full grid's values bit for bit. */
+  private[raster] def toGridAnchoredWindow(values: Array[Double], grid: TileGeometry,
+                                           ox: Int, oy: Int, vw: Int, vh: Int,
+                                           region: TileGeometry, x0: Int, y0: Int,
+                                           w: Int, h: Int, kernel: Kernel,
+                                           worldToSrc: (Double, Double) => (Double, Double)): Array[Double] = {
     val out = new Array[Double](w * h)
-    val cw = s.cellWidth; val ch = s.cellHeight
+    val cw = grid.cellWidth; val ch = grid.cellHeight
+    @inline def at(sx: Double, sy: Double): Double =
+      sample(values, grid.width, grid.height, ox, oy, vw, vh, sx, sy, kernel)
     var x = 0
     while (x < w) {
       val wx = region.cellCenterX(x0 + x)
       if (worldToSrc == null) {
         // same-CRS fast path: column coordinate hoisted, no per-cell tuples
-        val sx = (wx - s.minX) / cw
+        val sx = (wx - grid.minX) / cw
         var y = 0
         while (y < h) {
           val wy = region.cellCenterY(y0 + y)
           out(x * h + y) =
-            if (wx < s.minX || wx >= s.maxX || wy < s.minY || wy >= s.maxY) Double.NaN
-            else sample(values, s.width, s.height, sx, (wy - s.minY) / ch, kernel)
+            if (wx < grid.minX || wx >= grid.maxX || wy < grid.minY || wy >= grid.maxY) Double.NaN
+            else at(sx, (wy - grid.minY) / ch)
           y += 1
         }
       } else {
@@ -172,9 +190,8 @@ object Resample {
           val wy = region.cellCenterY(y0 + y)
           val (u, v) = worldToSrc(wx, wy)
           out(x * h + y) =
-            if (u < s.minX || u >= s.maxX || v < s.minY || v >= s.maxY) Double.NaN
-            else sample(values, s.width, s.height,
-                        (u - s.minX) / cw, (v - s.minY) / ch, kernel)
+            if (u < grid.minX || u >= grid.maxX || v < grid.minY || v >= grid.maxY) Double.NaN
+            else at((u - grid.minX) / cw, (v - grid.minY) / ch)
           y += 1
         }
       }

@@ -616,47 +616,67 @@ object GeoTiff {
    * table approaches the 4096-entry ceiling a ClearCode resets both sides —
    * without it, codes past 12 bits would silently truncate on
    * low-redundancy data (the test-side encoder in GeoTiffSpec never
-   * clears; this one is the production path). Dictionary keys are packed
-   * (prefixCode << 8 | byte) longs in a primitive LongMap — no boxing in
-   * the per-byte loop.
+   * clears; this one is the production path). The dictionary is an
+   * open-addressing table of packed (prefixCode << 8 | byte) keys: at most
+   * 3836 live entries in 8192 slots, reset with one Arrays.fill, so the
+   * per-byte loop neither boxes nor rehashes.
    */
   private[graft] def lzwEncode(data: Array[Byte]): Array[Byte] = {
-    val bits = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
-    var acc = 0L; var nAcc = 0
+    val out = new LzwBits(data.length / 2 + 64)
+    val Slots = 8192
+    val keys = new Array[Int](Slots) // key + 1; 0 = empty slot
+    val codes = new Array[Short](Slots)
     var width = 9
-    def put(code: Int): Unit = {
-      acc = (acc << width) | code; nAcc += width
-      while (nAcc >= 8) { bits.write(((acc >> (nAcc - 8)) & 0xff).toInt); nAcc -= 8 }
-    }
-    val dict = new scala.collection.mutable.LongMap[Int](8192)
     var next = 258
-    put(256) // initial Clear per spec
+    out.put(256, width) // initial Clear per spec
     var cur = -1
     var i = 0
     while (i < data.length) {
       val b = data(i) & 0xff
       if (cur < 0) cur = b
       else {
-        val key = (cur.toLong << 8) | b
-        val hit = dict.getOrElse(key, -1)
-        if (hit >= 0) cur = hit
+        val key = ((cur << 8) | b) + 1
+        var slot = (key * 0x9E3779B1) >>> 19
+        while (keys(slot) != 0 && keys(slot) != key) slot = (slot + 1) & (Slots - 1)
+        if (keys(slot) == key) cur = codes(slot)
         else {
-          put(cur)
-          dict.put(key, next); next += 1
+          out.put(cur, width)
+          keys(slot) = key; codes(slot) = next.toShort; next += 1
           if (width < 12 && next >= (1 << width)) width += 1
           if (next >= 4094) { // table (nearly) full: reset both sides
-            put(256)
-            dict.clear(); next = 258; width = 9
+            out.put(256, width)
+            java.util.Arrays.fill(keys, 0); next = 258; width = 9
           }
           cur = b
         }
       }
       i += 1
     }
-    if (cur >= 0) put(cur)
-    put(257) // EOI
-    if (nAcc > 0) bits.write(((acc << (8 - nAcc)) & 0xff).toInt)
-    bits.toByteArray
+    if (cur >= 0) out.put(cur, width)
+    out.put(257, width) // EOI
+    out.result()
+  }
+
+  /** MSB-first code packer for [[lzwEncode]], into a growable byte array. */
+  private final class LzwBits(capacity: Int) {
+    private var buf = new Array[Byte](capacity)
+    private var n = 0
+    private var acc = 0L
+    private var nAcc = 0
+
+    def put(code: Int, width: Int): Unit = {
+      acc = (acc << width) | code; nAcc += width
+      while (nAcc >= 8) {
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, n * 2)
+        buf(n) = (acc >> (nAcc - 8)).toByte; n += 1; nAcc -= 8
+      }
+    }
+
+    /** The packed bytes, the last one zero-padded. */
+    def result(): Array[Byte] = {
+      if (nAcc > 0) put(0, 8 - nAcc)
+      java.util.Arrays.copyOf(buf, n)
+    }
   }
 
   private def deflateBytes(data: Array[Byte]): Array[Byte] = {
@@ -999,7 +1019,23 @@ object GeoTiff {
   def parseWindowOpt(bytes: Array[Byte], itemId: String, ts: Long,
                      wMinX: Double, wMaxX: Double, wMinY: Double, wMaxY: Double,
                      select: Option[Seq[Int]] = None,
-                     targetCellWidth: Double = 0.0): Option[Raster] = {
+                     targetCellWidth: Double = 0.0): Option[Raster] =
+    parseSubfileWindow(bytes, itemId, ts, wMinX, wMaxX, wMinY, wMaxY, select, targetCellWidth)
+      .map(_.raster)
+
+  /** A decoded window and its place in the subfile it was cut from: the
+    * subfile's width and height, and the window's cell offset in the
+    * Raster frame (ox columns from the left, oy rows from the bottom). */
+  private[graft] final case class SubfileWindow(raster: Raster, gridW: Int, gridH: Int,
+                                                ox: Int, oy: Int)
+
+  /** [[parseWindowOpt]] that also reports where the window sits in the
+    * chosen subfile, so a sampler can work in that subfile's full grid. */
+  private[graft] def parseSubfileWindow(bytes: Array[Byte], itemId: String, ts: Long,
+                                        wMinX: Double, wMaxX: Double,
+                                        wMinY: Double, wMaxY: Double,
+                                        select: Option[Seq[Int]],
+                                        targetCellWidth: Double): Option[SubfileWindow] = {
     val (buf, order, first, big) = openTiff(bytes, itemId)
     val (tags0, next0) = readIfd(bytes, buf, order, first, big)
     val chosen =
@@ -1017,8 +1053,10 @@ object GeoTiff {
     val row1 = clampI(math.ceil((maxY - wMinY) / chh).toInt, h)
     if (wMaxX <= minX || wMinX >= maxX || wMaxY <= minY || wMinY >= maxY ||
         px1 <= px0 || row1 <= row0) None
-    else Some(decodeSubfile(bytes, buf, order, chosen, tags0, itemId, ts, select,
-                            Some((px0, row0, px1 - px0, row1 - row0))))
+    else Some(SubfileWindow(
+      decodeSubfile(bytes, buf, order, chosen, tags0, itemId, ts, select,
+                    Some((px0, row0, px1 - px0, row1 - row0))),
+      w, h, px0, h - row1))
   }
 
   /**

@@ -56,6 +56,38 @@ class CogMosaicSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("non-integer-aligned grids: window pipeline == full decode, interpolating kernels") {
+    import spark.implicits._
+    // 0.9-degree, 384-cell items at jittered origins whose cell edges are not
+    // exactly representable (a window's recomputed origin would move the
+    // interpolation weights by an ulp), one of them georeferenced in UTM
+    val rnd = new java.util.Random(384L)
+    val items = (0 until 4).map { k =>
+      val x0 = -76.05 + (k % 2) * 0.72 + (rnd.nextDouble() - 0.5) * 0.04
+      val y0 = 1.95 + (k / 2) * 0.62 + (rnd.nextDouble() - 0.5) * 0.04
+      val r = mkItem(s"j$k", 10L + k, 384, 384, x0, y0, 0.9 / 384)
+      if (k != 3) r
+      else {
+        val (ux0, ux1, uy0, uy1) = graft.raster.Crs.transformEnvelope(
+          4326, 32618, r.minX, r.maxX, r.minY, r.maxY)
+        r.copy(minX = ux0, maxX = ux1, minY = uy0, maxY = uy1, epsg = 32618)
+      }
+    }
+    val files = items.zipWithIndex.map { case (r, k) => CogFile(r.item_id, r.ts,
+      GeoTiff.encode(r, bits = 64, tile = Some((64, 64)), lzw = k % 2 == 0, deflate = k % 2 == 1))
+    }
+    val decoded = files.map(f => GeoTiff.parse(f.bytes, f.item_id, f.ts))
+    val region = TileGeometry(240, 180, -76.0, -74.4, 2.0, 3.2, 4326, 0L, 0L)
+    for (kernel <- Seq(Resample.Bilinear, Resample.Bicubic, Resample.Bicubic2);
+         mode <- Seq(Mosaic.Sum, Mosaic.Substitute)) {
+      val viaCog = Mosaic.mergeToTilesCog(spark.createDataset(files), region, mode,
+                                          kernel, maxCells = 10000L)
+      val viaFull = Mosaic.mergeToTiles(spark.createDataset(decoded), region, mode,
+                                        kernel, maxCells = 10000L)
+      assertSame(tilesOf(viaCog), tilesOf(viaFull), s"jittered/$kernel/$mode")
+    }
+  }
+
   test("overview target composes: cog path == full path over parseOverview rasters") {
     import spark.implicits._
     val item = mkItem("ov", 1L, 128, 64, 0.0, 0.0, 1.0)

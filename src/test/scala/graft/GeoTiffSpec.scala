@@ -761,6 +761,46 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(GeoTiff.encode(flat, lzw = true).length < GeoTiff.encode(flat).length / 2)
   }
 
+  test("LZW writer golden: encoded bytes are pinned and every chunk round-trips") {
+    // seeded chunks: float64 noise (a 64x64 tile), all-zero tile padding, and
+    // a low-redundancy stream long enough to emit several ClearCodes. The
+    // digest was recorded from the LongMap-keyed encoder this table-based
+    // one replaced: any change to the greedy parse, the width cadence or the
+    // Clear point changes the bytes.
+    val rnd = new java.util.Random(20261017L)
+    val noise = java.nio.ByteBuffer.allocate(64 * 64 * 8)
+    (0 until 64 * 64).foreach(_ => noise.putDouble(500.0 + 100.0 * rnd.nextGaussian()))
+    val zeros = new Array[Byte](64 * 64 * 8)
+    val stream = new Array[Byte](200000)
+    rnd.nextBytes(stream)
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    for (chunk <- Seq(noise.array(), zeros, stream)) {
+      val enc = GeoTiff.lzwEncode(chunk)
+      assert(java.util.Arrays.equals(GeoTiff.lzwDecode(enc, chunk.length), chunk))
+      sha.update(enc)
+    }
+    val clears = {
+      // count ClearCodes after the initial one by decoding the code stream
+      val enc = GeoTiff.lzwEncode(stream)
+      var acc = 0L; var nAcc = 0; var pos = 0; var width = 9; var next = 258; var n = 0
+      var code = 0; var first = true
+      while (code != 257) {
+        while (nAcc < width) { acc = (acc << 8) | (enc(pos) & 0xffL); pos += 1; nAcc += 8 }
+        nAcc -= width
+        code = ((acc >>> nAcc) & ((1 << width) - 1)).toInt
+        if (code == 256) { if (!first) n += 1; next = 258; width = 9; first = true }
+        else if (code != 257) {
+          if (!first) { next += 1; if (width < 12 && next >= (1 << width) - 1) width += 1 }
+          first = false
+        }
+      }
+      n
+    }
+    assert(clears >= 3, s"only $clears ClearCodes")
+    assert(sha.digest().map(b => f"$b%02x").mkString ==
+      "74f22e8ffe47174defc7ac94a3b0d619d8e373fc933fb22a2d456eead2a0c567")
+  }
+
   test("fuzz: corrupt/random bytes fail fast (no hang, no OOM) on every entry point") {
     // binaryFile content is untrusted at ingest; every decode entry must
     // throw a diagnosable exception promptly rather than spin or allocate

@@ -1,0 +1,107 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.model.{Raster, TileGeometry}
+import graft.raster.{Crs, Mosaic, Resample}
+
+/** The tile-addressed mosaic merge: patches resampled on the map side and
+  * composited per tile must equal the whole-tile resample of every item
+  * merged in (ts, item_id) order, bit for bit, whatever the shuffle width —
+  * below, at and above the tile count. */
+class MosaicMergeSpec extends AnyFunSuite with SparkSuite {
+
+  // 60 x 40 cells of 0.1 degree, 400-cell tiles: 3 x 2 tiles of 20 x 20
+  private val region = TileGeometry(60, 40, 0.0, 6.0, 0.0, 4.0, 4326, 0L, 0L)
+  private val maxCells = 400L
+  private val tileAt = Mosaic.splitTilesWithOffsets(region, maxCells)
+
+  private def mkItem(id: String, ts: Long, w: Int, h: Int, x0: Double, y0: Double,
+                     cw: Double, ch: Double, seed: Long): Raster = {
+    val rnd = new java.util.Random(seed)
+    Raster(id, ts, w, h, x0, x0 + w * cw, y0, y0 + h * ch, 4326,
+      Seq(Array.tabulate(w * h)(i => if (i % 29 == 3) Double.NaN else 100.0 * rnd.nextDouble())))
+  }
+
+  /** Jittered, non-integer-aligned grids, one item in UTM zone 31N; no item
+    * reaches the tile x in [4, 6), y in [2, 4) (tile 5), even with its apron. */
+  private val items: Seq[Raster] = {
+    val utm = mkItem("c-utm", 3L, 30, 40, 0.6, 1.1, 0.05, 0.0625, 3L)
+    val (ux0, ux1, uy0, uy1) = Crs.transformEnvelope(4326, 32631, 0.6, 2.1, 1.1, 3.6)
+    Seq(
+      mkItem("a", 1L, 37, 29, 0.137, 0.213, 0.0731, 0.0787, 1L),
+      mkItem("b", 2L, 41, 23, 1.913, 0.177, 0.0877, 0.0663, 2L),
+      utm.copy(minX = ux0, maxX = ux1, minY = uy0, maxY = uy1, epsg = 32631),
+      mkItem("d", 2L, 25, 25, 1.05, 1.31, 0.0913, 0.0913, 4L))
+  }
+  private val emptyTile = 5
+
+  /** The merge the patches must reproduce: every item resampled over the
+    * whole tile, merged cell-wise in (ts, item_id) order. */
+  private def reference(mode: Mosaic.MergeMode, kernel: Resample.Kernel): Map[String, Array[Double]] =
+    tileAt.zipWithIndex.map { case ((t, x0, y0), i) =>
+      val acc = Array.fill(t.width * t.height)(Double.NaN)
+      items.sortBy(r => (r.ts, r.item_id)).foreach { r =>
+        val hook = if (r.epsg == region.epsg) null else Crs.transform(region.epsg, r.epsg)
+        val vals = Resample.toGridAnchored(r, region, x0, y0, t.width, t.height, kernel, 0, hook)
+        vals.indices.foreach { c =>
+          val v = vals(c)
+          if (!v.isNaN) acc(c) =
+            if (mode == Mosaic.Sum && !acc(c).isNaN) acc(c) + v else v
+        }
+      }
+      s"tile-$i" -> acc
+    }.toMap
+
+  private def withShufflePartitions[T](n: Int)(f: => T): T = {
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try f finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+  }
+
+  private def sameBits(a: Array[Double], b: Array[Double], label: String): Unit = {
+    assert(a.length == b.length, label)
+    a.indices.foreach { i =>
+      assert(java.lang.Double.doubleToRawLongBits(a(i)) == java.lang.Double.doubleToRawLongBits(b(i)),
+        s"$label cell $i: ${a(i)} vs ${b(i)}")
+    }
+  }
+
+  test("patch merge == whole-tile resample at 1, 4 and more shuffle partitions than tiles") {
+    import spark.implicits._
+    assert(tileAt.length == 6)
+    for (mode <- Seq(Mosaic.Sum, Mosaic.Substitute);
+         kernel <- Seq(Resample.Nearest, Resample.Bicubic)) {
+      val want = reference(mode, kernel)
+      assert(want(s"tile-$emptyTile").forall(_.isNaN))
+      assert(want.count(_._2.exists(!_.isNaN)) == 5)
+      for (parts <- Seq(1, 4, 9)) withShufflePartitions(parts) {
+        val got = Mosaic.mergeToTiles(spark.createDataset(items).repartition(3), region,
+                                      mode, kernel, maxCells).collect()
+        val label = s"$mode/$kernel/partitions=$parts"
+        assert(got.map(_.item_id).sorted.toSeq == want.keys.toSeq.sorted, label)
+        got.foreach { r =>
+          val (t, _, _) = tileAt(r.item_id.stripPrefix("tile-").toInt)
+          assert((r.width, r.height, r.minX, r.maxX, r.minY, r.maxY) ==
+                 (t.width, t.height, t.minX, t.maxX, t.minY, t.maxY), label)
+          sameBits(r.bands.head, want(r.item_id), s"$label ${r.item_id}")
+        }
+      }
+    }
+  }
+
+  test("the reduce stage runs min(tiles, shuffle partitions) tasks, every tile in one") {
+    import spark.implicits._
+    for (parts <- Seq(1, 4, 9)) withShufflePartitions(parts) {
+      val perTask = Mosaic.mergeToTiles(spark.createDataset(items), region, Mosaic.Sum,
+                                        Resample.Nearest, maxCells)
+        .mapPartitions(rows => Iterator(rows.map(_.item_id).toSeq))
+        .collect()
+      assert(perTask.length == math.min(tileAt.length, parts), s"partitions=$parts")
+      assert(perTask.flatten.sorted.toSeq == tileAt.indices.map(i => s"tile-$i").sorted)
+      // tile i lands in reduce partition i mod P
+      perTask.zipWithIndex.foreach { case (tiles, p) =>
+        assert(tiles.forall(_.stripPrefix("tile-").toInt % perTask.length == p), s"$parts/$p")
+      }
+    }
+  }
+}
