@@ -5,8 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 /**
  * Deterministic, stage-once fixture directories for queries that synthesize
- * file-backed inputs (the GeoTIFF scan queries q68/q69/q73/q74, q94, the
- * split-file stream source).
+ * file-backed inputs (the GeoTIFF scan queries q68/q69/q73/q74/q101,
+ * q94/q104, the split-file stream source).
  *
  * Earlier rounds created a fresh temp dir + a fresh JVM shutdown hook on
  * EVERY query invocation, so one driver run (Verify + bench warmup + bench

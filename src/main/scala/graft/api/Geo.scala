@@ -59,6 +59,23 @@ object Geo {
            lit("],["), d(ax), lit(","), d(ay), lit("]]"))
   }
 
+  /** Nation-keyed zone origins (k, x0, y0): a 5-wide grid of 0.4 x 0.3
+    * steps from the bbox's min corner (the q56/q57/q75/q86 zone layout). */
+  private[api] def nationZoneOrigins(spark: SparkSession, dir: String): DataFrame = {
+    val k = col("k")
+    spark.read.parquet(s"$dir/nation.parquet")
+      .select(col("n_nationkey").cast("long").as("k"))
+      .withColumn("x0", lit(minX) + (k % 5).cast("double") * 0.4)
+      .withColumn("y0", lit(minY) + floor(k / 5.0).cast("double") * 0.3)
+  }
+
+  /** Event points: (event_id, lon, lat), spread by the document-point
+    * recurrences ([[lonCol]]/[[latCol]]). */
+  private[api] def eventPoints(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/events.parquet")
+      .select(col("event_id"), lonCol(col("event_id")).as("lon"),
+              latCol(col("event_id")).as("lat"))
+
   private def joined(parts: Seq[Column]): Column =
     parts.reduceLeft((a, b) => concat(a, lit(","), b))
 

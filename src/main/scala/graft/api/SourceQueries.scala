@@ -199,10 +199,9 @@ object SourceQueries {
       import graft.sources.GeoJson
       def mkZones(shiftX: Double, shiftY: Double, w: Double, h: Double,
                   tag: String): DataFrame = {
-        val src = s.read.parquet(s"$dir/nation.parquet")
-          .select($"n_nationkey".cast("long").as("k"))
-          .withColumn("x0", lit(Geo.minX) + ($"k" % 5).cast("double") * 0.4 + shiftX)
-          .withColumn("y0", lit(Geo.minY) + floor($"k" / 5.0).cast("double") * 0.3 + shiftY)
+        val src = Geo.nationZoneOrigins(s, dir)
+          .withColumn("x0", $"x0" + shiftX)
+          .withColumn("y0", $"y0" + shiftY)
           .withColumn("x1", $"x0" + w)
           .withColumn("y1", $"y0" + h)
         val feature = Geo.polygonFeatureJson($"k",
@@ -237,22 +236,13 @@ object SourceQueries {
       import s.implicits._
       import graft.operators.SpatialJoin
       import graft.sources.GeoJson
-      val zonesSrc = s.read.parquet(s"$dir/nation.parquet")
-        .select($"n_nationkey".cast("long").as("k"))
-        .withColumn("x0", lit(Geo.minX) + ($"k" % 5).cast("double") * 0.4)
-        .withColumn("y0", lit(Geo.minY) + floor($"k" / 5.0).cast("double") * 0.3)
+      val zonesSrc = Geo.nationZoneOrigins(s, dir)
       val feature = Geo.multiPolygonFeatureJson($"k", Seq(
         Geo.rectRingJson($"x0", $"y0", $"x0" + 0.2, $"y0" + 0.15),
         Geo.rectRingJson($"x0" + 0.25, $"y0" + 0.18, $"x0" + 0.45, $"y0" + 0.28)))
       val zones = GeoJson.parseFeatures(zonesSrc.select(feature.as("doc")), "doc")
         .select(element_at($"properties", "zone").cast("long").as("zone_id"), $"rings")
-      val span = 100000.0
-      val pts = s.read.parquet(s"$dir/events.parquet")
-        .select($"event_id")
-        .withColumn("lon", lit(Geo.minX) + ($"event_id" * 7919 % 100000).cast("double")
-          / span * (lit(Geo.maxX) - lit(Geo.minX)))
-        .withColumn("lat", lit(Geo.minY) + ($"event_id" * 104729 % 100000).cast("double")
-          / span * (lit(Geo.maxY) - lit(Geo.minY)))
+      val pts = Geo.eventPoints(s, dir)
       SpatialJoin.pointsInZonesRings(pts, zones, level = 12)
         .groupBy($"zone_id")
         .agg(count(lit(1)).as("n_pts"),
@@ -267,22 +257,13 @@ object SourceQueries {
       import s.implicits._
       import graft.operators.SpatialJoin
       import graft.sources.GeoJson
-      val zonesSrc = s.read.parquet(s"$dir/nation.parquet")
-        .select($"n_nationkey".cast("long").as("k"))
-        .withColumn("x0", lit(Geo.minX) + ($"k" % 5).cast("double") * 0.4)
-        .withColumn("y0", lit(Geo.minY) + floor($"k" / 5.0).cast("double") * 0.3)
+      val zonesSrc = Geo.nationZoneOrigins(s, dir)
       val feature = Geo.polygonFeatureJson($"k", Seq(
         Geo.rectRingJson($"x0", $"y0", $"x0" + 0.5, $"y0" + 0.35),
         Geo.rectRingJson($"x0" + 0.1, $"y0" + 0.1, $"x0" + 0.2, $"y0" + 0.2)))
       val zones = GeoJson.parseFeatures(zonesSrc.select(feature.as("doc")), "doc")
         .select(element_at($"properties", "zone").cast("long").as("zone_id"), $"rings")
-      val span = 100000.0
-      val pts = s.read.parquet(s"$dir/events.parquet")
-        .select($"event_id")
-        .withColumn("lon", lit(Geo.minX) + ($"event_id" * 7919 % 100000).cast("double")
-          / span * (lit(Geo.maxX) - lit(Geo.minX)))
-        .withColumn("lat", lit(Geo.minY) + ($"event_id" * 104729 % 100000).cast("double")
-          / span * (lit(Geo.maxY) - lit(Geo.minY)))
+      val pts = Geo.eventPoints(s, dir)
       SpatialJoin.pointsInZonesRings(pts, zones, level = 12)
         .groupBy($"zone_id")
         .agg(count(lit(1)).as("n_pts"),
@@ -342,10 +323,7 @@ object SourceQueries {
     "q75_geojson_pip" -> { (s, dir) =>
       import s.implicits._
       import graft.operators.SpatialJoin
-      val zonesSrc = s.read.parquet(s"$dir/nation.parquet")
-        .select($"n_nationkey".cast("long").as("k"))
-        .withColumn("x0", lit(Geo.minX) + ($"k" % 5).cast("double") * 0.4)
-        .withColumn("y0", lit(Geo.minY) + floor($"k" / 5.0).cast("double") * 0.3)
+      val zonesSrc = Geo.nationZoneOrigins(s, dir)
         .withColumn("x1", $"x0" + 0.5)
         .withColumn("y1", $"y0" + 0.35)
       val feature = Geo.polygonFeatureJson($"k",
@@ -353,13 +331,7 @@ object SourceQueries {
       val zones = GeoJson.parsePolygons(zonesSrc.select(feature.as("doc")), "doc")
         .select(element_at($"properties", "zone").cast("long").as("zone_id"), $"ring")
         .filter($"ring".isNotNull)
-      val span = 100000.0
-      val pts = s.read.parquet(s"$dir/events.parquet")
-        .select($"event_id")
-        .withColumn("lon", lit(Geo.minX) + ($"event_id" * 7919 % 100000).cast("double")
-          / span * (lit(Geo.maxX) - lit(Geo.minX)))
-        .withColumn("lat", lit(Geo.minY) + ($"event_id" * 104729 % 100000).cast("double")
-          / span * (lit(Geo.maxY) - lit(Geo.minY)))
+      val pts = Geo.eventPoints(s, dir)
       SpatialJoin.pointsInZones(pts, zones, level = 12)
         .groupBy($"zone_id")
         .agg(count(lit(1)).as("n_pts"),

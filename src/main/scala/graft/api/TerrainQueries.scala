@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.TileGeometry
-import graft.raster.{Focal, Terrain}
+import graft.raster.{Focal, Mosaic, Terrain}
 
 /**
  * Geomorphology queries (reference library/HMGeomorphology.java, implemented
@@ -52,33 +52,11 @@ object TerrainQueries {
        |  SELECT cx.cx, cy.cy, $elevationSql AS elev
        |  FROM generate_series(0, ${W - 1}) cx(cx), generate_series(0, ${H - 1}) cy(cy))""".stripMargin
 
-  /** Flatten tiles to (cx, cy, <names...>) rows with region-global indices:
-    * one nullable double column per band, NaN -> NULL. The single shared
-    * coordinate-derivation site for every multi-band terrain query. */
-  private def tilesToRowsN(s: SparkSession,
-                           tiles: org.apache.spark.sql.Dataset[graft.model.Raster],
-                           names: Seq[String]): DataFrame = {
-    import s.implicits._
-    val r0 = region
-    val flat = tiles.flatMap { r =>
-      val x0 = math.round((r.minX - r0.minX) / r0.cellWidth).toInt
-      val y0 = math.round((r.minY - r0.minY) / r0.cellHeight).toInt
-      for (x <- 0 until r.width; y <- 0 until r.height) yield {
-        val i = x * r.height + y
-        (x0 + x.toLong, y0 + y.toLong,
-         r.bands.map(b => if (java.lang.Double.isNaN(b(i))) None else Some(b(i))))
-      }
-    }.toDF("cx", "cy", "vals")
-    names.zipWithIndex.foldLeft(flat) { case (d, (n, i)) =>
-      d.withColumn(n, element_at($"vals", i + 1))
-    }.drop("vals")
-  }
-
   /** The q79/q80 shared D8 flow-direction table (cx, cy, dir). */
   private def flowDirRows(s: SparkSession): DataFrame = {
     import s.implicits._
     val terrain = Focal.terrainTiles(s, region, maxCells = MaxCells)
-    tilesToRowsN(s, Focal.flowDir(terrain, region, maxCells = MaxCells), Seq("dir"))
+    Mosaic.cellRows(Focal.flowDir(terrain, region, maxCells = MaxCells), region, "dir")
       .withColumn("dir", $"dir".cast("bigint"))
   }
 
@@ -117,16 +95,11 @@ object TerrainQueries {
        |  FROM pq8)""".stripMargin
   }
 
-  /** Flatten tiles back to (cx, cy, v) rows with region-global indices. */
-  private def tilesToRows(s: SparkSession, tiles: org.apache.spark.sql.Dataset[graft.model.Raster],
-                          col3: String): DataFrame =
-    tilesToRowsN(s, tiles, Seq(col3))
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q61_terrain" -> { (s, dir) =>
       import s.implicits._
       val _ = dir // terrain is synthesized; scale-independent golden
-      tilesToRows(s, Focal.terrainTiles(s, region, maxCells = MaxCells), "elev")
+      Mosaic.cellRows(Focal.terrainTiles(s, region, maxCells = MaxCells), region, "elev")
         .orderBy($"cx", $"cy")
     },
 
@@ -134,7 +107,7 @@ object TerrainQueries {
       import s.implicits._
       val _ = dir
       val terrain = Focal.terrainTiles(s, region, maxCells = MaxCells)
-      tilesToRows(s, Focal.slope(terrain, region, maxCells = MaxCells), "slope")
+      Mosaic.cellRows(Focal.slope(terrain, region, maxCells = MaxCells), region, "slope")
         .orderBy($"cx", $"cy")
     },
 
@@ -147,8 +120,8 @@ object TerrainQueries {
       import s.implicits._
       val _ = dir
       val terrain = Focal.terrainTiles(s, region, maxCells = MaxCells)
-      tilesToRowsN(s, Focal.aspectHillshade(terrain, region, maxCells = MaxCells),
-                   Seq("octant", "illum"))
+      Mosaic.cellRows(Focal.aspectHillshade(terrain, region, maxCells = MaxCells), region,
+                      "octant", "illum")
         .withColumn("octant", $"octant".cast("bigint"))
         .orderBy($"cx", $"cy")
     },
@@ -184,7 +157,7 @@ object TerrainQueries {
       val comp = graft.operators.ConnectedComponents
         .minLabel(e1.union(e2), "u", "v")
         .withColumnRenamed("id", "rid").withColumnRenamed("lbl", "region_id")
-      val cells = tilesToRows(s, tiles, "elev")
+      val cells = Mosaic.cellRows(tiles, region, "elev")
         .filter($"elev" < 1300.0)
         .select(($"cx" * H + $"cy").as("cell"), $"elev")
       cells.join(roots.select($"cell", $"root"), "cell")
@@ -206,7 +179,8 @@ object TerrainQueries {
       import s.implicits._
       val _ = dir
       val f = 4
-      val cells = tilesToRows(s, Focal.terrainTiles(s, region, maxCells = MaxCells), "elev")
+      val cells = Mosaic.cellRows(Focal.terrainTiles(s, region, maxCells = MaxCells),
+                                  region, "elev")
       cells
         .select(expr(s"cx div $f").as("ocx"), expr(s"cy div $f").as("ocy"),
                 round($"elev" * 1000000.0, 0).cast("bigint").as("q"))
@@ -258,8 +232,8 @@ object TerrainQueries {
       import s.implicits._
       val _ = dir
       val terrain = Focal.terrainTiles(s, region, maxCells = MaxCells)
-      tilesToRowsN(s, Focal.curvatures(terrain, region, maxCells = MaxCells),
-                   Seq("profile_curv", "plan_curv"))
+      Mosaic.cellRows(Focal.curvatures(terrain, region, maxCells = MaxCells), region,
+                      "profile_curv", "plan_curv")
         .orderBy($"cx", $"cy")
     },
 
@@ -306,7 +280,8 @@ object TerrainQueries {
       import s.implicits._
       import graft.operators.SpatialJoin
       import graft.sources.GeoJson
-      val cells = tilesToRows(s, Focal.terrainTiles(s, region, maxCells = MaxCells), "elev")
+      val cells = Mosaic.cellRows(Focal.terrainTiles(s, region, maxCells = MaxCells),
+                                  region, "elev")
         .withColumn("lon", lit(region.minX) + ($"cx" + 0.5) * lit(region.cellWidth))
         .withColumn("lat", lit(region.minY) + ($"cy" + 0.5) * lit(region.cellHeight))
       val zonesSrc = s.read.parquet(s"$dir/nation.parquet")

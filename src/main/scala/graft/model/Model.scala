@@ -54,6 +54,11 @@ final case class TileGeometry(
   }
   /** D2_XY linearization (x-outer, y-inner). */
   def cellIdx(col: Int, row: Int): Long = col.toLong * height + row
+  /** Cell offset (col, row) of a tile's origin inside this region: the one
+    * tile -> region-cell projection every tile consumer goes through. */
+  def tileOffset(tile: Raster): (Int, Int) =
+    (math.round((tile.minX - minX) / cellWidth).toInt,
+     math.round((tile.minY - minY) / cellHeight).toInt)
 }
 
 object TileGeometry {

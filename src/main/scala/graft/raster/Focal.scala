@@ -236,8 +236,7 @@ object Focal {
     // each tile keeps itself and ships 1-cell border strips to its 4
     // neighbors (E/W strips = last/first column; N/S strips = last/first row)
     val keyed = tiles.flatMap { r =>
-      val x0 = math.round((r.minX - region.minX) / region.cellWidth).toInt
-      val y0 = math.round((r.minY - region.minY) / region.cellHeight).toInt
+      val (x0, y0) = region.tileOffset(r)
       require(x0 % side == 0 && y0 % side == 0,
         s"tile ${r.item_id} does not sit on the region layout")
       val tx = x0 / side; val ty = y0 / side
@@ -312,10 +311,8 @@ object Focal {
     val spark = tiles.sparkSession
     import spark.implicits._
     val hReg = region.height
-    val r0ref = region
     tiles.flatMap { r =>
-      val x0 = math.round((r.minX - r0ref.minX) / r0ref.cellWidth).toInt
-      val y0 = math.round((r.minY - r0ref.minY) / r0ref.cellHeight).toInt
+      val (x0, y0) = region.tileOffset(r)
       val w = r.width; val h = r.height; val v = r.bands.head
       val parent = Array.tabulate(w * h)(i => i)
       def find(x: Int): Int = {

@@ -1,9 +1,10 @@
 package graft.raster
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.model.{Raster, TileGeometry}
 import graft.sources.GeoTiff
@@ -75,6 +76,25 @@ object Mosaic {
 
   def splitTiles(region: TileGeometry, maxCells: Long = 1000000L): Seq[TileGeometry] =
     splitTilesWithOffsets(region, maxCells).map(_._1)
+
+  /** Flatten tiles of `region` into (cx, cy, <names...>) rows at region-global
+    * cell indices (`TileGeometry.tileOffset`): one nullable double column per
+    * name, taken from the tile's leading bands in order, NaN -> NULL. */
+  def cellRows(tiles: Dataset[Raster], region: TileGeometry, names: String*): DataFrame = {
+    val schema = StructType(
+      Seq(StructField("cx", LongType, nullable = false),
+          StructField("cy", LongType, nullable = false)) ++
+        names.map(StructField(_, DoubleType, nullable = true)))
+    val nBands = names.length
+    tiles.flatMap { r =>
+      val (x0, y0) = region.tileOffset(r)
+      for (x <- 0 until r.width; y <- 0 until r.height) yield {
+        val i = x * r.height + y
+        Row.fromSeq((x0 + x.toLong) +: (y0 + y.toLong) +: r.bands.take(nBands).map { b =>
+          if (java.lang.Double.isNaN(b(i))) null else b(i) })
+      }
+    }(Encoders.row(schema))
+  }
 
   /** One merged Raster per target tile. Tiles with no intersecting item are
     * still emitted, nodata-filled (padding semantics J5). */

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.IterativeLoops
+
 /**
  * STAC catalog traversal + paged item search over a FETCHED document set
  * (S6/S7 orchestration — the reference walks these links with live HTTP,
@@ -19,7 +21,8 @@ import org.apache.spark.sql.types._
  *    column arithmetic (StacParser.getUrlOfItem:94-103 semantics);
  *  - catalog -> collection is a single equi-join (catalogs are 2 levels
  *    deep, not a general graph);
- *  - the `rel=next` page chain is REASSEMBLED BY PARALLEL POINTER JUMPING:
+ *  - the `rel=next` page chain is REASSEMBLED BY PARALLEL POINTER JUMPING
+ *    past [[PageChainDriverMax]] pages (one memoized driver walk below it):
  *    every page starts labeled with its predecessor (or itself) and each
  *    round relabels through `head := head(head)`, so a chain of L pages
  *    resolves to its first page in ceil(log2 L) distributed rounds with
@@ -121,63 +124,17 @@ object StacTraversal {
         concat($"search_url", lit("?collections="), $"collection_id",
                lit(s"&limit=$limit")).as("head"))
 
-    // parallel pointer jumping over the rel=next chain: label every page
-    // with (eventually) its chain head; each round doubles the jump length.
-    // A chain of L <= nPages pages resolves in ceil(log2 nPages) rounds, so
-    // the loop runs that bound BLINDLY with lazy localCheckpoints: no
-    // per-round convergence action — all rounds execute inside the ONE job
-    // that first consumes the labels (extra rounds past convergence are
-    // no-op self-joins). Each round's Dataset plan is a flat join of two
-    // LogicalRDDs (localCheckpoint truncates the plan even when lazy), so
-    // the plan never grows with the chain length.
+    // label every page with its predecessor (or itself), then resolve each
+    // label to its chain's first page — on the driver below the size gate,
+    // by distributed pointer jumping past it
     val nextRev = edges.filter($"rel" === "next").select($"dst".as("url"), $"src".as("prev"))
-    var lab = nav.filter($"doc_type" === "featurecollection").select($"url")
+    val lab0 = nav.filter($"doc_type" === "featurecollection").select($"url")
       .join(nextRev, Seq("url"), "left")
       .select($"url", coalesce($"prev", $"url").as("head"))
       .localCheckpoint(true)
-    val nPages = lab.count() // cheap: counts the just-checkpointed labels
-    if (nPages > 0 && nPages <= PageChainDriverMax) {
-      // SIZE-GATED driver resolution (round 6): the page table is one
-      // (url, prev) row per page — at this bound a few MB — and the
-      // measured cost of the distributed jump rounds on a SMALL chain set
-      // is almost pure driver planning + broadcast-build jobs (q70: ~12
-      // jobs and ~1.5 s wall for 48 pages). Collect once, follow prev
-      // pointers with memoization, parallelize the resolved labels back.
-      // Identical fixpoint: both resolve every page to its chain's first
-      // page. Past the gate (a 10^9-item catalog is ~2M pages) the
-      // log-round distributed jumping below takes over.
-      val rows = lab.collect()
-      val parent = new java.util.HashMap[String, String](rows.length * 2)
-      rows.foreach(r => parent.put(r.getString(0), r.getString(1)))
-      val root = new java.util.HashMap[String, String](rows.length * 2)
-      def resolve(u0: String): String = {
-        // iterative walk + path memoization (a recursive walk would
-        // overflow the stack on a chain near the gate)
-        val path = new scala.collection.mutable.ArrayBuffer[String]()
-        var u = u0
-        var r = root.get(u)
-        while (r == null) {
-          val p = parent.getOrDefault(u, u)
-          if (p == u) r = u
-          else { path += u; u = p; r = root.get(u) }
-        }
-        path.foreach(root.put(_, r))
-        root.put(u0, r)
-        r
-      }
-      lab = rows.map(r => (r.getString(0), resolve(r.getString(0))))
-        .toSeq.toDF("url", "head")
-    } else {
-      val rounds = if (nPages <= 2) 1
-                   else 64 - java.lang.Long.numberOfLeadingZeros(nPages - 1)
-      for (_ <- 0 until rounds.toInt) {
-        lab = lab.as("a")
-          .join(lab.as("b").select($"url".as("hu"), $"head".as("hh")),
-                col("a.head") === col("hu"), "left")
-          .select(col("a.url").as("url"), coalesce($"hh", col("a.head")).as("head"))
-          .localCheckpoint()
-      }
-    }
+    val nPages = lab0.count() // cheap: counts the just-checkpointed labels
+    val lab = if (nPages > 0 && nPages <= PageChainDriverMax) resolveChainsOnDriver(lab0)
+              else resolveChainsByJumping(lab0, nPages)
     val searchPages = lab.join(firstPages, Seq("head"))
       .select($"url", $"collection_id")
 
@@ -197,5 +154,62 @@ object StacTraversal {
       .select(($"collection_id" +: StacIngest.itemProjection($"__j")): _*)
 
     searchOut.unionByName(staticOut)
+  }
+
+  /**
+   * SIZE-GATED driver resolution of (url, head = predecessor or self)
+   * labels to (url, chain head). The page table is one row per page — at
+   * [[PageChainDriverMax]] a few MB — and the measured cost of the
+   * distributed jump rounds on a SMALL chain set is almost pure driver
+   * planning + broadcast-build jobs (q70: ~12 jobs and ~1.5 s wall for 48
+   * pages). Collect once, follow prev pointers with memoization,
+   * parallelize the resolved labels back. Same fixpoint as
+   * [[resolveChainsByJumping]], which takes over past the gate (a 10^9-item
+   * catalog is ~2M pages).
+   */
+  private[graft] def resolveChainsOnDriver(labels: DataFrame): DataFrame = {
+    val spark = labels.sparkSession
+    import spark.implicits._
+    val rows = labels.collect()
+    val parent = new java.util.HashMap[String, String](rows.length * 2)
+    rows.foreach(r => parent.put(r.getString(0), r.getString(1)))
+    val root = new java.util.HashMap[String, String](rows.length * 2)
+    def resolve(u0: String): String = {
+      // iterative walk + path memoization (a recursive walk would
+      // overflow the stack on a chain near the gate)
+      val path = new scala.collection.mutable.ArrayBuffer[String]()
+      var u = u0
+      var r = root.get(u)
+      while (r == null) {
+        val p = parent.getOrDefault(u, u)
+        if (p == u) r = u
+        else { path += u; u = p; r = root.get(u) }
+      }
+      path.foreach(root.put(_, r))
+      root.put(u0, r)
+      r
+    }
+    rows.map(r => (r.getString(0), resolve(r.getString(0)))).toSeq.toDF("url", "head")
+  }
+
+  /**
+   * Parallel pointer jumping over (url, head) labels of `nPages` pages:
+   * each round relabels through `head := head(head)`, doubling the jump
+   * length, so a chain of L <= nPages pages resolves to its first page in
+   * ceil(log2 nPages) rounds, run BLINDLY (no per-round convergence action;
+   * rounds past convergence are no-op self-joins). Every round goes
+   * through [[IterativeLoops.materializedLeafLazy]]: each round starts from
+   * a bare leaf (flat planning cost at any round count — a plain
+   * localCheckpoint chain is not), and no round runs a job of its own to
+   * materialize; its blocks cache inside the job that next consumes them.
+   */
+  private[graft] def resolveChainsByJumping(labels: DataFrame, nPages: Long): DataFrame = {
+    val rounds = if (nPages <= 2) 1 else 64 - java.lang.Long.numberOfLeadingZeros(nPages - 1)
+    (0 until rounds).foldLeft(labels) { (lab, _) =>
+      IterativeLoops.materializedLeafLazy(lab.as("a")
+        .join(lab.as("b").select(col("url").as("hu"), col("head").as("hh")),
+              col("a.head") === col("hu"), "left")
+        .select(col("a.url").as("url"), coalesce(col("hh"), col("a.head")).as("head")))
+    }
   }
 }

@@ -56,8 +56,7 @@ object RasterIoDemo {
     def assemble(rs: Array[Raster], name: String): Unit = {
       val full = Array.fill(400 * 300)(Double.NaN)
       rs.foreach { r =>
-        val x0 = math.round((r.minX - tregion.minX) / tregion.cellWidth).toInt
-        val y0 = math.round((r.minY - tregion.minY) / tregion.cellHeight).toInt
+        val (x0, y0) = tregion.tileOffset(r)
         for (x <- 0 until r.width; y <- 0 until r.height)
           full((x0 + x) * 300 + (y0 + y)) = r.bands.head(x * r.height + y)
       }

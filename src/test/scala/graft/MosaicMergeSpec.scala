@@ -104,4 +104,26 @@ class MosaicMergeSpec extends AnyFunSuite with SparkSuite {
       }
     }
   }
+
+  test("cellRows: many tiles give the rows of one region-sized tile") {
+    import spark.implicits._
+    // off-origin region whose tile offsets come out inexact on both sides
+    // (19.999999999999996 in x, 20.000000000000004 in y); cells no item
+    // reaches stay NaN and come out null; band 2 = -2 * band 1 - 1
+    val shifted = TileGeometry(60, 40, -0.279, 3.123, -0.745, 2.983, 4326, 0L, 0L)
+    def rows(maxCells: Long) = {
+      val tiles = Mosaic.mergeToTiles(spark.createDataset(items), shifted, Mosaic.Substitute,
+                                      maxCells = maxCells)
+        .map(r => r.copy(bands = Seq(r.bands.head, r.bands.head.map(v => -2.0 * v - 1.0))))
+      Mosaic.cellRows(tiles, shifted, "v", "w").as[(Long, Long, Option[Double], Option[Double])]
+        .collect().sortBy(r => (r._1, r._2)).toSeq
+    }
+    val split = rows(maxCells)
+    assert(Mosaic.splitTiles(shifted, maxCells).length == 6)
+    assert(split.map(r => (r._1, r._2)) ===
+      (for (x <- 0L until 60L; y <- 0L until 40L) yield (x, y)))
+    assert(split.exists(_._3.isEmpty) && split.exists(_._3.isDefined))
+    split.foreach { case (_, _, v, w) => assert(w === v.map(x => -2.0 * x - 1.0)) }
+    assert(split === rows(shifted.cells))
+  }
 }

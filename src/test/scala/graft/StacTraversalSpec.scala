@@ -112,6 +112,30 @@ class StacTraversalSpec extends AnyFunSuite with SparkSuite {
     assert(walk(docs, Seq("https://c/root.json")) === Set.empty)
   }
 
+  test("driver and pointer-jumping chain resolvers agree on a 16-round page forest") {
+    import spark.implicits._
+    // (url, head = predecessor or self): one 40,000-page chain — its last
+    // page is 39,999 > 2^15 hops from the head, so pointer jumping needs
+    // all 16 rounds — plus 200 short chains of 2..9 pages and 500 single
+    // pages
+    val long = (0 until 40000).map(i => (s"L/$i", s"L/${math.max(0, i - 1)}"))
+    val short = (0 until 200).flatMap { c =>
+      (0 until 2 + c % 8).map(i => (s"S$c/$i", s"S$c/${math.max(0, i - 1)}"))
+    }
+    val single = (0 until 500).map(i => (s"P/$i", s"P/$i"))
+    val labels = (long ++ short ++ single).toDF("url", "head")
+    val nPages = labels.count()
+    assert(nPages > 32768)
+    val expected = long.map { case (u, _) => (u, "L/0") } ++
+      short.map { case (u, _) => (u, u.takeWhile(_ != '/') + "/0") } ++ single
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"url", $"head").as[(String, String)].collect().sorted.toSeq
+    val onDriver = rows(StacTraversal.resolveChainsOnDriver(labels))
+    val jumped = rows(StacTraversal.resolveChainsByJumping(labels, nPages))
+    assert(onDriver === expected.sorted)
+    assert(jumped === onDriver)
+  }
+
   test("item fields survive the page-feature path (epsg, ts, ring fallback)") {
     import spark.implicits._
     val docs = Seq(
