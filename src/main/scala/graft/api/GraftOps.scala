@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -43,33 +43,5 @@ object GraftOps {
     /** Point-in-polygon join against (zone_id, ring) zones. */
     def pipJoin(zones: DataFrame, level: Int): DataFrame =
       SpatialJoin.pointsInZones(df, zones, level)
-
-    /** Skew-aware PIP join (histogram-driven broadcast vs salted shuffle). */
-    def pipJoinAuto(zones: DataFrame, level: Int): DataFrame =
-      SpatialJoin.pointsInZonesAuto(df, zones, level)
-
-    /** Exact kNN against (qid, qx, qy) queries. */
-    def knn(queries: DataFrame, k: Int, level: Int): DataFrame =
-      SpatialJoin.knnJoin(df.withColumnRenamed("doc_id", "id"), queries, k, level)
-  }
-
-  implicit class CogFrameOps(private val files: Dataset[graft.raster.CogFile]) extends AnyVal {
-    /** COG-native mosaic: probe -> per-tile window decode and resample ->
-      * tile-addressed patch shuffle (see Mosaic.mergeToTilesCog). */
-    def cogMosaic(region: graft.model.TileGeometry,
-                  mode: graft.raster.Mosaic.MergeMode,
-                  kernel: graft.raster.Resample.Kernel = graft.raster.Resample.Nearest,
-                  maxCells: Long = 1000000L, band: Int = 0,
-                  targetCellWidth: Double = 0.0): Dataset[graft.model.Raster] =
-      graft.raster.Mosaic.mergeToTilesCog(files, region, mode, kernel,
-                                          maxCells, band, targetCellWidth)
-  }
-
-  implicit class StacDocOps(private val docs: DataFrame) extends AnyVal {
-    /** Walk STAC catalogs over a fetched (url, json) document table:
-      * rel=search discovery, paged rel=next reassembly, static rel=item. */
-    def stacWalk(urlCol: String, jsonCol: String, roots: Seq[String],
-                 limit: Int): DataFrame =
-      graft.sources.StacTraversal.walkItems(docs, urlCol, jsonCol, roots, limit)
   }
 }

@@ -38,20 +38,14 @@ import org.apache.spark.sql.types.LongType
  * self-join of the label table (pointer jump); measured round counts grow
  * ~log(diameter) (ConnectedComponentsSpec's 256-path assertion).
  *
- * Driver round-trips: rounds run BLIND in blocks of lazily-chained
- * localCheckpoints — no job, no action per round. One job materializes the
- * whole block and ONE probe per block checks convergence (labels only
- * decrease, so a quiet final round is the exact fixpoint signal). Block
- * lengths grow geometrically (2, 4, 8, ...) capped at min(12,
- * ceil(log2 nodes)+1): 12 because chained checkpoint frames re-enter
- * Catalyst planning with origin references whose cost compounds per round
- * (see BENCH.md's exponential-planning incident — the block boundary's
- * materializedLeaf severs the chain), log2(n)+1 because doubling can never
- * need more rounds than that.
+ * Driver round-trips: the rounds run on [[IterativeLoops.fixpoint]] in
+ * blind geometric blocks with one change-probe count per block (labels
+ * only decrease, so a quiet round IS the fixpoint). The block cap is
+ * min(12, ceil(log2 nodes)+1): doubling never needs more than log2(n)+1
+ * rounds, and 12 bounds the blind work past convergence and the shuffle
+ * stages one block's job chains.
  */
 object ConnectedComponents {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   import IterativeLoops.{materializedLeaf, materializedLeafLazy}
 
@@ -150,30 +144,15 @@ object ConnectedComponents {
   private def loopLabels(sym: DataFrame, maxRounds: Int): DataFrame = {
     // round 0: lbl(v) = min(v, neighbors(v)) — lazy leaf, materialized by
     // the count just below (one job for round 0 + its cardinality)
-    var lbl = materializedLeafLazy(
+    val lbl0 = materializedLeafLazy(
       sym.groupBy(col("u").as("id")).agg(min(col("v")).as("mn"))
         .select(col("id"), least(col("id"), col("mn")).as("lbl")))
-
-    // one action up front (on the just-checkpointed labels): n == 0 decides
-    // the empty case, and ceil(log2 n)+1 bounds any useful block length —
-    // doubling converges in ~log2(diameter) <= log2(n) rounds, so blocks
-    // longer than that are pure waste
-    val n = lbl.count()
-    val maxBlock = math.max(2, math.min(12,
+    // n == 0 is the empty graph (no round runs); n also sizes the block cap
+    val n = lbl0.count()
+    val blockCap = math.max(2, math.min(12,
       64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)) + 1))
-
-    var round = 0
-    var converged = n == 0L
-    // GEOMETRIC block lengths (2, 4, 8, ...): short-diameter graphs — the
-    // common near-dup case — stop after ~2x the rounds they need, while a
-    // deep graph still amortizes probes to O(log) of its round count.
-    var blockSize = math.min(2, maxBlock)
-    while (!converged && round < maxRounds) {
-      var prev = lbl
-      var cur = lbl
-      var steps = 0
-      while (steps < blockSize && round < maxRounds) {
-        prev = cur
+    IterativeLoops.fixpoint("connected components", lbl0, n, maxRounds, blockCap)(
+      (cur, _) => {
         // (a) propagate: each node adopts the min label over its neighbors
         val nbrMin = sym.join(cur.withColumnRenamed("id", "nid"), col("v") === col("nid"))
           .groupBy(col("u").as("pid")).agg(min(col("lbl")).as("nl"))
@@ -181,48 +160,17 @@ object ConnectedComponents {
           .select(col("id"),
                   least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("l1"))
         // (b) pointer jump: follow the adopted label one hop through the
-        // current label table (labels are ids, so lbl(l1) is defined).
-        // LAZY checkpoint: the plan collapses to a flat LogicalRDD now, the
-        // work runs inside the block-end materialization job — no action,
-        // no job launched here.
-        cur = prop
+        // current label table (labels are ids, so lbl(l1) is defined)
+        prop
           .join(cur.select(col("id").as("jid"), col("lbl").as("jl")),
                 col("l1") === col("jid"), "left")
           .select(col("id"),
                   least(col("l1"), coalesce(col("jl"), col("l1"))).as("lbl"))
-          .localCheckpoint(false)
-        steps += 1
-        round += 1
-      }
-      // block boundary: the change-probe count is the materializing action
-      // for the lazily-severed block (all chained rounds compute inside
-      // it) — ONE job per block for materialization AND the probe, which
-      // compares the block's LAST TWO rounds (labels only decrease, so a
-      // quiet final round IS the fixpoint).
-      val next = materializedLeafLazy(cur)
-      val changed = next
-        .join(prev.select(col("id").as("sid"), col("lbl").as("l0")),
-              col("id") === col("sid"))
+      },
+      (_, leaf) => leaf) { (prev, next) =>
+      next.join(prev.select(col("id").as("sid"), col("lbl").as("l0")),
+                col("id") === col("sid"))
         .filter(col("lbl") < col("l0")).count()
-      converged = changed == 0L
-      lbl = next
-      blockSize = math.min(maxBlock, blockSize * 2)
-      // info, not warn: round progress is normal operation (warn is reserved
-      // for data-affecting events, matching BucketedSelfJoin's convention)
-      log.info(s"connected-components: $round rounds run, " +
-        s"$changed labels changed in the last $steps-round block")
     }
-    if (!converged && round >= maxRounds) {
-      // rounds exhausted with the last block's FINAL round still changing —
-      // the fixpoint may nonetheless be exactly at that round. One
-      // verification propagation decides.
-      val nbrMin = sym.join(lbl.withColumnRenamed("id", "nid"), col("v") === col("nid"))
-        .groupBy(col("u").as("pid")).agg(min(col("lbl")).as("nl"))
-      val changed = lbl.join(nbrMin, col("id") === col("pid"), "left")
-        .filter(coalesce(col("nl"), col("lbl")) < col("lbl")).count()
-      converged = changed == 0L
-    }
-    require(converged, s"connected components did not converge in $maxRounds rounds")
-    lbl
   }
 }

@@ -33,7 +33,9 @@ import org.apache.spark.sql.functions._
  * cycles (which the old fixpoint merely saturated on) now fail the
  * maxRounds guard instead — no caller feeds cycles (steepest-descent edges
  * are acyclic by construction) and the guard turns a silent saturation
- * into a diagnostic.
+ * into a diagnostic. The rounds run on [[IterativeLoops.fixpoint]] with
+ * one frontier count per round: the count is the termination test and
+ * feeds the next round's broadcast gate.
  */
 object FunctionalClosure {
 
@@ -58,43 +60,35 @@ object FunctionalClosure {
     // edge frame's own partition count (data-derived; at scale e is
     // thousands of partitions and this is a no-op).
     val baseParts = math.max(1, e.rdd.getNumPartitions)
-    var total: DataFrame = e                 // pairs of length 1..2^k
-    var frontier = e                         // (u, f^{2^k}(u)), <= n rows
-    var frontierN = frontier.count()
-    var round = 0
-    var done = frontierN == 0L
-    while (!done && round < maxRounds) {
-      val f = if (frontierN <= FrontierBroadcastMaxRows) broadcast(frontier) else frontier
-      // ONE job per round: the new chunk (lengths (2^k, 2^{k+1}]: an
-      // exactly-2^k prefix via the frontier, then a 1..2^k suffix via the
-      // accumulated pairs — each pair produced once) and the doubled jump
-      // f^{2^{k+1}} = f^{2^k} o f^{2^k} materialize together under a tag
-      // column, so the frontier broadcast builds once (ReuseExchange) and
-      // the round costs one materialization + one count over cached blocks
-      // instead of four separate jobs of fixed overhead each.
-      val both = materializedLeafLazy(
+    // state: (pairs of length 1..2^k, frontier (u, f^{2^k}(u)) of <= n rows)
+    val (total, _) = IterativeLoops.fixpoint("functional closure (acyclic input required)",
+        (e, e), e.count(), maxRounds, blockCap = 1)(
+      { case ((total, frontier), frontierN) =>
+        val f = if (frontierN <= FrontierBroadcastMaxRows) broadcast(frontier) else frontier
+        // the new chunk (lengths (2^k, 2^{k+1}]: an exactly-2^k prefix via
+        // the frontier, then a 1..2^k suffix via the accumulated pairs —
+        // each pair produced once) and the doubled jump
+        // f^{2^{k+1}} = f^{2^k} o f^{2^k} materialize together under a tag
+        // column, so the frontier broadcast builds once (ReuseExchange) and
+        // the round costs one materialization + one count over cached blocks
+        // instead of four separate jobs of fixed overhead each.
         f.as("a").join(total.as("b"), col("a.v") === col("b.u"))
           .select(lit(0).as("t"), col("a.u").as("u"), col("b.v").as("v"))
           .union(
             f.as("a").join(frontier.as("b"), col("a.v") === col("b.u"))
               .select(lit(1).as("t"), col("a.u").as("u"), col("b.v").as("v")))
-          .coalesce(baseParts))
-      // termination needs ONLY the frontier count — and since `both` is a
-      // LAZY leaf, this count IS the round's one job: it materializes the
-      // chunk+frontier blocks and returns the frontier cardinality
-      // together. frontier_{k+1} empty means no path of length >= 2^{k+1}
-      // exists, so every later chunk is empty too; the chunk just produced
-      // is already in `total` either way. (An empty chunk with a live
-      // frontier just means the longest path is exactly 2^k — the next
-      // round's frontier count ends the loop.)
-      frontierN = both.filter(col("t") === 1).count()
-      total = total.union(both.filter(col("t") === 0).select(col("u"), col("v")))
-      frontier = both.filter(col("t") === 1).select(col("u"), col("v"))
-      done = frontierN == 0L
-      round += 1
+          .coalesce(baseParts)
+      },
+      { case ((total, _), both) =>
+        (total.union(both.filter(col("t") === 0).select(col("u"), col("v"))),
+         both.filter(col("t") === 1).select(col("u"), col("v")))
+      }) {
+      // frontier_{k+1} empty means no path of length >= 2^{k+1} exists, so
+      // every later chunk is empty too; the chunk just produced is already
+      // in `total` either way. (An empty chunk with a live frontier just
+      // means the longest path is exactly 2^k — the next count ends it.)
+      case (_, (_, frontier)) => frontier.count()
     }
-    require(done, s"closure did not converge in $maxRounds rounds " +
-      "(cyclic input? ancestorPairs requires an acyclic functional graph)")
     total
   }
 }

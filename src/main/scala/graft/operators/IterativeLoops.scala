@@ -4,9 +4,12 @@ import org.apache.spark.sql.DataFrame
 
 /**
  * Shared machinery for DataFrame FIXPOINT LOOPS (connected components,
- * transitive closure, any iterate-until-stable dataflow).
+ * transitive closure, kNN ring expansion, any iterate-until-stable
+ * dataflow): the severing helpers and [[fixpoint]], the one round loop.
  */
 object IterativeLoops {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /**
    * Materialize + SEVER: `localCheckpoint` truncates the execution lineage,
@@ -43,5 +46,55 @@ object IterativeLoops {
   def materializedLeafLazy(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint(false)
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+  }
+
+  /**
+   * The fixpoint loop. A round builds the next state's frame with
+   * `step(state, lastCount)`, severs it through [[materializedLeafLazy]]
+   * (no action) and folds the leaf into the state with `absorb`.
+   *
+   * Rounds run BLIND in blocks, and a block's one action is
+   * `moving(prev, next)` over its last round: a count that consumes every
+   * partition (it materializes the block's chain of lazy leaves) and is
+   * zero only when `next` is final. With `blockCap` 1 every round is
+   * probed (for callers whose count is also their termination test);
+   * otherwise block lengths grow 2, 4, 8, ... up to `blockCap`, so a
+   * shallow fixpoint overshoots by at most ~2x while a deep one pays
+   * O(log) probes.
+   *
+   * `count0` is the caller's count of `init`; 0 runs no round. When
+   * `maxRounds` rounds are spent with the last count nonzero, ONE
+   * verification round runs — a count of changes sees a fixpoint reached
+   * at the last round only one round later. Its state is the result if its
+   * count is zero; otherwise the loop fails instead of running on.
+   */
+  def fixpoint[S](what: String, init: S, count0: Long, maxRounds: Int, blockCap: Int)(
+      step: (S, Long) => DataFrame, absorb: (S, DataFrame) => S)(
+      moving: (S, S) => Long): S = {
+    var state = init
+    var count = count0
+    var round = 0
+    def next(s: S): S = {
+      round += 1
+      absorb(s, materializedLeafLazy(step(s, count)))
+    }
+    var block = math.min(2, blockCap)
+    while (count > 0 && round < maxRounds) {
+      var prev = state
+      val end = math.min(maxRounds, round + block)
+      while (round < end) { prev = state; state = next(state) }
+      count = moving(prev, state)
+      block = math.min(blockCap, block * 2)
+    }
+    if (count > 0) {
+      val prev = state
+      state = next(state)
+      count = moving(prev, state)
+    }
+    // info, not warn: round progress is normal operation (warn is reserved
+    // for data-affecting events, matching BucketedSelfJoin's convention)
+    log.info(s"$what: $round rounds, $count still moving")
+    require(count == 0L, s"$what did not converge in $maxRounds rounds")
+    state
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -48,15 +48,12 @@ object SpatialJoin {
    * @param zones   (ring: array<double> flat [x0,y0,...], …carry-through)
    * @param level   cell level of the prefilter (planner picks from zone size;
    *                higher = finer cover = fewer false candidates)
-   * @param broadcastZones hint when the exploded zone-cell side is small
    */
-  def pointsInZones(points: DataFrame, zones: DataFrame, level: Int,
-                    broadcastZones: Boolean = true): DataFrame = {
+  def pointsInZones(points: DataFrame, zones: DataFrame, level: Int): DataFrame = {
     val zoneCells = zones
       .withColumn("cell", explode(coverRingUdf(col("ring"), lit(level))))
-    val zc = if (broadcastZones) broadcast(zoneCells) else zoneCells
     val pts = points.withColumn("cell", GraftFunctions.cell_id(col("lon"), col("lat"), lit(level)))
-    pts.join(zc, "cell")
+    pts.join(broadcast(zoneCells), "cell")
       .filter(GraftFunctions.winding_contains(col("ring"), col("lon"), col("lat")))
       .drop("cell", "ring")
   }
@@ -238,63 +235,60 @@ object SpatialJoin {
   def knnJoin(points: DataFrame, queries: DataFrame, k: Int, level: Int): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
+    import IterativeLoops.materializedLeafLazy
 
     val cellMin = math.min(360.0, 180.0) / (1L << level)  // degrees per cell (lat axis)
-    val pts = points
-      .withColumn("cell", GraftFunctions.cell_id(col("lon"), col("lat"), lit(level)))
-      .persist()
-    pts.count() // materialize once; reused every round
+    // lazy leaf: materialized inside the first round's job, reused by every round
+    val pts = materializedLeafLazy(
+      points.withColumn("cell", GraftFunctions.cell_id(col("lon"), col("lat"), lit(level))))
 
     val diskUdf = udf { (qx: Double, qy: Double, r: Int) =>
       CellIndex.disk(CellIndex.cellId(qx, qy, level), r)
     }
 
-    // Rounds double r; past maxRing the fallback is a full scan of the
-    // remaining queries (rare: only queries in near-empty regions get there).
-    // Each round localCheckpoints its outputs — without this the `remaining`
-    // lineage embeds the previous round's plan twice and grows exponentially.
-    val maxRing = 64
-    var remaining = queries.select($"qid", $"qx", $"qy").localCheckpoint(true)
-    val settledParts = Seq.newBuilder[DataFrame]
-    // start at r=2: the settle criterion needs a guaranteed-covered radius of
-    // (r-1)*cellMin > 0, so an r=1 round can never settle anything and would
-    // be a wasted distributed pass
-    var r = 2
-    var continue = remaining.limit(1).count() > 0
-    while (continue) {
-      val lastRound = r > maxRing
-      val cand = (if (lastRound) pts.crossJoin(broadcast(remaining))
-                  else pts.join(
-                    broadcast(remaining.withColumn("cell", explode(diskUdf($"qx", $"qy", lit(r))))),
-                    Seq("cell")))
-        .withColumn("dist2",
-          ($"lon" - $"qx") * ($"lon" - $"qx") + ($"lat" - $"qy") * ($"lat" - $"qy"))
-      val w = Window.partitionBy($"qid").orderBy($"dist2", $"id")
-      val topk = cand
-        .withColumn("rank", row_number().over(w).cast("bigint"))
-        .filter($"rank" <= k)
-        .select($"qid", $"rank", $"id", $"dist2")
-        .localCheckpoint(true)
-      if (lastRound) {
-        settledParts += topk
-        continue = false
-      } else {
+    // Ring rounds double r = 2, 4, ..., 64 (r = 1 could never settle: the
+    // guaranteed-covered radius (r-1)*cellMin must be > 0). Queries still
+    // open after them get one full-scan round (rare: only queries in
+    // near-empty regions get there), which settles every query — so the
+    // loop always converges within ringRounds + 1 rounds.
+    val ringRounds = 6
+    val remaining0 = materializedLeafLazy(queries.select($"qid", $"qx", $"qy"))
+    // state: (open queries, settled top-k per round so far)
+    val (_, settled) = IterativeLoops.fixpoint("knn ring expansion",
+        (remaining0, Vector.empty[DataFrame]), remaining0.count(), ringRounds + 1, blockCap = 1)(
+      { case ((remaining, parts), _) =>
+        val r = 2 << parts.size
+        val lastRound = parts.size == ringRounds
+        val cand = (if (lastRound) pts.crossJoin(broadcast(remaining))
+                    else pts.join(
+                      broadcast(remaining.withColumn("cell", explode(diskUdf($"qx", $"qy", lit(r))))),
+                      Seq("cell")))
+          .withColumn("dist2",
+            ($"lon" - $"qx") * ($"lon" - $"qx") + ($"lat" - $"qy") * ($"lat" - $"qy"))
+        val w = Window.partitionBy($"qid").orderBy($"dist2", $"id")
+        val topk = cand
+          .withColumn("rank", row_number().over(w).cast("bigint"))
+          .filter($"rank" <= k)
+          .select($"qid", $"rank", $"id", $"dist2")
         // settled iff the kth distance is provably inside the covered radius
         val guaranteed = (r - 1).toDouble * cellMin
-        val done = topk.groupBy($"qid")
-          .agg(count(lit(1)).as("n"), max($"dist2").as("worst"))
-          .filter($"n" === k && $"worst" <= lit(guaranteed * guaranteed))
-          .select($"qid")
-        settledParts += topk.join(broadcast(done), "qid")
-        remaining = remaining.join(broadcast(done), Seq("qid"), "left_anti")
-          .localCheckpoint(true)
-        continue = remaining.limit(1).count() > 0
-        r *= 2
-      }
-    }
-    pts.unpersist()
-    val parts = settledParts.result()
-    if (parts.isEmpty)
+        val done =
+          if (lastRound) remaining.select($"qid")
+          else topk.groupBy($"qid")
+            .agg(count(lit(1)).as("n"), max($"dist2").as("worst"))
+            .filter($"n" === k && $"worst" <= lit(guaranteed * guaranteed))
+            .select($"qid")
+        // settled rows (t = 0) and still-open queries (t = 1) materialize
+        // together, so topk and the done broadcast are built once
+        topk.join(broadcast(done), "qid").withColumn("t", lit(0))
+          .unionByName(remaining.join(broadcast(done), Seq("qid"), "left_anti")
+            .withColumn("t", lit(1)), allowMissingColumns = true)
+      },
+      { case ((_, parts), both) =>
+        (both.filter($"t" === 1).select($"qid", $"qx", $"qy"),
+         parts :+ both.filter($"t" === 0).select($"qid", $"rank", $"id", $"dist2"))
+      }) { case (_, (remaining, _)) => remaining.count() }
+    if (settled.isEmpty)
       // keep the (qid, rank, id, dist2) contract even with no queries —
       // qid/id take the CALLER'S column types so the schema never depends on
       // whether the query side happened to be empty
@@ -304,6 +298,6 @@ object SpatialJoin {
           org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("id", points.schema("id").dataType),
           org.apache.spark.sql.types.StructField("dist2", org.apache.spark.sql.types.DoubleType))))
-    else parts.reduce(_ unionByName _)
+    else settled.reduce(_ unionByName _)
   }
 }

@@ -34,4 +34,11 @@ class FunctionalClosureSpec extends AnyFunSuite with SparkSuite {
   test("empty input") {
     assert(run(Seq.empty).isEmpty)
   }
+
+  test("cyclic input fails the maxRounds guard instead of saturating") {
+    // the frontier of a cycle never empties: the guard stops the loop after
+    // maxRounds rounds plus the one verification round
+    val e = intercept[IllegalArgumentException](run(Seq((1L, 2L), (2L, 3L), (3L, 1L)), maxRounds = 3))
+    assert(e.getMessage.contains("did not converge in 3 rounds"))
+  }
 }
