@@ -218,7 +218,7 @@ object AnnQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q40_ann_bruteforce" -> { (s, dir) =>
       import s.implicits._
-      val emb = Inputs.parquet(s, s"$dir/embeddings.parquet")
+      val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       val qs = emb.filter($"vec_id" < 10)
         .select($"vec_id".as("qid"), $"v".as("qv"))
@@ -242,7 +242,7 @@ object AnnQueries {
     // refine after
     "q42_neardup_embedding" -> { (s, dir) =>
       import s.implicits._
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Tables.read(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot(col("v"), col("v"))))
       // checkpoint the SIGNATURE table: it feeds the bucket-count pass and
@@ -270,7 +270,7 @@ object AnnQueries {
     // ranks only within probed clusters.
     "q43_ann_ivf" -> { (s, dir) =>
       import s.implicits._
-      val emb = Inputs.parquet(s, s"$dir/embeddings.parquet")
+      val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
       val assigned = assignProbes(emb, centArrayLit(LadderCents), nprobe = 4, dot, "v")
@@ -281,7 +281,7 @@ object AnnQueries {
     // vectors (exact arithmetic in both engines), then nprobe search.
     "q44_ann_ivf_trained" -> { (s, dir) =>
       import s.implicits._
-      val emb = Inputs.parquet(s, s"$dir/embeddings.parquet")
+      val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
         .withColumn("q", transform($"v", x => round(x * IvfQuant, 0).cast("bigint")))
@@ -301,7 +301,7 @@ object AnnQueries {
     // literal path). Queries probe 64 of 4096 clusters (1.6%).
     "q97_ann_ivf_broadcast" -> { (s, dir) =>
       import s.implicits._
-      val emb = Inputs.parquet(s, s"$dir/embeddings.parquet")
+      val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
       val assigned = assignProbesBroadcast(emb, BigCents, nprobe = 64, "v")
@@ -318,7 +318,7 @@ object AnnQueries {
     // bit-for-bit. Queries probe 16/1024 clusters (1.6%, the q97 fraction).
     "q103_ann_ivf_trained_broadcast" -> { (s, dir) =>
       import s.implicits._
-      val emb = Inputs.parquet(s, s"$dir/embeddings.parquet")
+      val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
         .withColumn("q", transform($"v", x => round(x * IvfQuant, 0).cast("bigint")))
@@ -344,7 +344,7 @@ object AnnQueries {
     // codebook is what makes large-K probing cheap (graft.tools.AnnRecall).
     "q108_ann_ivf_full" -> { (s, dir) =>
       import s.implicits._
-      val emb = Inputs.parquet(s, s"$dir/embeddings.parquet")
+      val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
         .withColumn("q", transform($"v", x => round(x * IvfQuant, 0).cast("bigint")))
@@ -364,7 +364,7 @@ object AnnQueries {
     // identical 25% probe fraction.
     "q102_ann_ivf_rerank" -> { (s, dir) =>
       import s.implicits._
-      val emb = Inputs.parquet(s, s"$dir/embeddings.parquet")
+      val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
       val assigned = assignProbes(emb, centArrayLit(LadderCents), nprobe = 4, dot, "v")
@@ -373,7 +373,7 @@ object AnnQueries {
 
     "q41_lsh_buckets" -> { (s, dir) =>
       import s.implicits._
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Tables.read(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       emb.withColumn("bucket", bucketCol($"v", 0, 8))
         .groupBy($"bucket")
@@ -387,7 +387,7 @@ object AnnQueries {
     // integer component sum, integer squared norm) so the compare is exact
     "q46_embed_quantize" -> { (s, dir) =>
       import s.implicits._
-      Inputs.parquet(s, s"$dir/embeddings.parquet")
+      Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("absmax", array_max(transform($"v", x => abs(x))))
         .withColumn("q", transform($"v", x => round(x / $"absmax" * 127.0, 0).cast("bigint")))

@@ -63,7 +63,7 @@ object Geo {
     * steps from the bbox's min corner (the q56/q57/q75/q86 zone layout). */
   private[api] def nationZoneOrigins(spark: SparkSession, dir: String): DataFrame = {
     val k = col("k")
-    spark.read.parquet(s"$dir/nation.parquet")
+    Tables.read(spark, dir, "nation")
       .select(col("n_nationkey").cast("long").as("k"))
       .withColumn("x0", lit(minX) + (k % 5).cast("double") * 0.4)
       .withColumn("y0", lit(minY) + floor(k / 5.0).cast("double") * 0.3)
@@ -72,7 +72,7 @@ object Geo {
   /** Event points: (event_id, lon, lat), spread by the document-point
     * recurrences ([[lonCol]]/[[latCol]]). */
   private[api] def eventPoints(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/events.parquet")
+    Tables.read(spark, dir, "events")
       .select(col("event_id"), lonCol(col("event_id")).as("lon"),
               latCol(col("event_id")).as("lat"))
 
@@ -94,7 +94,7 @@ object Geo {
 
   /** Document points: (doc_id, lon, lat). */
   def docPoints(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.read(spark, dir, "documents")
     docs.select(col("doc_id"), lonCol(col("doc_id")).as("lon"), latCol(col("doc_id")).as("lat"))
   }
 
@@ -121,7 +121,7 @@ object Geo {
 
   /** Zones: (zone_id, ax, ay, bx, by, cx2, cy2, ring) — CCW triangles. */
   def zones(spark: SparkSession, dir: String): DataFrame = {
-    val nation = spark.read.parquet(s"$dir/nation.parquet")
+    val nation = Tables.read(spark, dir, "nation")
     val k = col("n_nationkey").cast("long")
     val cx = zoneCxCol(k); val cy = zoneCyCol(k)
     val w = zoneWCol(k); val h = zoneHCol(k)

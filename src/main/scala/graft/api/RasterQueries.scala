@@ -46,7 +46,7 @@ object RasterQueries {
       val b3 = $"l_linenumber".cast("double")
       val bsum = lit(0.0) + b1 + b2 + b3
       val bmax = greatest(b1, b2, b3)
-      graft.api.Inputs.parquet(s, s"$dir/lineitem.parquet")
+      Tables.wide(s, dir, "lineitem")
         .select(
           $"l_orderkey", $"l_linenumber",
           bsum.as("band_sum"),
@@ -62,7 +62,7 @@ object RasterQueries {
       import s.implicits._
       // last-write-wins per cell (user_id as the cell key), ordered by
       // (ts, event_id) — the deterministic restatement of SUBSTITUTE merge
-      s.read.parquet(s"$dir/events.parquet")
+      Tables.read(s, dir, "events")
         .withColumn("ms", unix_millis($"ts".cast("timestamp")))
         .groupBy($"user_id")
         .agg(
@@ -76,7 +76,7 @@ object RasterQueries {
       import s.implicits._
       // nodata chain: magnitude guard maps "out of range" values to nodata
       // (NULL in the relational restatement; NaN inside dense tiles)
-      s.read.parquet(s"$dir/events.parquet")
+      Tables.read(s, dir, "events")
         .withColumn("v", when($"value" <= 180.0, $"value"))
         .groupBy($"event_type")
         .agg(
@@ -97,7 +97,7 @@ object RasterQueries {
       val grid = s.range(1)
         .select(explode(sequence(lit(0L), lit(60L * 40 - 1))).as("i"))
         .select(($"i" / 40).cast("long").as("gx"), ($"i" % 40).as("gy"))
-      val fetched = s.read.parquet(s"$dir/events.parquet")
+      val fetched = Tables.read(s, dir, "events")
         .withColumn("gx", $"event_id" * 31 % 60)
         .withColumn("gy", $"event_id" * 17 % 40)
         .groupBy($"gx", $"gy")
@@ -112,7 +112,7 @@ object RasterQueries {
     // fixed-width buckets over the value plane
     "q27_histogram" -> { (s, dir) =>
       import s.implicits._
-      s.read.parquet(s"$dir/orders.parquet")
+      Tables.read(s, dir, "orders")
         .withColumn("bucket", floor($"o_totalprice" / 50000.0).cast("bigint"))
         .groupBy($"bucket")
         .agg(count(lit(1)).as("n"),
@@ -127,7 +127,7 @@ object RasterQueries {
     "q28_transform_expr" -> { (s, dir) =>
       import s.implicits._
       import graft.functions.TransformExpr
-      s.read.parquet(s"$dir/events.parquet")
+      Tables.read(s, dir, "events")
         .withColumn("v", when($"value" <= 400.0, $"value").otherwise(lit(Double.NaN)))
         .withColumn("t", TransformExpr.column("(self * 2 + 1 - abs(self - 100)) / 4", $"v"))
         .select($"event_id", when(isnan($"t"), lit(null)).otherwise($"t").as("t"))
@@ -142,7 +142,7 @@ object RasterQueries {
     "q95_transform_conditional" -> { (s, dir) =>
       import s.implicits._
       import graft.functions.TransformExpr
-      s.read.parquet(s"$dir/events.parquet")
+      Tables.read(s, dir, "events")
         .withColumn("v", when($"value" <= 400.0, $"value").otherwise(lit(Double.NaN)))
         .withColumn("t", TransformExpr.column(
           "self > 200 ? sqrt(self) * 2 : (self < 50 && self != 10 ? -self : self % 7 + 1)",
@@ -155,10 +155,10 @@ object RasterQueries {
     // Geotools.java:347-353): codes = sorted distinct labels
     "q29_datakey_encode" -> { (s, dir) =>
       import s.implicits._
-      val labels = s.read.parquet(s"$dir/customer.parquet")
+      val labels = Tables.read(s, dir, "customer")
         .select($"c_mktsegment").distinct().as[String].collect().toSeq
       val key = DataKey.fromLabels(labels)
-      s.read.parquet(s"$dir/customer.parquet")
+      Tables.read(s, dir, "customer")
         .select($"c_custkey",
                 DataKey.encodeConcept(key)($"c_mktsegment").cast("bigint").as("code"))
         .orderBy($"c_custkey")
@@ -242,7 +242,7 @@ object RasterQueries {
       val fit = udf { (vw: Int, vh: Int, mw: Int, mh: Int) =>
         GeodataIO.viewportSize(vw, vh, mw, mh)
       }
-      s.read.parquet(s"$dir/nation.parquet")
+      Tables.read(s, dir, "nation")
         .select($"n_nationkey".cast("long").as("k"))
         .withColumn("vw", ($"k" * 13 + 640).cast("int"))
         .withColumn("vh", ($"k" * 7 + 480).cast("int"))
@@ -532,7 +532,7 @@ object RasterQueries {
 
   private def nationKeys(s: SparkSession, dir: String): Dataset[Long] = {
     import s.implicits._
-    s.read.parquet(s"$dir/nation.parquet").select($"n_nationkey".cast("long")).as[Long]
+    Tables.read(s, dir, "nation").select($"n_nationkey".cast("long")).as[Long]
   }
 
   /** Item k's w x h values in D2_XY order: k*1000 + (sx*31 + sy*17 + shift) % 97
@@ -563,7 +563,7 @@ object RasterQueries {
                          (write: (Long, java.io.File) => Unit): Dataset[CogFile] = {
     import s.implicits._
     val stagePath = FixtureStage.stage(
-      s"${name}_" + FixtureStage.contentStamp(s"$dir/nation.parquet"), version = 1) { out =>
+      s"${name}_" + FixtureStage.contentStamp(Tables.path(dir, "nation")), version = 1) { out =>
       nationKeys(s, dir).foreach(k => write(k, new java.io.File(out, f"item-$k%03d.tif")))
     }
     s.read.format("binaryFile").load(stagePath + "/*.tif")

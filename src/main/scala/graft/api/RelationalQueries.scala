@@ -15,12 +15,10 @@ import org.apache.spark.sql.expressions.Window
  */
 object RelationalQueries {
 
-  private def p(dir: String, t: String) = s"$dir/$t.parquet"
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary" -> { (s, dir) =>
       import s.implicits._
-      s.read.parquet(p(dir, "lineitem"))
+      Tables.read(s, dir, "lineitem")
         .groupBy($"l_returnflag", $"l_linestatus")
         .agg(
           // round-then-cast: DuckDB's double->bigint cast rounds while
@@ -35,10 +33,10 @@ object RelationalQueries {
 
     "q02_region_revenue" -> { (s, dir) =>
       import s.implicits._
-      val orders = s.read.parquet(p(dir, "orders"))
-      val cust = s.read.parquet(p(dir, "customer"))
-      val nation = s.read.parquet(p(dir, "nation"))
-      val region = s.read.parquet(p(dir, "region"))
+      val orders = Tables.read(s, dir, "orders")
+      val cust = Tables.read(s, dir, "customer")
+      val nation = Tables.read(s, dir, "nation")
+      val region = Tables.read(s, dir, "region")
       orders
         .join(broadcast(cust), $"o_custkey" === $"c_custkey")
         .join(broadcast(nation), $"c_nationkey" === $"n_nationkey")
@@ -56,8 +54,8 @@ object RelationalQueries {
     // is what shuffles while the dim streams; oracle = NOT EXISTS.
     "q19_parts_never_discounted" -> { (s, dir) =>
       import s.implicits._
-      val part = s.read.parquet(p(dir, "part"))
-      val li = s.read.parquet(p(dir, "lineitem"))
+      val part = Tables.read(s, dir, "part")
+      val li = Tables.read(s, dir, "lineitem")
         .filter($"l_discount" >= 0.09).select($"l_partkey")
       part.join(li, $"p_partkey" === $"l_partkey", "left_anti")
         .select($"p_partkey", $"p_name", $"p_type")
@@ -69,8 +67,8 @@ object RelationalQueries {
     // distinct (no exchange of the multiplicity), oracle = EXISTS.
     "q54_customers_with_urgent" -> { (s, dir) =>
       import s.implicits._
-      val cust = s.read.parquet(p(dir, "customer"))
-      val orders = s.read.parquet(p(dir, "orders"))
+      val cust = Tables.read(s, dir, "customer")
+      val orders = Tables.read(s, dir, "orders")
         .filter($"o_orderpriority" === "1-URGENT" && $"o_totalprice" > 100000.0)
       cust.join(orders, $"c_custkey" === $"o_custkey", "left_semi")
         .select($"c_custkey", $"c_name", $"c_mktsegment")
@@ -85,7 +83,7 @@ object RelationalQueries {
     // are epoch-derived, replayed with epoch_ms integer arithmetic.
     "q55_tumbling_windows" -> { (s, dir) =>
       import s.implicits._
-      graft.streaming.DocStream.eventWindowCounts(s.read.parquet(p(dir, "events")))
+      graft.streaming.DocStream.eventWindowCounts(Tables.read(s, dir, "events"))
         .orderBy($"w_start_ms", $"event_type")
     },
 
@@ -95,7 +93,7 @@ object RelationalQueries {
     // corpus scale). Oracle = portable conditional aggregation.
     "q89_pivot_hourly" -> { (s, dir) =>
       import s.implicits._
-      s.read.parquet(p(dir, "events"))
+      Tables.read(s, dir, "events")
         .select(hour($"ts".cast("timestamp")).cast("bigint").as("hr"), $"event_type")
         .groupBy($"hr")
         .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
@@ -114,9 +112,9 @@ object RelationalQueries {
     // order — EXCEPT over projected key sets (q05 covers INTERSECT).
     "q90_except_customers" -> { (s, dir) =>
       import s.implicits._
-      val cust = s.read.parquet(p(dir, "customer"))
+      val cust = Tables.read(s, dir, "customer")
         .filter($"c_mktsegment" === "AUTOMOBILE").select($"c_custkey".as("k"))
-      val urgent = s.read.parquet(p(dir, "orders"))
+      val urgent = Tables.read(s, dir, "orders")
         .filter($"o_orderpriority" === "1-URGENT").select($"o_custkey".as("k"))
       cust.except(urgent).orderBy($"k")
     },
@@ -130,7 +128,7 @@ object RelationalQueries {
     "q91_typed_variance" -> { (s, dir) =>
       import s.implicits._
       val agg = udaf(graft.functions.CentsVariance)
-      val d = s.read.parquet(p(dir, "orders"))
+      val d = Tables.read(s, dir, "orders")
         .select($"o_orderpriority",
                 round($"o_totalprice", 0).cast("bigint").as("dollars"))
         .groupBy($"o_orderpriority")
@@ -147,7 +145,7 @@ object RelationalQueries {
     // disambiguates NULL-as-subtotal from NULL data in both engines.
     "q92_rollup_orders" -> { (s, dir) =>
       import s.implicits._
-      s.read.parquet(p(dir, "orders"))
+      Tables.read(s, dir, "orders")
         .select($"o_orderpriority", $"o_orderstatus",
                 round($"o_totalprice" * 100, 0).cast("bigint").as("cents"))
         .rollup($"o_orderpriority", $"o_orderstatus")
@@ -165,7 +163,7 @@ object RelationalQueries {
       import s.implicits._
       val w = Window.partitionBy($"event_type")
         .orderBy($"cents", $"event_id")
-      val ranked = s.read.parquet(p(dir, "events"))
+      val ranked = Tables.read(s, dir, "events")
         .select($"event_type", $"event_id",
                 round($"value" * 100, 0).cast("bigint").as("cents"))
         .withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -186,7 +184,7 @@ object RelationalQueries {
     // keep avg division deterministic.
     "q88_rolling_window" -> { (s, dir) =>
       import s.implicits._
-      val ev = s.read.parquet(p(dir, "events"))
+      val ev = Tables.read(s, dir, "events")
         .select($"user_id", $"event_id",
                 unix_millis($"ts".cast("timestamp")).as("tms"),
                 round($"value" * 100, 0).cast("bigint").as("cents"))
@@ -208,7 +206,7 @@ object RelationalQueries {
     "q60_event_funnel" -> { (s, dir) =>
       import s.implicits._
       val day = 86400000L
-      val ev = s.read.parquet(p(dir, "events"))
+      val ev = Tables.read(s, dir, "events")
         .select($"user_id", $"event_type",
                 unix_millis($"ts".cast("timestamp")).as("tms"))
       val v = ev.filter($"event_type" === "view")
@@ -235,11 +233,11 @@ object RelationalQueries {
     // divides two already-aggregated BIGINTs so it replays bit-for-bit.
     "q08_market_share" -> { (s, dir) =>
       import s.implicits._
-      val li = s.read.parquet(p(dir, "lineitem"))
-      val part = s.read.parquet(p(dir, "part")).filter($"p_type" === "PROMO")
-      val supp = s.read.parquet(p(dir, "supplier"))
-      val nation = s.read.parquet(p(dir, "nation"))
-      val orders = s.read.parquet(p(dir, "orders"))
+      val li = Tables.read(s, dir, "lineitem")
+      val part = Tables.read(s, dir, "part").filter($"p_type" === "PROMO")
+      val supp = Tables.read(s, dir, "supplier")
+      val nation = Tables.read(s, dir, "nation")
+      val orders = Tables.read(s, dir, "orders")
       val rev = li
         .join(broadcast(part), $"l_partkey" === $"p_partkey")
         .join(broadcast(supp), $"l_suppkey" === $"s_suppkey")
@@ -261,11 +259,11 @@ object RelationalQueries {
     // supplier nation x order-year over parts named '%gear%'.
     "q09_product_profit" -> { (s, dir) =>
       import s.implicits._
-      val li = s.read.parquet(p(dir, "lineitem"))
-      val part = s.read.parquet(p(dir, "part")).filter($"p_name".like("%gear%"))
-      val supp = s.read.parquet(p(dir, "supplier"))
-      val nation = s.read.parquet(p(dir, "nation"))
-      val orders = s.read.parquet(p(dir, "orders"))
+      val li = Tables.read(s, dir, "lineitem")
+      val part = Tables.read(s, dir, "part").filter($"p_name".like("%gear%"))
+      val supp = Tables.read(s, dir, "supplier")
+      val nation = Tables.read(s, dir, "nation")
+      val orders = Tables.read(s, dir, "orders")
       val amountCents = round(
         ($"l_extendedprice" * (lit(1.0) - $"l_discount")
            - $"p_retailprice" * $"l_quantity" * 0.1) * 100, 0).cast("bigint")
@@ -280,8 +278,8 @@ object RelationalQueries {
 
     "q03_top_orders_per_segment" -> { (s, dir) =>
       import s.implicits._
-      val orders = s.read.parquet(p(dir, "orders"))
-      val cust = s.read.parquet(p(dir, "customer"))
+      val orders = Tables.read(s, dir, "orders")
+      val cust = Tables.read(s, dir, "customer")
       val w = Window.partitionBy($"c_mktsegment").orderBy($"o_totalprice".desc, $"o_orderkey")
       orders.join(broadcast(cust), $"o_custkey" === $"c_custkey")
         .withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -292,7 +290,7 @@ object RelationalQueries {
 
     "q04_top100_orders" -> { (s, dir) =>
       import s.implicits._
-      s.read.parquet(p(dir, "orders"))
+      Tables.read(s, dir, "orders")
         .orderBy($"o_totalprice".desc, $"o_orderkey")
         .limit(100)
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
@@ -300,7 +298,7 @@ object RelationalQueries {
 
     "q05_priority_intersect" -> { (s, dir) =>
       import s.implicits._
-      val orders = s.read.parquet(p(dir, "orders"))
+      val orders = Tables.read(s, dir, "orders")
       orders.filter($"o_orderpriority" === "1-URGENT").select($"o_custkey")
         .intersect(orders.filter($"o_orderpriority" === "5-LOW").select($"o_custkey"))
         .orderBy($"o_custkey")
@@ -312,7 +310,7 @@ object RelationalQueries {
     "q07_sessionize" -> { (s, dir) =>
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ms", $"event_id")
-      s.read.parquet(p(dir, "events"))
+      Tables.read(s, dir, "events")
         .withColumn("ms", unix_millis($"ts".cast("timestamp")))
         .withColumn("new_sess",
           when(lag($"ms", 1).over(w).isNull ||
@@ -328,7 +326,7 @@ object RelationalQueries {
 
     "q06_json_props" -> { (s, dir) =>
       import s.implicits._
-      s.read.parquet(p(dir, "events"))
+      Tables.read(s, dir, "events")
         .withColumn("k", get_json_object($"props", "$.k").cast("bigint"))
         .groupBy($"event_type")
         .agg(sum($"k").as("sum_k"), count($"k").as("n"))

@@ -29,8 +29,8 @@ object SourceQueries {
     * pure stage/task inflation with no parse to amortize it. */
   private def evBase(s: SparkSession, dir: String, wide: Boolean = true): DataFrame = {
     import s.implicits._
-    val raw = if (wide) Inputs.parquet(s, s"$dir/events.parquet")
-              else s.read.parquet(s"$dir/events.parquet")
+    val raw = if (wide) Tables.wide(s, dir, "events")
+              else Tables.read(s, dir, "events")
     raw
       .select($"event_id", $"ts")
       .withColumn("minx", lit(-76.0) + ($"event_id" % 40).cast("double") * 0.05)
@@ -282,7 +282,7 @@ object SourceQueries {
     "q84_zone_geometry" -> { (s, dir) =>
       import s.implicits._
       import graft.sources.GeoJson
-      val zonesSrc = s.read.parquet(s"$dir/nation.parquet")
+      val zonesSrc = Tables.read(s, dir, "nation")
         .select($"n_nationkey".cast("long").as("k"))
         .withColumn("x0", ($"k" % 5).cast("double") * 2.0)
         .withColumn("y0", floor($"k" / 5.0).cast("double") * 1.6)
@@ -345,7 +345,7 @@ object SourceQueries {
     // (degenerate AllowedValues interval + nilValue)
     "q66_wcs_describe" -> { (s, dir) =>
       import s.implicits._
-      val base = s.read.parquet(s"$dir/nation.parquet")
+      val base = Tables.read(s, dir, "nation")
         .select($"n_nationkey".cast("long").as("k"))
         .withColumn("x0", $"k" * 1000).withColumn("x1", $"k" * 1000 + 500)
         .withColumn("y0", $"k" * 2000).withColumn("y1", $"k" * 2000 + 800)
@@ -405,7 +405,7 @@ object SourceQueries {
       import s.implicits._
       import graft.model.TileGeometry
       import graft.sources.WcsCatalog
-      val base = s.read.parquet(s"$dir/nation.parquet")
+      val base = Tables.read(s, dir, "nation")
         .select($"n_nationkey".cast("long").as("k"))
       def summary(j: Int): Column = concat(
         lit("<wcs:CoverageSummary><wcs:CoverageId>ns__layer_"),
@@ -468,7 +468,7 @@ object SourceQueries {
       val Day = 86400000L
       def iso(ms: Column): Column =
         date_format(timestamp_millis(ms), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-      val base = s.read.parquet(s"$dir/nation.parquet")
+      val base = Tables.read(s, dir, "nation")
         .select($"n_nationkey".cast("long").as("k"))
         .withColumn("n", (lit(3) + $"k" % 5).cast("int"))
       val instantsXml = array_join(

@@ -93,7 +93,7 @@ object SpatialQueries {
     "q13_knn" -> { (s, dir) =>
       import s.implicits._
       val pts = Geo.docPoints(s, dir).select($"doc_id".as("id"), $"lon", $"lat")
-      val nation = s.read.parquet(s"$dir/nation.parquet")
+      val nation = Tables.read(s, dir, "nation")
       val k = $"n_nationkey".cast("long")
       val qs = nation.filter($"n_nationkey" < 10)
         .select(k.as("qid"), Geo.zoneCxCol(k).as("qx"), Geo.zoneCyCol(k).as("qy"))
@@ -107,7 +107,7 @@ object SpatialQueries {
     "q14_range_join" -> { (s, dir) =>
       import s.implicits._
       val day = 86400000L
-      val nation = s.read.parquet(s"$dir/nation.parquet")
+      val nation = Tables.read(s, dir, "nation")
       val k = $"n_nationkey".cast("long")
       val intervals = nation.select(
         k.as("interval_id"),
@@ -115,7 +115,7 @@ object SpatialQueries {
         .withColumn("t1", $"t0" + (($"interval_id" % 7) + 1) * day)
       val ibuckets = intervals.withColumn(
         "bucket", explode(sequence(floor($"t0" / day).cast("long"), floor($"t1" / day).cast("long"))))
-      val events = s.read.parquet(s"$dir/events.parquet")
+      val events = Tables.read(s, dir, "events")
         .withColumn("ms", unix_millis($"ts".cast("timestamp")))
         .withColumn("bucket", floor($"ms" / day).cast("long"))
       events.join(broadcast(ibuckets), "bucket")

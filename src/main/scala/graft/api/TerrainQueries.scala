@@ -284,7 +284,7 @@ object TerrainQueries {
                                   region, "elev")
         .withColumn("lon", lit(region.minX) + ($"cx" + 0.5) * lit(region.cellWidth))
         .withColumn("lat", lit(region.minY) + ($"cy" + 0.5) * lit(region.cellHeight))
-      val zonesSrc = s.read.parquet(s"$dir/nation.parquet")
+      val zonesSrc = Tables.read(s, dir, "nation")
         .select($"n_nationkey".cast("long").as("k"))
         .withColumn("x0", ($"k" % 5).cast("double") * 2.0)
         .withColumn("y0", floor($"k" / 5.0).cast("double") * 1.6)

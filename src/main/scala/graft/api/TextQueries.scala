@@ -44,7 +44,7 @@ object TextQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q30_dedup_exact" -> { (s, dir) =>
       import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .groupBy(md5($"text").as("text_hash"))
         .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
         .orderBy($"text_hash")
@@ -52,7 +52,7 @@ object TextQueries {
 
     "q31_token_stats" -> { (s, dir) =>
       import s.implicits._
-      Inputs.parquet(s, s"$dir/documents.parquet")
+      Tables.wide(s, dir, "documents")
         .withColumn("toks", split($"text", " "))
         .withColumn("n_tokens", size($"toks").cast("bigint"))
         // native count (graft_count_eq): size(filter(toks, _ === "the"))
@@ -70,7 +70,7 @@ object TextQueries {
 
     "q32_lang_profile" -> { (s, dir) =>
       import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .groupBy($"lang")
         .agg(
           count(lit(1)).as("n_docs"),
@@ -89,7 +89,7 @@ object TextQueries {
     // DuckDB oracle still replays the original formulation).
     "q33_minhash_sigs" -> { (s, dir) =>
       import s.implicits._
-      Inputs.parquet(s, s"$dir/documents.parquet")
+      Tables.wide(s, dir, "documents")
         .withColumn("mh4", graft.functions.GraftFunctions
           .minhash_sigs4(array_distinct(split($"text", " "))))
         .select(col("doc_id") +: (0 until 4).map(i =>
@@ -113,7 +113,7 @@ object TextQueries {
     // allocations (~4x on the sf0.1 corpus)
     "q35_fingerprint" -> { (s, dir) =>
       import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select(
           $"doc_id",
           substring(md5($"text"), 1, 16).as("fp_exact"),
@@ -141,7 +141,7 @@ object TextQueries {
       val scoredCols = langs.map { l =>
         graft.functions.GraftFunctions.langid_score($"toks", lit(s"$l|")).as(s"s_$l")
       }
-      val scored = Inputs.parquet(s, s"$dir/documents.parquet")
+      val scored = Tables.wide(s, dir, "documents")
         .withColumn("toks", split($"text", " "))
         .select(($"doc_id" +: $"lang".as("true_lang") +: scoredCols): _*)
       val best = langs.map(l => struct(col(s"s_$l").as("score"), lit(l).as("l")))
@@ -158,7 +158,7 @@ object TextQueries {
     // shape of a real BPE pre-tokenizer)
     "q39_token_bpe" -> { (s, dir) =>
       import s.implicits._
-      Inputs.parquet(s, s"$dir/documents.parquet")
+      Tables.wide(s, dir, "documents")
         .withColumn("units", expr("regexp_extract_all(text, '[a-z]+|[0-9]+', 0)"))
         .select(
           $"doc_id",
@@ -177,7 +177,7 @@ object TextQueries {
     "q45_quality_filter" -> { (s, dir) =>
       import s.implicits._
       val stops = Seq("the", "of", "and", "a", "to", "in", "is", "it")
-      Inputs.parquet(s, s"$dir/documents.parquet")
+      Tables.wide(s, dir, "documents")
         .withColumn("toks", split($"text", " "))
         .withColumn("n_tokens", size($"toks").cast("bigint"))
         .withColumn("stop_ratio",
@@ -202,7 +202,7 @@ object TextQueries {
     "q47_dataset_split" -> { (s, dir) =>
       import s.implicits._
       val c = substring(md5($"text"), 1, 1)
-      Inputs.parquet(s, s"$dir/documents.parquet")
+      Tables.wide(s, dir, "documents")
         .withColumn("split",
           when(c <= "b", "train").when(c <= "d", "val").otherwise("test"))
         .groupBy($"split")
@@ -221,7 +221,7 @@ object TextQueries {
     // pipeline (and the DuckDB oracle still replays the exploded form).
     "q36_simhash" -> { (s, dir) =>
       import s.implicits._
-      Inputs.parquet(s, s"$dir/documents.parquet")
+      Tables.wide(s, dir, "documents")
         .select($"doc_id",
           graft.functions.GraftFunctions.simhash16(split($"text", " ")).as("simhash"))
         .orderBy($"doc_id")
@@ -247,7 +247,7 @@ object TextQueries {
     // scale; no token list ever sits on the driver.
     "q59_oov_rate" -> { (s, dir) =>
       import s.implicits._
-      val toks = s.read.parquet(s"$dir/documents.parquet")
+      val toks = Tables.read(s, dir, "documents")
         .select($"doc_id", explode(split($"text", " ")).as("tok"))
         .localCheckpoint(true) // vocab build + probe both read it
       val vocab = toks.groupBy($"tok").agg(count(lit(1)).as("c"))
@@ -271,7 +271,7 @@ object TextQueries {
       import s.implicits._
       val norm = trim(regexp_replace(
         regexp_replace(lower($"text"), "[^a-z0-9 ]", ""), " +", " "))
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select($"doc_id", md5(norm).as("nhash"))
         .groupBy($"nhash")
         .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_members"))
@@ -290,7 +290,7 @@ object TextQueries {
     // mean keep everything (rate >= 1 makes the inequality vacuous).
     "q48_mixture_sample" -> { (s, dir) =>
       import s.implicits._
-      val docs = Inputs.parquet(s, s"$dir/documents.parquet")
+      val docs = Tables.wide(s, dir, "documents")
         .select($"doc_id", $"source", $"n_chars")
       val stats = docs.groupBy($"source").agg(count(lit(1)).as("n_s"))
       val tot = docs.agg(count(lit(1)).as("n"), countDistinct($"source").as("k"))
@@ -327,7 +327,7 @@ object TextQueries {
       val emailRe = "[a-z0-9]+@[a-z0-9]+[.][a-z]+"
       val phoneRe = "555-[0-9]{4}"
       val ipRe = "10[.][0-9]{1,3}[.]0[.][0-9]{1,3}"
-      val withPii = Inputs.parquet(s, s"$dir/documents.parquet")
+      val withPii = Tables.wide(s, dir, "documents")
         .withColumn("text2", concat(
           $"text", lit(" contact user"), $"doc_id",
           lit("@mail"), $"doc_id" % 7, lit(".com or 555-"),
@@ -360,7 +360,7 @@ object TextQueries {
     // per-doc state, linear at corpus scale.
     "q106_paragraph_dedup" -> { (s, dir) =>
       import s.implicits._
-      val paras = Inputs.parquet(s, s"$dir/documents.parquet")
+      val paras = Tables.wide(s, dir, "documents")
         .withColumn("toks", split($"text", " "))
         .withColumn("np", ceil(size($"toks") / 10.0).cast("int"))
         .select($"doc_id", posexplode(
@@ -411,7 +411,7 @@ object TextQueries {
       // over the full corpus — guide §2.4 (share one pass), VERDICT r5 #6.
       // The narrow frame (5 columns, no text) is what shuttles between
       // stages — heavy bytes are read once (§2.3).
-      val base = Inputs.parquet(s, s"$dir/documents.parquet")
+      val base = Tables.wide(s, dir, "documents")
         .withColumn("toks", split($"text", " "))
         .withColumn("n_tokens", size($"toks").cast("long"))
         .withColumn("n_distinct", size(array_distinct($"toks")).cast("long"))
@@ -466,7 +466,7 @@ object TextQueries {
       // is exactly adjacent-pair equality — TextKernelsSpec pins the
       // counts, and docs with < 2 tokens drop exactly like the empty
       // explode did). No checkpoint needed: nothing is read twice.
-      Inputs.parquet(s, s"$dir/documents.parquet")
+      Tables.wide(s, dir, "documents")
         .select($"doc_id",
           graft.functions.GraftFunctions.repetition_stats(split($"text", " ")).as("r"))
         .filter($"r.n_tokens" >= 2)
@@ -495,7 +495,7 @@ object TextQueries {
     // the rest of the plan is unchanged.
     "q49_decontaminate" -> { (s, dir) =>
       import s.implicits._
-      val toks = Inputs.parquet(s, s"$dir/documents.parquet")
+      val toks = Tables.wide(s, dir, "documents")
         .select($"doc_id", split($"text", " ").as("t"))
       val grams = toks.select($"doc_id",
         explode(when(size($"t") < 3, array().cast("array<string>"))
@@ -535,7 +535,7 @@ object TextQueries {
         .minLabel(pairs, "doc_a", "doc_b", edgesDistinct = true)
         .withColumnRenamed("id", "doc_id")
       val w = org.apache.spark.sql.expressions.Window.partitionBy($"cluster_id")
-      Inputs.parquet(s, s"$dir/documents.parquet").select($"doc_id")
+      Tables.wide(s, dir, "documents").select($"doc_id")
         .join(comp, Seq("doc_id"), "left")
         .select($"doc_id", coalesce($"lbl", $"doc_id").as("cluster_id"))
         .withColumn("cluster_size", count(lit(1)).over(w))
@@ -553,7 +553,7 @@ object TextQueries {
     // SMALL side here — pairs outnumber docs by ~1000x)
     // tsets sorted ONCE per doc so the refine uses the allocation-free
     // merge-walk Jaccard expression (graft_jaccard) per candidate pair
-    val docs = Inputs.parquet(s, s"$dir/documents.parquet")
+    val docs = Tables.wide(s, dir, "documents")
       .select($"doc_id", sort_array(array_distinct(split($"text", " "))).as("tset"))
       .localCheckpoint(true)
     // band signatures via the native one-pass expression (one md5 per

@@ -37,7 +37,7 @@ object InterleavedDocs {
   /** The interleaved docs DataFrame: (doc_id string, spans array<struct>). */
   def docs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.api.Inputs.parquet(spark, s"$dir/documents.parquet")
+    val base = graft.api.Tables.wide(spark, dir, "documents")
       .select($"doc_id".as("d"), split($"text", " ").as("toks"))
     val nspans = ceil(size($"toks") / 5.0).cast("int")
     base.select(
@@ -98,7 +98,7 @@ object InterleavedDocs {
     * is exactly `flatSpans.filter(kind)`. Output: (doc_id, d, span_idx). */
   private def spanIndicesOfKind(spark: SparkSession, dir: String, sel: Int): DataFrame = {
     import spark.implicits._
-    val base = graft.api.Inputs.parquet(spark, s"$dir/documents.parquet")
+    val base = graft.api.Tables.wide(spark, dir, "documents")
       .select($"doc_id".as("d"), size(split($"text", " ")).as("ntoks"))
     val nspans = ceil($"ntoks" / 5.0).cast("int")
     base.select(

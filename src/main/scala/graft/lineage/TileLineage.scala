@@ -3,6 +3,7 @@ package graft.lineage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Resumable per-tile materialization with lineage checkpoints — the
@@ -54,6 +55,11 @@ object TileLineage {
   val DataDir = "data"
   val LineageDir = "_lineage"
 
+  /** The commit records' schema, as `runResumable` writes them: declared on
+    * read-back so opening the log infers nothing. */
+  val LineageSchema: StructType = StructType.fromDDL(
+    "tile_id STRING, file STRING, rows BIGINT, file_bytes BIGINT, attempt INT, completed_at_ms BIGINT")
+
   final case class RunStats(tilesTotal: Long, tilesSkipped: Long, tilesWritten: Long, rowsWritten: Long)
 
   private def exists(spark: SparkSession, path: String): Boolean = {
@@ -66,7 +72,7 @@ object TileLineage {
     import spark.implicits._
     val path = s"$tableDir/$LineageDir"
     if (exists(spark, path))
-      spark.read.parquet(path).select($"tile_id").distinct()
+      spark.read.schema(LineageSchema).parquet(path).select($"tile_id").distinct()
     else
       spark.emptyDataset[String].toDF("tile_id")
   }
@@ -74,7 +80,7 @@ object TileLineage {
   /** The lineage log itself
     * (tile_id, file, rows, file_bytes, attempt, completed_at_ms). */
   def lineage(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(s"$tableDir/$LineageDir")
+    spark.read.schema(LineageSchema).parquet(s"$tableDir/$LineageDir")
 
   /** Read the materialized table back: the recursive data scan pruned to the
     * files the manifest has committed — orphans from killed runs are
@@ -138,7 +144,7 @@ object TileLineage {
       // containing file from a distributed scan of the run directory
       // (reading back what the job ACTUALLY wrote, not what it intended to)
       val now = System.currentTimeMillis()
-      val records = spark.read.parquet(runDir)
+      val records = spark.read.schema(toWrite.schema).parquet(runDir)
         .select($"tile_id",
                 col("_metadata.file_path").as("file"),
                 col("_metadata.file_size").as("file_bytes"))

@@ -68,7 +68,13 @@ object ConnectedComponents {
    *         (coalesce(lbl, id) after a left join).
    */
   def minLabel(edges: DataFrame, aCol: String, bCol: String,
-               maxRounds: Int = 64, edgesDistinct: Boolean = false): DataFrame = {
+               maxRounds: Int = 64, edgesDistinct: Boolean = false): DataFrame =
+    minLabelContracted(edges, aCol, bCol, maxRounds, edgesDistinct, ContractEdgesPerPart)
+
+  /** [[minLabel]] with the contraction's edges per partition as a parameter,
+    * so a small graph can take the multi-partition path under test. */
+  private[operators] def minLabelContracted(edges: DataFrame, aCol: String, bCol: String,
+      maxRounds: Int, edgesDistinct: Boolean, edgesPerPart: Long): DataFrame = {
     val e0 = edges.select(col(aCol).as("u"), col(bCol).as("v")).na.drop()
     // symmetric, deduplicated edge list — reused verbatim every round.
     // edgesDistinct: the caller guarantees distinct oriented pairs (a < b),
@@ -84,12 +90,31 @@ object ConnectedComponents {
     if (!isLong) return loopLabels(sym, maxRounds)
 
     // ---- partition-local contraction (long ids) ----
-    val spark = sym.sparkSession
-    import spark.implicits._
     val nSym = sym.count() // materializes the lazy leaf and counts, one job
     if (nSym == 0L) return loopLabels(sym, maxRounds)
+    val c = contract(sym, nSym, edgesPerPart)
+    val spark = sym.sparkSession
+    import spark.implicits._
+    val rootLbl = loopLabels(c.bridges, maxRounds)
+    // compose: a node's label is the component label of any of its local
+    // roots (they all share one); roots without bridge edges label
+    // themselves. min() collapses the per-partition rows per node.
+    materializedLeaf(
+      c.localMap.join(rootLbl.select($"id".as("root"), $"lbl".as("rl")), Seq("root"), "left")
+        .groupBy($"id")
+        .agg(min(coalesce($"rl", $"root")).as("lbl")))
+  }
+
+  /** The partition-local contraction of a materialized symmetric long edge
+    * frame with `nSym` rows: the partition count it ran at, each partition's
+    * (id, local root) map, and the symmetric bridge edges between roots. */
+  private[operators] final case class Contraction(parts: Int, localMap: DataFrame, bridges: DataFrame)
+
+  private[operators] def contract(sym: DataFrame, nSym: Long, edgesPerPart: Long): Contraction = {
+    val spark = sym.sparkSession
+    import spark.implicits._
     val parts = math.max(1L, math.min(sym.rdd.getNumPartitions.toLong,
-      (nSym + ContractEdgesPerPart - 1) / ContractEdgesPerPart)).toInt
+      (nSym + edgesPerPart - 1) / edgesPerPart)).toInt
     // one pass per partition: in-memory union-find with the MIN id as
     // representative; emits (id, local root) for every node the partition
     // saw. Deterministic: partition contents are deterministic and the
@@ -127,16 +152,8 @@ object ConnectedComponents {
     val bridge = localMap.join(minRoot, "id")
       .filter($"root" =!= $"r0")
       .select($"r0".as("u"), $"root".as("v"))
-    val symBridge = materializedLeafLazy(
-      bridge.union(bridge.select($"v".as("u"), $"u".as("v"))).distinct())
-    val rootLbl = loopLabels(symBridge, maxRounds)
-    // compose: a node's label is the component label of any of its local
-    // roots (they all share one); roots without bridge edges label
-    // themselves. min() collapses the per-partition rows per node.
-    materializedLeaf(
-      localMap.join(rootLbl.select($"id".as("root"), $"lbl".as("rl")), Seq("root"), "left")
-        .groupBy($"id")
-        .agg(min(coalesce($"rl", $"root")).as("lbl")))
+    Contraction(parts, localMap, materializedLeafLazy(
+      bridge.union(bridge.select($"v".as("u"), $"u".as("v"))).distinct()))
   }
 
   /** The global min-label + pointer-jump loop over a MATERIALIZED symmetric

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.api.Tables
+
 /**
  * Structured Streaming surface. The reference itself has NO streaming
  * (SURVEY.md §2.9 — batch/pull only); this module exists because a
@@ -27,7 +29,7 @@ object DocStream {
     * single parquet file — stage it into a per-sf temp directory once
     * (a real deployment streams an arriving-files directory anyway). */
   def readDocs(spark: SparkSession, dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
+    val src = java.nio.file.Paths.get(Tables.path(dir, "documents"))
     val staged = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft_stream", dir.replaceAll("[^A-Za-z0-9]", "_"))
     java.nio.file.Files.createDirectories(staged)
@@ -37,7 +39,7 @@ object DocStream {
     java.nio.file.Files.copy(src, dst,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     spark.readStream
-      .schema(spark.read.parquet(src.toString).schema)
+      .schema(Tables.schema(spark, dir, "documents"))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged.toString)
       .withColumn("event_time",
@@ -52,7 +54,7 @@ object DocStream {
     * triggers — is only exercised with more than one batch. */
   def readDocsSplit(spark: SparkSession, dir: String, parts: Int): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
+    val src = java.nio.file.Paths.get(Tables.path(dir, "documents"))
     // FixtureStage (stage-once, atomic-rename commit); the key STAMPS the
     // source file (size + mtime) so a regenerated corpus auto-invalidates
     // the split instead of silently serving stale batches
@@ -61,7 +63,7 @@ object DocStream {
     val name = "stream_split_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
       s"_${parts}_$stamp"
     val staged = graft.api.FixtureStage.stage(name, version = 1) { out =>
-      val docs = spark.read.parquet(src.toString)
+      val docs = Tables.read(spark, dir, "documents")
       (0 until parts).foreach { i =>
         val tmp = java.nio.file.Files.createTempDirectory("graft_split")
         docs.filter(col("doc_id") % parts === i)
@@ -84,7 +86,7 @@ object DocStream {
       }
     }
     spark.readStream
-      .schema(spark.read.parquet(src.toString).schema)
+      .schema(Tables.schema(spark, dir, "documents"))
       .option("maxFilesPerTrigger", "1")
       .option("latestFirst", "false")
       .parquet(staged)
@@ -93,14 +95,14 @@ object DocStream {
   /** The events table as a file stream (same staging pattern as
     * [[readDocs]]: one parquet file copied into a dedicated source dir). */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
+    val src = java.nio.file.Paths.get(Tables.path(dir, "events"))
     val staged = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft_stream_ev", dir.replaceAll("[^A-Za-z0-9]", "_"))
     java.nio.file.Files.createDirectories(staged)
     java.nio.file.Files.copy(src, staged.resolve("part-00000.parquet"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     spark.readStream
-      .schema(spark.read.parquet(src.toString).schema)
+      .schema(Tables.schema(spark, dir, "events"))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged.toString)
   }

@@ -7,17 +7,18 @@ import graft.functions.GraftFunctions
  * End-to-end smoke: drives the library through its public surface
  * (Column API + SQL registration) on a real local SparkSession, over the
  * driver-provided testdata. Prints results and the physical plan so the
- * codegen path is observable. Run: sbt "runMain graft.tools.Smoke"
+ * codegen path is observable. Run: sbt "runMain graft.tools.Smoke <sf dir>"
  */
 object Smoke {
   def main(args: Array[String]): Unit = {
+    val dir = args.headOption.getOrElse(sys.error("usage: Smoke <sf dir>"))
     val spark = graft.LocalSpark(4)
     import spark.implicits._
     GraftFunctions.register(spark)
 
     // points derived deterministically from the docs table (public surface:
     // read parquet -> derive lon/lat -> graft_cell_id via Column API)
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = graft.api.Tables.read(spark, dir, "documents")
     val pts = docs.select(
       $"doc_id",
       (lit(-75.2281407807369) + ($"doc_id" * 7919 % 100000) / 100000.0 * lit(2.557067871094)).as("lon"),
@@ -51,10 +52,10 @@ object Smoke {
     println("== typed facade (GraftOps) ==")
     locally {
       import graft.api.GraftOps._
-      val zones = graft.api.Geo.zones(spark, "/root/testdata/sf0.001")
+      val zones = graft.api.Geo.zones(spark, dir)
         .select($"zone_id", $"ring")
       val joined = graft.extract.InterleavedDocs
-        .typedDocs(spark, "/root/testdata/sf0.001")
+        .typedDocs(spark, dir)
         .geoSpans
         .withCell(level = 12)
         .drop("cell")

@@ -7,16 +7,17 @@ import graft.streaming.DocStream
 
 /** Streaming surface demo: the docs corpus split into 3 arriving files ->
   * 3 micro-batches; stateful dedup must carry first-seen state across
-  * batches. Run: sbt "runMain graft.tools.StreamDemo" */
+  * batches. Run: sbt "runMain graft.tools.StreamDemo <sf dir>" */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
+    val dir = args.headOption.getOrElse(sys.error("usage: StreamDemo <sf dir>"))
     val spark = graft.LocalSpark(4)
     import spark.implicits._
 
     // stage 3 arriving files (split by doc_id ranges so later batches
     // contain duplicates of earlier batches' texts)
     val stage = java.nio.file.Files.createTempDirectory("graft_stream_demo").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = graft.api.Tables.read(spark, dir, "documents")
     Seq((0, 170), (170, 340), (340, 500)).zipWithIndex.foreach { case ((lo, hi), i) =>
       docs.filter($"doc_id" >= lo && $"doc_id" < hi)
         .coalesce(1).write.parquet(s"$stage/batch$i")
