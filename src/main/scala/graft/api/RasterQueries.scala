@@ -566,7 +566,7 @@ object RasterQueries {
       s"${name}_" + FixtureStage.contentStamp(Tables.path(dir, "nation")), version = 1) { out =>
       nationKeys(s, dir).foreach(k => write(k, new java.io.File(out, f"item-$k%03d.tif")))
     }
-    s.read.format("binaryFile").load(stagePath + "/*.tif")
+    s.read.format("binaryFile").option("pathGlobFilter", "*.tif").load(stagePath)
       .select($"path", $"content").as[(String, Array[Byte])]
       .map { case (path, bytes) =>
         val id = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".tif")

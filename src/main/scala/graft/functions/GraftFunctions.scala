@@ -3,61 +3,50 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{CellIdExpr, ColumnShim, CountEqExpr, CountInExpr, DotDoubleExpr, DotLongExpr, HyperplaneBucketExpr, JaccardSortedExpr, LangidScoreExpr, MaxCharLenExpr, MinhashBandSigExpr, MinhashSigs4Expr, RepetitionStatsExpr, ShingleMinMd5Expr, Simhash16Expr, WindingContainsExpr}
+import org.apache.spark.sql.graft.{ColumnShim, GraftKernel}
 
 /**
- * Public Column/SQL facade over graft's native Catalyst expressions
- * (which live under org.apache.spark.sql.graft — see expressions.scala).
+ * Public Column/SQL facade over graft's native kernels (the table in
+ * org.apache.spark.sql.graft.GraftKernel — see expressions.scala).
  */
 object GraftFunctions {
 
+  private def call(name: String, cols: Column*): Column =
+    ColumnShim.column(GraftKernel(name, cols.map(ColumnShim.expression)))
+
   def cell_id(lon: Column, lat: Column, level: Column): Column =
-    ColumnShim.column(CellIdExpr(
-      ColumnShim.expression(lon), ColumnShim.expression(lat), ColumnShim.expression(level)))
+    call("graft_cell_id", lon, lat, level)
 
   def winding_contains(ring: Column, x: Column, y: Column): Column =
-    ColumnShim.column(WindingContainsExpr(
-      ColumnShim.expression(ring), ColumnShim.expression(x), ColumnShim.expression(y)))
+    call("graft_contains", ring, x, y)
 
-  def jaccard_sorted(a: Column, b: Column): Column =
-    ColumnShim.column(JaccardSortedExpr(ColumnShim.expression(a), ColumnShim.expression(b)))
+  def jaccard_sorted(a: Column, b: Column): Column = call("graft_jaccard", a, b)
 
-  def shingle_min_md5(toks: Column, k: Column): Column =
-    ColumnShim.column(ShingleMinMd5Expr(ColumnShim.expression(toks), ColumnShim.expression(k)))
+  def shingle_min_md5(toks: Column, k: Column): Column = call("graft_shingle_min_md5", toks, k)
 
   def hyperplane_bucket(v: Column, table: Column, planes: Column): Column =
-    ColumnShim.column(HyperplaneBucketExpr(
-      ColumnShim.expression(v), ColumnShim.expression(table), ColumnShim.expression(planes)))
+    call("graft_hyperplane_bucket", v, table, planes)
 
   def minhash_band_sig(tset: Column, band: Column): Column =
-    ColumnShim.column(MinhashBandSigExpr(ColumnShim.expression(tset), ColumnShim.expression(band)))
+    call("graft_minhash_band_sig", tset, band)
 
-  def simhash16(toks: Column): Column =
-    ColumnShim.column(Simhash16Expr(ColumnShim.expression(toks)))
+  def simhash16(toks: Column): Column = call("graft_simhash16", toks)
 
-  def dot_d(a: Column, b: Column): Column =
-    ColumnShim.column(DotDoubleExpr(ColumnShim.expression(a), ColumnShim.expression(b)))
+  def dot_d(a: Column, b: Column): Column = call("graft_dot", a, b)
 
-  def dot_l(a: Column, b: Column): Column =
-    ColumnShim.column(DotLongExpr(ColumnShim.expression(a), ColumnShim.expression(b)))
+  def dot_l(a: Column, b: Column): Column = call("graft_idot", a, b)
 
-  def count_eq(toks: Column, needle: Column): Column =
-    ColumnShim.column(CountEqExpr(ColumnShim.expression(toks), ColumnShim.expression(needle)))
+  def count_eq(toks: Column, needle: Column): Column = call("graft_count_eq", toks, needle)
 
-  def count_in(toks: Column, set: Column): Column =
-    ColumnShim.column(CountInExpr(ColumnShim.expression(toks), ColumnShim.expression(set)))
+  def count_in(toks: Column, set: Column): Column = call("graft_count_in", toks, set)
 
-  def langid_score(toks: Column, prefix: Column): Column =
-    ColumnShim.column(LangidScoreExpr(ColumnShim.expression(toks), ColumnShim.expression(prefix)))
+  def langid_score(toks: Column, prefix: Column): Column = call("graft_langid_score", toks, prefix)
 
-  def max_char_len(toks: Column): Column =
-    ColumnShim.column(MaxCharLenExpr(ColumnShim.expression(toks)))
+  def max_char_len(toks: Column): Column = call("graft_max_char_len", toks)
 
-  def repetition_stats(toks: Column): Column =
-    ColumnShim.column(RepetitionStatsExpr(ColumnShim.expression(toks)))
+  def repetition_stats(toks: Column): Column = call("graft_repetition", toks)
 
-  def minhash_sigs4(tset: Column): Column =
-    ColumnShim.column(MinhashSigs4Expr(ColumnShim.expression(tset)))
+  def minhash_sigs4(tset: Column): Column = call("graft_minhash_sigs4", tset)
 
   /** Cell cover of a WKB geometry (generator shape: explode the result).
     * JTS parse + cover runs once per geometry row, not per joined row. */
@@ -67,64 +56,19 @@ object GraftFunctions {
       graft.index.CellIndex.coverGeometry(geom, level)
     }
 
-  /** The SQL function surface as (identifier, info, builder) triples —
-    * shared by per-session [[register]] and the spark-submit-time
-    * [[graft.GraftExtensions]] injection. */
+  /** The SQL function surface as (identifier, info, builder) triples, one
+    * per [[GraftKernel.table]] row — shared by per-session [[register]] and
+    * the spark-submit-time [[graft.GraftExtensions]] injection. */
   private[graft] val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo,
-                                        Seq[Expression] => Expression)] = {
-    def arity(name: String, n: Int)(build: Seq[Expression] => Expression)
-             (exprs: Seq[Expression]): Expression = {
-      require(exprs.length == n,
-        s"$name requires $n arguments, got ${exprs.length}")
-      build(exprs)
+                                        Seq[Expression] => Expression)] =
+    GraftKernel.table.toSeq.map { case (name, sig) =>
+      val arity = sig.inputs.length
+      val build = (exprs: Seq[Expression]) => {
+        require(exprs.length == arity, s"$name requires $arity arguments, got ${exprs.length}")
+        GraftKernel(name, exprs)
+      }
+      (FunctionIdentifier(name), new ExpressionInfo(classOf[GraftKernel].getName, name), build)
     }
-    Seq(
-      (FunctionIdentifier("graft_cell_id"),
-       new ExpressionInfo(classOf[CellIdExpr].getName, "graft_cell_id"),
-       arity("graft_cell_id", 3)(e => CellIdExpr(e(0), e(1), e(2))) _),
-      (FunctionIdentifier("graft_contains"),
-       new ExpressionInfo(classOf[WindingContainsExpr].getName, "graft_contains"),
-       arity("graft_contains", 3)(e => WindingContainsExpr(e(0), e(1), e(2))) _),
-      (FunctionIdentifier("graft_jaccard"),
-       new ExpressionInfo(classOf[JaccardSortedExpr].getName, "graft_jaccard"),
-       arity("graft_jaccard", 2)(e => JaccardSortedExpr(e(0), e(1))) _),
-      (FunctionIdentifier("graft_shingle_min_md5"),
-       new ExpressionInfo(classOf[ShingleMinMd5Expr].getName, "graft_shingle_min_md5"),
-       arity("graft_shingle_min_md5", 2)(e => ShingleMinMd5Expr(e(0), e(1))) _),
-      (FunctionIdentifier("graft_hyperplane_bucket"),
-       new ExpressionInfo(classOf[HyperplaneBucketExpr].getName, "graft_hyperplane_bucket"),
-       arity("graft_hyperplane_bucket", 3)(e => HyperplaneBucketExpr(e(0), e(1), e(2))) _),
-      (FunctionIdentifier("graft_minhash_band_sig"),
-       new ExpressionInfo(classOf[MinhashBandSigExpr].getName, "graft_minhash_band_sig"),
-       arity("graft_minhash_band_sig", 2)(e => MinhashBandSigExpr(e(0), e(1))) _),
-      (FunctionIdentifier("graft_simhash16"),
-       new ExpressionInfo(classOf[Simhash16Expr].getName, "graft_simhash16"),
-       arity("graft_simhash16", 1)(e => Simhash16Expr(e(0))) _),
-      (FunctionIdentifier("graft_dot"),
-       new ExpressionInfo(classOf[DotDoubleExpr].getName, "graft_dot"),
-       arity("graft_dot", 2)(e => DotDoubleExpr(e(0), e(1))) _),
-      (FunctionIdentifier("graft_idot"),
-       new ExpressionInfo(classOf[DotLongExpr].getName, "graft_idot"),
-       arity("graft_idot", 2)(e => DotLongExpr(e(0), e(1))) _),
-      (FunctionIdentifier("graft_count_eq"),
-       new ExpressionInfo(classOf[CountEqExpr].getName, "graft_count_eq"),
-       arity("graft_count_eq", 2)(e => CountEqExpr(e(0), e(1))) _),
-      (FunctionIdentifier("graft_count_in"),
-       new ExpressionInfo(classOf[CountInExpr].getName, "graft_count_in"),
-       arity("graft_count_in", 2)(e => CountInExpr(e(0), e(1))) _),
-      (FunctionIdentifier("graft_langid_score"),
-       new ExpressionInfo(classOf[LangidScoreExpr].getName, "graft_langid_score"),
-       arity("graft_langid_score", 2)(e => LangidScoreExpr(e(0), e(1))) _),
-      (FunctionIdentifier("graft_max_char_len"),
-       new ExpressionInfo(classOf[MaxCharLenExpr].getName, "graft_max_char_len"),
-       arity("graft_max_char_len", 1)(e => MaxCharLenExpr(e(0))) _),
-      (FunctionIdentifier("graft_repetition"),
-       new ExpressionInfo(classOf[RepetitionStatsExpr].getName, "graft_repetition"),
-       arity("graft_repetition", 1)(e => RepetitionStatsExpr(e(0))) _),
-      (FunctionIdentifier("graft_minhash_sigs4"),
-       new ExpressionInfo(classOf[MinhashSigs4Expr].getName, "graft_minhash_sigs4"),
-       arity("graft_minhash_sigs4", 1)(e => MinhashSigs4Expr(e(0))) _))
-  }
 
   /** Register SQL names so `spark.sql("SELECT graft_cell_id(...)")` works. */
   def register(spark: SparkSession): Unit = {

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.util.Utils
 
 import graft.index.CellIndex
 
@@ -420,426 +423,128 @@ object AnnKernels {
 }
 
 /**
- * graft_hyperplane_bucket(v array<double>, table int, planes int) → long
- *
- * Random-hyperplane LSH signature as a native codegen'd expression — the
- * per-row cost of the q41/q42 embedding near-dup path (48 projections per
- * vector across 3 tables).
+ * `name(children)` as a codegen'd static call to the kernel that
+ * [[GraftKernel.table]] lists under `name`; any null argument gives null.
+ * Lives under org.apache.spark.sql because ExpectsInputTypes and
+ * AbstractDataType are private[sql].
  */
-case class HyperplaneBucketExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
+case class GraftKernel(name: String, children: Seq[Expression])
+    extends Expression with ExpectsInputTypes {
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType, containsNull = false), IntegerType, IntegerType)
-  override def dataType: DataType = LongType
+  @transient private lazy val sig = GraftKernel.table(name)
+
+  override def inputTypes: Seq[AbstractDataType] = sig.inputs
+  override def dataType: DataType = sig.result
+  override def nullable: Boolean = sig.nullableResult || children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_hyperplane_bucket"
+  override def prettyName: String = name
+  override protected def stringArgs: Iterator[Any] = children.iterator
 
-  override protected def nullSafeEval(v: Any, table: Any, planes: Any): Any =
-    AnnKernels.hyperplaneBucket(
-      v.asInstanceOf[ArrayData], table.asInstanceOf[Int], planes.asInstanceOf[Int])
+  @transient private lazy val method = Utils.classForName(sig.ownerName)
+    .getMethod(sig.method, sig.inputs.map(CodeGenerator.javaClass): _*)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, t, p) =>
-      s"org.apache.spark.sql.graft.AnnKernels.hyperplaneBucket($v, $t, $p)")
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression): HyperplaneBucketExpr =
-    copy(first = a, second = b, third = c)
-}
-
-/**
- * graft_count_eq(toks array<string>, needle string) → bigint
- *
- * Count of array elements equal to `needle` (see [[TextKernels.countEq]]) —
- * the q31 token-count hot loop.
- */
-case class CountEqExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false), StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_count_eq"
-
-  override protected def nullSafeEval(toks: Any, needle: Any): Any =
-    TextKernels.countEq(toks.asInstanceOf[ArrayData],
-      needle.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, s) =>
-      s"org.apache.spark.sql.graft.TextKernels.countEq($t, $s)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CountEqExpr =
-    copy(left = l, right = r)
-}
-
-/**
- * graft_count_in(toks array<string>, set array<string>) → bigint
- *
- * Count of array elements contained in the literal `set`
- * (see [[TextKernels.countIn]]) — the q45 stopword-ratio hot loop.
- */
-case class CountInExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false), ArrayType(StringType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_count_in"
-
-  override protected def nullSafeEval(toks: Any, set: Any): Any =
-    TextKernels.countIn(toks.asInstanceOf[ArrayData], set.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, s) =>
-      s"org.apache.spark.sql.graft.TextKernels.countIn($t, $s)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CountInExpr =
-    copy(left = l, right = r)
-}
-
-/**
- * graft_langid_score(toks array<string>, prefix string) → bigint
- *
- * The q38 language-marker count (see [[TextKernels.langidScore]]).
- */
-case class LangidScoreExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false), StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_langid_score"
-
-  override protected def nullSafeEval(toks: Any, prefix: Any): Any =
-    TextKernels.langidScore(toks.asInstanceOf[ArrayData],
-      prefix.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, p) =>
-      s"org.apache.spark.sql.graft.TextKernels.langidScore($t, $p)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): LangidScoreExpr =
-    copy(left = l, right = r)
-}
-
-/**
- * graft_max_char_len(toks array<string>) → bigint
- *
- * Max character length over a string array, 0 for empty
- * (see [[TextKernels.maxCharLen]]) — the q39 unit-length fold.
- */
-case class MaxCharLenExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_max_char_len"
-
-  override protected def nullSafeEval(toks: Any): Any =
-    TextKernels.maxCharLen(toks.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"org.apache.spark.sql.graft.TextKernels.maxCharLen($t)")
-
-  override protected def withNewChildInternal(c: Expression): MaxCharLenExpr =
-    copy(child = c)
-}
-
-/**
- * graft_repetition(toks array<string>)
- *   → struct<n_tokens int, n_distinct int, top_bigram_n bigint, n_bigrams bigint>
- *
- * The q52 repetition signals in one pass (see
- * [[TextKernels.repetitionStats]]) — replaces the bigram explode + two
- * aggregation exchanges + join with a single projection.
- */
-case class RepetitionStatsExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false))
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", IntegerType, nullable = true),
-    StructField("n_distinct", IntegerType, nullable = true),
-    StructField("top_bigram_n", LongType, nullable = true),
-    StructField("n_bigrams", LongType, nullable = true)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_repetition"
-
-  override protected def nullSafeEval(toks: Any): Any =
-    TextKernels.repetitionStats(toks.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"org.apache.spark.sql.graft.TextKernels.repetitionStats($t)")
-
-  override protected def withNewChildInternal(c: Expression): RepetitionStatsExpr =
-    copy(child = c)
-}
-
-/**
- * graft_minhash_sigs4(tset array<string>)
- *   → struct<sig1 string, sig2 string, sig3 string, sig4 string>
- *
- * The q33 4-window MinHash signature in one digest pass per token
- * (see [[TextKernels.minhashSigs4]]); null fields for an empty array.
- */
-case class MinhashSigs4Expr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false))
-  override def dataType: DataType = StructType(Seq(
-    StructField("sig1", StringType), StructField("sig2", StringType),
-    StructField("sig3", StringType), StructField("sig4", StringType)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_minhash_sigs4"
-
-  override protected def nullSafeEval(tset: Any): Any =
-    TextKernels.minhashSigs4(tset.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"org.apache.spark.sql.graft.TextKernels.minhashSigs4($t)")
-
-  override protected def withNewChildInternal(c: Expression): MinhashSigs4Expr =
-    copy(child = c)
-}
-
-/**
- * graft_dot(a array<double>, b array<double>) → double
- *
- * Equal-length dot product with the exact `aggregate(zip_with(...))` fold
- * order (see [[AnnKernels.dotD]]) — the per-row kernel of every ANN
- * assignment/refine (q40-q44, q97, q102/q103/q108, the q42 cosine refine).
- * The HOF formulation it replaces is CodegenFallback and allocates a zipped
- * array per evaluation; this is one codegen'd static call.
- */
-case class DotDoubleExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType, containsNull = false), ArrayType(DoubleType, containsNull = false))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    AnnKernels.dotD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.AnnKernels.dotD($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotDoubleExpr =
-    copy(left = l, right = r)
-}
-
-/**
- * graft_idot(a array<bigint>, b array<bigint>) → bigint
- *
- * Integer twin of graft_dot for quantized vectors (see [[AnnKernels.dotL]]).
- */
-case class DotLongExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType, containsNull = false), ArrayType(LongType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_idot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    AnnKernels.dotL(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.AnnKernels.dotL($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotLongExpr =
-    copy(left = l, right = r)
-}
-
-/**
- * graft_shingle_min_md5(tokens array<string>, k int) → string
- *
- * Document shingle fingerprint (the q35 hot loop): min MD5 over all k-token
- * shingles, one codegen'd static call per document instead of an interpreted
- * transform/slice/concat_ws pipeline that allocates per shingle.
- */
-case class ShingleMinMd5Expr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false), IntegerType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_shingle_min_md5"
-
-  override protected def nullSafeEval(toks: Any, k: Any): Any =
-    TextKernels.shingleMinMd5Hex(toks.asInstanceOf[ArrayData], k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (toks, k) =>
-      s"org.apache.spark.sql.graft.TextKernels.shingleMinMd5Hex($toks, $k)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ShingleMinMd5Expr =
-    copy(left = l, right = r)
-}
-
-/**
- * graft_simhash16(toks array<string>) → long
- *
- * One-pass 16-bit SimHash over the token multiset (see
- * [[TextKernels.simhash16]]) — replaces q36's explode + 16-sum groupBy
- * with a single codegen'd call per document (no shuffle in the plan).
- */
-case class Simhash16Expr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_simhash16"
-
-  override protected def nullSafeEval(toks: Any): Any =
-    TextKernels.simhash16(toks.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, toks =>
-      s"org.apache.spark.sql.graft.TextKernels.simhash16($toks)")
-
-  override protected def withNewChildInternal(c: Expression): Simhash16Expr =
-    copy(child = c)
-}
-
-/**
- * graft_minhash_band_sig(tset array<string>, band int) → string
- *
- * One band's 24-hex-char MinHash signature in a single digest pass per
- * token (see [[TextKernels.minhashBandSig]]) — the q37/q76 signature
- * projection hot loop. Returns null for an empty token array (matching the
- * concat-of-null-array_mins it replaces); null inputs propagate null.
- */
-case class MinhashBandSigExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false), IntegerType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_minhash_band_sig"
-
-  override protected def nullSafeEval(tset: Any, band: Any): Any =
-    TextKernels.minhashBandSig(tset.asInstanceOf[ArrayData], band.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = "org.apache.spark.sql.graft.TextKernels.minhashBandSig"
-    nullSafeCodeGen(ctx, ev, (tset, band) =>
-      s"""
-         |${ev.value} = $f($tset, $band);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[AnyRef](children.length)
+    var i = 0
+    while (i < args.length) {
+      val v = children(i).eval(input)
+      if (v == null) return null
+      args(i) = v.asInstanceOf[AnyRef]
+      i += 1
+    }
+    method.invoke(null, args: _*)
   }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MinhashBandSigExpr =
-    copy(left = l, right = r)
-}
-
-/**
- * graft_cell_id(lon, lat, level) → long
- *
- * Z-order cell encoding as a native Catalyst expression with whole-stage
- * codegen (a static call into [[CellIndex.cellId]] — no boxing, no closure).
- * This sits in the innermost loop of the spatial join (one call per candidate
- * row at 10^12 scale), the one place custom codegen pays (SURVEY.md §4).
- * Lives under org.apache.spark.sql because ExpectsInputTypes/AbstractDataType
- * are private[sql].
- */
-case class CellIdExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_cell_id"
-
-  override protected def nullSafeEval(lon: Any, lat: Any, level: Any): Any =
-    CellIndex.cellId(lon.asInstanceOf[Double], lat.asInstanceOf[Double], level.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat, level) =>
-      s"graft.index.CellIndex.cellId($lon, $lat, $level)")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val args = children.map(_.genCode(ctx))
+    val call = s"${ev.value} = ${sig.ownerName}.${sig.method}(${args.map(_.value).mkString(", ")});" +
+      (if (sig.nullableResult) s"\n${ev.isNull} = (${ev.value} == null);" else "")
+    val decl = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+      s"${CodeGenerator.defaultValue(dataType)};"
+    if (nullable) {
+      val guarded = children.zip(args).foldRight(s"${ev.isNull} = false;\n$call") {
+        case ((c, a), inner) => s"${a.code}\n${ctx.nullSafeExec(c.nullable, a.isNull)(inner)}"
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $decl
+        $guarded""")
+    } else {
+      ev.copy(code = code"""
+        ${args.map(_.code).mkString("\n")}
+        $decl
+        $call""", isNull = FalseLiteral)
+    }
+  }
 
   override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): CellIdExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
+      newChildren: IndexedSeq[Expression]): GraftKernel = copy(children = newChildren)
 }
 
-/**
- * graft_contains(ring array<double>, x, y) → boolean
- *
- * Exact point-in-polygon refine (non-zero winding rule, boundary inclusive)
- * over a flat [x0,y0,x1,y1,...] exterior-ring array. Codegen'd static call;
- * runs per-row only after the cell-cover prefilter has cut candidates.
- */
-case class WindingContainsExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
+object GraftKernel {
+  /** A kernel's static `owner.method`, its argument and result types, and
+    * whether the kernel itself can return null. */
+  case class Signature(owner: Class[_], method: String, inputs: Seq[DataType],
+                       result: DataType, nullableResult: Boolean = false) {
+    def ownerName: String = owner.getName.stripSuffix("$")
+  }
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType, containsNull = false), DoubleType, DoubleType)
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_contains"
+  private val Doubles = ArrayType(DoubleType, containsNull = false)
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Strings = ArrayType(StringType, containsNull = false)
 
-  override protected def nullSafeEval(ring: Any, x: Any, y: Any): Any =
-    GeoKernels.windingContains(
-      ring.asInstanceOf[ArrayData],
-      x.asInstanceOf[Double], y.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (ring, x, y) =>
-      s"org.apache.spark.sql.graft.GeoKernels.windingContains($ring, $x, $y)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): WindingContainsExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/**
- * graft_jaccard(sorted_a array<string>, sorted_b array<string>) → double
- *
- * Exact Jaccard over two sorted distinct string arrays (merge walk, see
- * [[GeoKernels.jaccardSorted]]). Inputs MUST be sorted (sort_array over
- * array_distinct) — callers own that invariant; sorting once per document
- * beats hashing per pair by orders of magnitude at LSH-candidate scale.
- */
-case class JaccardSortedExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType, containsNull = false), ArrayType(StringType, containsNull = false))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_jaccard"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeoKernels.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.GeoKernels.jaccardSorted($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSortedExpr =
-    copy(left = l, right = r)
+  /** Every native kernel, keyed by its SQL name: the Column wrappers in
+    * `graft.functions.GraftFunctions`, its SQL registration and
+    * `graft.GraftExtensions` all read this table. */
+  val table: Map[String, Signature] = Map(
+    // spatial join's innermost loop: one call per candidate row (SURVEY.md §4)
+    "graft_cell_id" -> Signature(CellIndex.getClass, "cellId",
+      Seq(DoubleType, DoubleType, IntegerType), LongType),
+    // exact PIP refine (winding rule, boundary inclusive) after the cell-cover prefilter
+    "graft_contains" -> Signature(GeoKernels.getClass, "windingContains",
+      Seq(Doubles, DoubleType, DoubleType), BooleanType),
+    // LSH candidate refine; callers pass sort_array(array_distinct(...)) inputs
+    "graft_jaccard" -> Signature(GeoKernels.getClass, "jaccardSorted",
+      Seq(Strings, Strings), DoubleType),
+    // q35 fingerprint: replaces a per-shingle transform/slice/concat_ws pipeline
+    "graft_shingle_min_md5" -> Signature(TextKernels.getClass, "shingleMinMd5Hex",
+      Seq(Strings, IntegerType), StringType),
+    // q41/q42 embedding near-dup: 48 projections per vector across 3 tables
+    "graft_hyperplane_bucket" -> Signature(AnnKernels.getClass, "hyperplaneBucket",
+      Seq(Doubles, IntegerType, IntegerType), LongType),
+    // q37/q76 band signature; null for an empty array, as the concat of array_mins was
+    "graft_minhash_band_sig" -> Signature(TextKernels.getClass, "minhashBandSig",
+      Seq(Strings, IntegerType), StringType, nullableResult = true),
+    // q36: replaces the explode + 16-sum groupBy, so the plan has no shuffle
+    "graft_simhash16" -> Signature(TextKernels.getClass, "simhash16",
+      Seq(Strings), LongType),
+    // every ANN assignment/refine (q40-q44, q97, q102/q103/q108): replaces aggregate(zip_with)
+    "graft_dot" -> Signature(AnnKernels.getClass, "dotD",
+      Seq(Doubles, Doubles), DoubleType),
+    // q44's exact Lloyd arithmetic over quantized vectors
+    "graft_idot" -> Signature(AnnKernels.getClass, "dotL",
+      Seq(Longs, Longs), LongType),
+    // q31 token count: replaces size(filter(...)), whose ArrayFilter is CodegenFallback
+    "graft_count_eq" -> Signature(TextKernels.getClass, "countEq",
+      Seq(Strings, StringType), LongType),
+    // q45 stopword ratio against a small literal set
+    "graft_count_in" -> Signature(TextKernels.getClass, "countIn",
+      Seq(Strings, Strings), LongType),
+    // q38 language-marker count: one digest per token, no hex string
+    "graft_langid_score" -> Signature(TextKernels.getClass, "langidScore",
+      Seq(Strings, StringType), LongType),
+    // q39 unit-length fold: replaces aggregate(...), which is CodegenFallback
+    "graft_max_char_len" -> Signature(TextKernels.getClass, "maxCharLen",
+      Seq(Strings), LongType),
+    // q52: replaces the bigram explode + two aggregation exchanges + join
+    "graft_repetition" -> Signature(TextKernels.getClass, "repetitionStats",
+      Seq(Strings), StructType(Seq(
+        StructField("n_tokens", IntegerType), StructField("n_distinct", IntegerType),
+        StructField("top_bigram_n", LongType), StructField("n_bigrams", LongType)))),
+    // q33 4-window signature in one digest pass; null fields for an empty array
+    "graft_minhash_sigs4" -> Signature(TextKernels.getClass, "minhashSigs4",
+      Seq(Strings), StructType(Seq(
+        StructField("sig1", StringType), StructField("sig2", StringType),
+        StructField("sig3", StringType), StructField("sig4", StringType)))))
 }
