@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, Codegen
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.util.Utils
 
 import graft.index.CellIndex
 
@@ -441,19 +440,16 @@ case class GraftKernel(name: String, children: Seq[Expression])
   override def prettyName: String = name
   override protected def stringArgs: Iterator[Any] = children.iterator
 
-  @transient private lazy val method = Utils.classForName(sig.ownerName)
-    .getMethod(sig.method, sig.inputs.map(CodeGenerator.javaClass): _*)
-
+  // the interpreted path (CodegenFallback parents such as `transform`, or
+  // NO_CODEGEN): the row's typed kernel body, called directly
   override def eval(input: InternalRow): Any = {
-    val args = new Array[AnyRef](children.length)
-    var i = 0
-    while (i < args.length) {
-      val v = children(i).eval(input)
-      if (v == null) return null
-      args(i) = v.asInstanceOf[AnyRef]
-      i += 1
-    }
-    method.invoke(null, args: _*)
+    val a = children.head.eval(input)
+    if (a == null) return null
+    var b: Any = null
+    if (children.length > 1) { b = children(1).eval(input); if (b == null) return null }
+    var c: Any = null
+    if (children.length > 2) { c = children(2).eval(input); if (c == null) return null }
+    sig.body(a, b, c)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -483,12 +479,22 @@ case class GraftKernel(name: String, children: Seq[Expression])
 }
 
 object GraftKernel {
-  /** A kernel's static `owner.method`, its argument and result types, and
+  /** A kernel as `eval` calls it: its non-null arguments, unused ones null. */
+  type Body = (Any, Any, Any) => Any
+
+  /** A kernel's static `owner.method` (what generated code calls), its
+    * argument and result types, the same kernel as a typed [[Body]], and
     * whether the kernel itself can return null. */
   case class Signature(owner: Class[_], method: String, inputs: Seq[DataType],
-                       result: DataType, nullableResult: Boolean = false) {
+                       result: DataType, body: Body, nullableResult: Boolean = false) {
     def ownerName: String = owner.getName.stripSuffix("$")
   }
+
+  private def k1[A](f: A => Any): Body = (a, _, _) => f(a.asInstanceOf[A])
+  private def k2[A, B](f: (A, B) => Any): Body =
+    (a, b, _) => f(a.asInstanceOf[A], b.asInstanceOf[B])
+  private def k3[A, B, C](f: (A, B, C) => Any): Body =
+    (a, b, c) => f(a.asInstanceOf[A], b.asInstanceOf[B], c.asInstanceOf[C])
 
   private val Doubles = ArrayType(DoubleType, containsNull = false)
   private val Longs = ArrayType(LongType, containsNull = false)
@@ -500,51 +506,54 @@ object GraftKernel {
   val table: Map[String, Signature] = Map(
     // spatial join's innermost loop: one call per candidate row (SURVEY.md §4)
     "graft_cell_id" -> Signature(CellIndex.getClass, "cellId",
-      Seq(DoubleType, DoubleType, IntegerType), LongType),
+      Seq(DoubleType, DoubleType, IntegerType), LongType, k3(CellIndex.cellId)),
     // exact PIP refine (winding rule, boundary inclusive) after the cell-cover prefilter
     "graft_contains" -> Signature(GeoKernels.getClass, "windingContains",
-      Seq(Doubles, DoubleType, DoubleType), BooleanType),
+      Seq(Doubles, DoubleType, DoubleType), BooleanType, k3(GeoKernels.windingContains)),
     // LSH candidate refine; callers pass sort_array(array_distinct(...)) inputs
     "graft_jaccard" -> Signature(GeoKernels.getClass, "jaccardSorted",
-      Seq(Strings, Strings), DoubleType),
+      Seq(Strings, Strings), DoubleType, k2(GeoKernels.jaccardSorted)),
     // q35 fingerprint: replaces a per-shingle transform/slice/concat_ws pipeline
     "graft_shingle_min_md5" -> Signature(TextKernels.getClass, "shingleMinMd5Hex",
-      Seq(Strings, IntegerType), StringType),
+      Seq(Strings, IntegerType), StringType, k2(TextKernels.shingleMinMd5Hex)),
     // q41/q42 embedding near-dup: 48 projections per vector across 3 tables
     "graft_hyperplane_bucket" -> Signature(AnnKernels.getClass, "hyperplaneBucket",
-      Seq(Doubles, IntegerType, IntegerType), LongType),
+      Seq(Doubles, IntegerType, IntegerType), LongType, k3(AnnKernels.hyperplaneBucket)),
     // q37/q76 band signature; null for an empty array, as the concat of array_mins was
     "graft_minhash_band_sig" -> Signature(TextKernels.getClass, "minhashBandSig",
-      Seq(Strings, IntegerType), StringType, nullableResult = true),
+      Seq(Strings, IntegerType), StringType, k2(TextKernels.minhashBandSig),
+      nullableResult = true),
     // q36: replaces the explode + 16-sum groupBy, so the plan has no shuffle
     "graft_simhash16" -> Signature(TextKernels.getClass, "simhash16",
-      Seq(Strings), LongType),
+      Seq(Strings), LongType, k1(TextKernels.simhash16)),
     // every ANN assignment/refine (q40-q44, q97, q102/q103/q108): replaces aggregate(zip_with)
     "graft_dot" -> Signature(AnnKernels.getClass, "dotD",
-      Seq(Doubles, Doubles), DoubleType),
+      Seq(Doubles, Doubles), DoubleType, k2(AnnKernels.dotD)),
     // q44's exact Lloyd arithmetic over quantized vectors
     "graft_idot" -> Signature(AnnKernels.getClass, "dotL",
-      Seq(Longs, Longs), LongType),
+      Seq(Longs, Longs), LongType, k2(AnnKernels.dotL)),
     // q31 token count: replaces size(filter(...)), whose ArrayFilter is CodegenFallback
     "graft_count_eq" -> Signature(TextKernels.getClass, "countEq",
-      Seq(Strings, StringType), LongType),
+      Seq(Strings, StringType), LongType, k2(TextKernels.countEq)),
     // q45 stopword ratio against a small literal set
     "graft_count_in" -> Signature(TextKernels.getClass, "countIn",
-      Seq(Strings, Strings), LongType),
+      Seq(Strings, Strings), LongType, k2(TextKernels.countIn)),
     // q38 language-marker count: one digest per token, no hex string
     "graft_langid_score" -> Signature(TextKernels.getClass, "langidScore",
-      Seq(Strings, StringType), LongType),
+      Seq(Strings, StringType), LongType, k2(TextKernels.langidScore)),
     // q39 unit-length fold: replaces aggregate(...), which is CodegenFallback
     "graft_max_char_len" -> Signature(TextKernels.getClass, "maxCharLen",
-      Seq(Strings), LongType),
+      Seq(Strings), LongType, k1(TextKernels.maxCharLen)),
     // q52: replaces the bigram explode + two aggregation exchanges + join
     "graft_repetition" -> Signature(TextKernels.getClass, "repetitionStats",
       Seq(Strings), StructType(Seq(
         StructField("n_tokens", IntegerType), StructField("n_distinct", IntegerType),
-        StructField("top_bigram_n", LongType), StructField("n_bigrams", LongType)))),
+        StructField("top_bigram_n", LongType), StructField("n_bigrams", LongType))),
+      k1(TextKernels.repetitionStats)),
     // q33 4-window signature in one digest pass; null fields for an empty array
     "graft_minhash_sigs4" -> Signature(TextKernels.getClass, "minhashSigs4",
       Seq(Strings), StructType(Seq(
         StructField("sig1", StringType), StructField("sig2", StringType),
-        StructField("sig3", StringType), StructField("sig4", StringType)))))
+        StructField("sig3", StringType), StructField("sig4", StringType))),
+      k1(TextKernels.minhashSigs4)))
 }

@@ -49,6 +49,37 @@ class DotProductSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("graft_dot and graft_idot in generated code equal the folds") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val rows = (0 until 50).map { i =>
+      val n = if (i == 0) 0 else 64
+      (Array.fill(n)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(7) - 3)),
+       Array.fill(n)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(7) - 3)),
+       Array.fill(n)(rnd.nextLong() % 3000000L), Array.fill(n)(rnd.nextLong() % 3000000L))
+    }
+    // an RDD source: a Project over a local relation is folded on the
+    // driver by the interpreted path and never reaches generated code
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("a", "b", "la", "lb")
+    val confs = Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+                    "spark.sql.codegen.fallback" -> "false")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = df.select(
+        aggregate(zip_with($"a", $"b", (x, y) => x * y), lit(0.0), (acc, x) => acc + x),
+        graft.functions.GraftFunctions.dot_d($"a", $"b"),
+        aggregate(zip_with($"la", $"lb", (x, y) => x * y), lit(0L), (acc, x) => acc + x),
+        graft.functions.GraftFunctions.dot_l($"la", $"lb"))
+      assert(q.queryExecution.executedPlan.collect {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }.nonEmpty)
+      q.collect().foreach { r =>
+        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
+               java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r)
+        assert(r.getLong(2) == r.getLong(3), r)
+      }
+    } finally confs.keys.foreach(spark.conf.unset)
+  }
+
   test("null input propagates null; SQL registration works") {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
