@@ -19,22 +19,21 @@ import org.apache.spark.sql.expressions.Window
  *    the within-bucket self-join stays linear-ish at 10^12 rows, where the
  *    earlier single 8-bit table (256 buckets) was quadratic.
  *  - q43: IVF ANN with a deterministic ladder codebook. Centroid assignment
- *    is ONE projection — all 16 centroid dots per row from a literal
- *    array<array<double>>, struct-sorted argmax — zero shuffle, no crossJoin,
- *    no Window (the earlier crossJoin(16)+Window plan moved 16x the embedding
- *    volume through an exchange to compute a per-row argmax).
+ *    ([[assignProbes]], shared by every IVF query) is ONE projection — all
+ *    16 centroid dots per row against a broadcast codebook, bounded top-k —
+ *    zero shuffle, no crossJoin, no Window (the earlier crossJoin(16)+Window
+ *    plan moved 16x the embedding volume through an exchange to compute a
+ *    per-row argmax).
  *  - q44: IVF with a TRAINED codebook — one exact integer-quantized Lloyd
  *    iteration (assign to ladder init, per-cluster integer-mean update)
  *    whose arithmetic the DuckDB oracle replays bit-for-bit; then the same
  *    zero-shuffle assignment and nprobe search as q43.
- *  - q97: BROADCAST codebook at K=4096 (plan size O(1) in K; bounded
- *    top-nprobe heap in the assignment UDF).
+ *  - q97: the same assignment at K=4096 (plan size O(1) in K).
  *  - q102: multi-assignment (top-2 homes) + exact dense-rank re-rank — the
  *    recall-recovery stage: 83% recall@3 at the same 25% probe fraction
  *    where q43 measures 47% (graft.tools.AnnRecall, sf0.01).
- *  - q103: TRAINED broadcast codebook at K=1024 — q44's exact Lloyd pass
- *    with the assignment riding the q97 broadcast UDF on both the train
- *    and serve passes.
+ *  - q103: TRAINED codebook at K=1024 — q44's exact Lloyd pass at the q97
+ *    scale, on both the train and serve passes.
  *  - q108: the production composition — trained K=1024 broadcast codebook
  *    + top-2 multi-assignment + dense-rank re-rank at 25% probe.
  *
@@ -43,19 +42,16 @@ import org.apache.spark.sql.expressions.Window
  */
 object AnnQueries {
 
-  // Native codegen'd dot products (expressions.scala). Bit-identical to the
+  // Native codegen'd dot product (expressions.scala) for the norms and
+  // cosine refines. Bit-identical to the
   // `aggregate(zip_with(a, b, (x, y) => x * y), 0, (acc, x) => acc + x)`
-  // formulation they replaced (same left-to-right IEEE fold — pinned by
+  // formulation it replaced (same left-to-right IEEE fold — pinned by
   // DotProductSpec), but ONE static call per row: the HOF chain is
   // CodegenFallback and allocated a zipped array + boxed accumulator per
   // evaluation, which dominated every ANN query's task CPU (q43 measured
   // ~30 task-sec for 5 s of real work at sf0.1).
   private def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.dot_d(a, b)
-
-  /** Integer dot product (exact — no float associativity concerns). */
-  private def idot(a: Column, b: Column): Column =
-    graft.functions.GraftFunctions.dot_l(a, b)
 
   val NumTables = 3
   val PlanesPerTable = 16
@@ -91,8 +87,9 @@ object AnnQueries {
     * at an integer scale (~5e5) commensurate with IvfQuant-quantized
     * vectors, so one exact Lloyd iteration trains it. All dot products stay
     * below 2^53 (|q| <= ~3e6, |w| <= ~3e6, 64 dims -> < 6e14), so the
-    * broadcast path's double accumulation is EXACT integer arithmetic —
-    * the bit-equality the oracle compare and AnnEquivalenceSpec rely on. */
+    * assignment's double accumulation is EXACT integer arithmetic — the
+    * bit-equality the oracle compare and AnnEquivalenceSpec rely on. The
+    * same bound holds for q44's K=8 codebook, initial and trained. */
   val BigIvfK = 1024
   private[graft] val BigIntInit: Seq[Seq[Long]] =
     (0 until BigIvfK).map(c => (0 until 64).map(d =>
@@ -107,49 +104,24 @@ object AnnQueries {
     (0 until BigK).map(c => (0 until 64).map(d =>
       (((c.toLong * 2654435761L + d * 40503L) % 8191L) - 4095L).toDouble / 4095.0))
 
-  // typedLit, not array(array(lit...)): a K x 64 codebook as nested
-  // CreateArray trees is ~1000 Literal nodes that janino compiles cold on
-  // every fresh JVM (seconds of codegen for q43/q44 under the driver's
-  // one-shot bench); typedLit is ONE Literal carrying the ArrayData value —
-  // same semantics, constant plan size. This is also the structural story
-  // for large K: the codebook enters the plan as a single broadcast value,
-  // not as an expression tree that grows with K.
-  private def centArrayLit(cents: Seq[Seq[Double]]): Column = typedLit(cents)
-
-  private def centArrayLitL(cents: Seq[Seq[Long]]): Column = typedLit(cents)
-
-  /** Zero-shuffle IVF assignment: per row, dots against every centroid in a
-    * literal codebook, struct-sorted (-dot, c) -> the nprobe best centroids.
-    * Output: (vec_id, v, vn, c, rk) with rk = 1..nprobe (rk 1 = home). */
-  private[graft] def assignProbes(emb: DataFrame, cents: Column, nprobe: Int,
-                                  dotFn: (Column, Column) => Column, vecCol: String): DataFrame = {
-    val probes = slice(array_sort(transform(cents, (w, c) =>
-      struct((-dotFn(col(vecCol), w)).as("negd"), c.cast("int").as("c")))), 1, nprobe)
-    emb.select(col("*"), posexplode(probes))
-      .withColumn("rk", col("pos") + 1)
-      .withColumn("c", col("col.c"))
-      .drop("pos", "col")
-  }
-
   /**
-   * Large-K twin of [[assignProbes]]: the codebook rides an executor
-   * BROADCAST (SparkContext.broadcast) consumed by a codegen-called UDF,
-   * not a plan literal. A typedLit codebook is right up to K in the
-   * thousands; at the 100-TB design point K ~ sqrt(N) ~ 10^6 centroids
-   * (hundreds of MB) must ship once per executor as a broadcast value —
-   * never serialize into the plan, never crossJoin K rows per vector.
-   * Same shuffle-free shape (one projection + posexplode), and the
-   * arithmetic is identical to the literal path: the UDF accumulates the
-   * dot left-to-right exactly like `aggregate(zip_with(...))` and sorts by
-   * (-dot, c) exactly like the struct array_sort — AnnEquivalenceSpec
-   * asserts bit-identical assignments.
+   * Zero-shuffle IVF assignment, the one path every IVF query takes: per
+   * row, the `nprobe` best centroids by (-dot, c) ascending, as
+   * (vec_id, v, vn, c, rk) rows with rk = 1..min(nprobe, K) (rk 1 = home).
+   * The codebook rides an executor BROADCAST (SparkContext.broadcast)
+   * consumed by a codegen-called UDF, never a plan literal: plan size is
+   * O(1) in K, and at the 100-TB design point K ~ sqrt(N) ~ 10^6 centroids
+   * (hundreds of MB) ship once per executor — no crossJoin of K rows per
+   * vector, no Window, no exchange (one projection + posexplode). The dot
+   * accumulates left-to-right exactly like `aggregate(zip_with(...))` and
+   * the order is exactly an `array_sort` of (-dot, c) structs;
+   * AnnEquivalenceSpec pins both against that Column expression.
    */
-  private[graft] def assignProbesBroadcast(emb: DataFrame, cents: Seq[Seq[Double]],
-                                           nprobe: Int, vecCol: String): DataFrame = {
+  private[graft] def assignProbes(emb: DataFrame, cents: Seq[Seq[Double]],
+                                  nprobe: Int, vecCol: String): DataFrame = {
     val bc = emb.sparkSession.sparkContext.broadcast(cents.map(_.toArray).toArray)
-    val probesUdf = udf { v: Seq[Double] =>
+    val probesUdf = udf { arr: Array[Double] =>
       val cb = bc.value
-      val arr = v.toArray
       // bounded top-nprobe selection on primitives: a full sort of K boxed
       // (dot, c) tuples dominated the whole query at K=4096 (measured
       // ~5 s for 5k vectors); the bounded max-heap of the WORST kept entry
@@ -164,7 +136,7 @@ object AnnQueries {
       // NaN dot (-NaN = NaN, which Spark's array_sort places greatest)
       // ranks WORST — primitive `<` made NaN incomparable: a NaN that
       // entered a filling heap could never be evicted and, at the root,
-      // blocked all replacements, diverging from the literal sort path.
+      // blocked all replacements, diverging from Spark's struct sort.
       @inline def worse(da: Double, ca: Int, db: Double, cb_ : Int): Boolean = {
         val c0 = java.lang.Double.compare(-da, -db)
         c0 > 0 || (c0 == 0 && ca > cb_)
@@ -214,6 +186,13 @@ object AnnQueries {
       .withColumn("c", col("col"))
       .drop("pos", "col")
   }
+
+  /** [[assignProbes]] of the quantized vector column `q` against an integer
+    * codebook, accumulated as doubles: exact, because every dot stays below
+    * 2^53 (see [[BigIntInit]]). */
+  private def assignQuantized(emb: DataFrame, cents: Seq[Seq[Long]], nprobe: Int): DataFrame =
+    assignProbes(emb.withColumn("qd", col("q").cast("array<double>")),
+      cents.map(_.map(_.toDouble)), nprobe, "qd").drop("qd")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q40_ann_bruteforce" -> { (s, dir) =>
@@ -266,14 +245,15 @@ object AnnQueries {
 
     // IVF-style ANN scale path: 16 deterministic ladder centroids, every
     // vector assigned to its max-dot centroid in a single shuffle-free
-    // projection; queries probe their top-4 clusters (nprobe=4/16), cosine
-    // ranks only within probed clusters.
+    // projection (the broadcast codebook of assignProbes); queries probe
+    // their top-4 clusters (nprobe=4/16), cosine ranks only within probed
+    // clusters.
     "q43_ann_ivf" -> { (s, dir) =>
       import s.implicits._
       val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
-      val assigned = assignProbes(emb, centArrayLit(LadderCents), nprobe = 4, dot, "v")
+      val assigned = assignProbes(emb, LadderCents, nprobe = 4, "v")
       ivfSearch(assigned)
     },
 
@@ -286,31 +266,27 @@ object AnnQueries {
         .withColumn("vn", sqrt(dot($"v", $"v")))
         .withColumn("q", transform($"v", x => round(x * IvfQuant, 0).cast("bigint")))
       val trained = trainCodebook(emb)
-      val assigned = assignProbes(emb, centArrayLitL(trained), nprobe = 2, idot, "q")
-        .drop("q")
+      val assigned = assignQuantized(emb, trained, nprobe = 2).drop("q")
       ivfSearch(assigned)
     },
 
-    // IVF with a BROADCAST codebook at K=4096 (the 100-TB K ~ sqrt(N)
-    // shape): a typedLit codebook is right up to K in the thousands, but a
-    // large codebook must ship ONCE per executor as a SparkContext
-    // broadcast consumed by a codegen-called UDF — plan size O(1) in K, no
-    // K-row join, assignment still one shuffle-free projection below the
-    // probe join (PlanShapeSpec pins zero exchanges beneath it;
-    // AnnEquivalenceSpec proves the broadcast path bit-identical to the
-    // literal path). Queries probe 64 of 4096 clusters (1.6%).
+    // IVF at K=4096 (the 100-TB K ~ sqrt(N) shape): the codebook ships
+    // ONCE per executor as a SparkContext broadcast — plan size O(1) in K,
+    // no K-row join, assignment still one shuffle-free projection below the
+    // probe join (PlanShapeSpec pins zero exchanges beneath it). Queries
+    // probe 64 of 4096 clusters (1.6%).
     "q97_ann_ivf_broadcast" -> { (s, dir) =>
       import s.implicits._
       val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
-      val assigned = assignProbesBroadcast(emb, BigCents, nprobe = 64, "v")
+      val assigned = assignProbes(emb, BigCents, nprobe = 64, "v")
       ivfSearch(assigned)
     },
 
     // TRAINED broadcast-codebook IVF at K=1024 (q44's training x q97's
     // distribution): the integer init codebook rides a broadcast into the
-    // assignment UDF for the Lloyd pass, the TRAINED result round-trips
+    // assignment for the Lloyd pass, the TRAINED result round-trips
     // driver -> broadcast -> UDF for the search pass — the full
     // train-then-serve lifecycle of a large-K index, with plan size O(1)
     // in K on both passes. All arithmetic is exact (integer values below
@@ -322,11 +298,8 @@ object AnnQueries {
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
         .withColumn("q", transform($"v", x => round(x * IvfQuant, 0).cast("bigint")))
-      val trained = trainCodebook(emb, BigIntInit, broadcastAssign = true)
-      val assigned = assignProbesBroadcast(
-          emb.withColumn("qd", $"q".cast("array<double>")),
-          trained.map(_.map(_.toDouble)), nprobe = 16, "qd")
-        .drop("q", "qd")
+      val trained = trainCodebook(emb, BigIntInit)
+      val assigned = assignQuantized(emb, trained, nprobe = 16).drop("q")
       ivfSearch(assigned)
     },
 
@@ -348,11 +321,8 @@ object AnnQueries {
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
         .withColumn("q", transform($"v", x => round(x * IvfQuant, 0).cast("bigint")))
-      val trained = trainCodebook(emb, BigIntInit, broadcastAssign = true)
-      val assigned = assignProbesBroadcast(
-          emb.withColumn("qd", $"q".cast("array<double>")),
-          trained.map(_.map(_.toDouble)), nprobe = 256, "qd")
-        .drop("q", "qd")
+      val trained = trainCodebook(emb, BigIntInit)
+      val assigned = assignQuantized(emb, trained, nprobe = 256).drop("q")
       ivfSearch(assigned, homeR = 2)
     },
 
@@ -361,13 +331,13 @@ object AnnQueries {
     // the same 4/16 clusters as q43 — same probe fraction, strictly larger
     // candidate union, duplicates collapsed by the dense-rank re-rank (see
     // ivfSearch homeR > 1). AnnRecall measures the recall gain over q43 at the
-    // identical 25% probe fraction.
+    // identical 25% probe fraction, through the same assignProbes.
     "q102_ann_ivf_rerank" -> { (s, dir) =>
       import s.implicits._
       val emb = Tables.wide(s, dir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("vn", sqrt(dot($"v", $"v")))
-      val assigned = assignProbes(emb, centArrayLit(LadderCents), nprobe = 4, dot, "v")
+      val assigned = assignProbes(emb, LadderCents, nprobe = 4, "v")
       ivfSearch(assigned, homeR = 2)
     },
 
@@ -402,25 +372,13 @@ object AnnQueries {
   /** One exact Lloyd iteration: assign quantized vectors to the integer init
     * codebook (max integer dot, min-c tiebreak), update each centroid to the
     * exact floor-mean of its members (empty clusters keep the init row).
-    * The 8x64 trained codebook is collected to the driver and re-broadcast
-    * as a literal — the IVF-training analog of a kmeans fit. */
+    * The K x 64 trained codebook is collected to the driver and broadcast
+    * again by the search pass — the IVF-training analog of a kmeans fit. */
   private[graft] def trainCodebook(emb: DataFrame,
-                            init: Seq[Seq[Long]] = IntInitCents,
-                            broadcastAssign: Boolean = false): Seq[Seq[Long]] = {
+                                   init: Seq[Seq[Long]] = IntInitCents): Seq[Seq[Long]] = {
     import emb.sparkSession.implicits._
     val k = init.length
-    // assignment: literal codebook for small K, SparkContext broadcast for
-    // large K (the q97 shape). The broadcast path's double accumulation is
-    // exact on these integer magnitudes (< 2^53), so both paths agree
-    // bit-for-bit (AnnEquivalenceSpec pins it).
-    val home =
-      if (broadcastAssign)
-        assignProbesBroadcast(
-          emb.select($"vec_id", $"q", $"q".cast("array<double>").as("qd")),
-          init.map(_.map(_.toDouble)), nprobe = 1, "qd")
-          .select($"q", $"c")
-      else assignProbes(emb.select($"vec_id", $"q"),
-        centArrayLitL(init), nprobe = 1, idot, "q")
+    val home = assignQuantized(emb.select($"vec_id", $"q"), init, nprobe = 1)
       .select($"q", $"c")
     // centroid update by treeAggregate (round-6, VERDICT r5 #5): the
     // per-dimension sums accumulate EXECUTOR-SIDE into one K x 64 long
@@ -431,8 +389,7 @@ object AnnQueries {
     // the codebook across several aggregates or raise depth; at the tested
     // K <= 1024 a partial is ~0.5 MB. Long sums are exact and
     // order-independent, so the result is bit-identical to the old
-    // groupBy/collect path (the oracle replay and AnnEquivalenceSpec pin
-    // it).
+    // groupBy/collect path (the oracle replay pins it).
     val agg = home.select($"c", $"q").as[(Int, Array[Long])].rdd
       .treeAggregate(null: Array[Long])(
         seqOp = (acc0, row) => {
@@ -681,9 +638,8 @@ object AnnQueries {
          |SELECT qid, rnk, vec_id FROM r WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin,
 
     // q103: identical replay to q44's trained path at K=1024 with the
-    // long-period-hash integer init and nprobe 16. The Spark side runs
-    // both passes through the broadcast UDF; integer-exact arithmetic
-    // makes the two engines bit-equal.
+    // long-period-hash integer init and nprobe 16. Integer-exact
+    // arithmetic makes the two engines bit-equal.
     "q103_ann_ivf_trained_broadcast" ->
       s"""WITH e AS (
          |  SELECT vec_id, embedding::DOUBLE[] AS v,

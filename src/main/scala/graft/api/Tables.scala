@@ -10,6 +10,8 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWith
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
 
+import scala.jdk.CollectionConverters._
+
 /**
  * The input-table catalog: every table the queries read (`<dir>/<table>.parquet`)
  * with its declared schema, and the one way to open it.
@@ -24,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
  *
  * Guard: a declared schema makes Spark return nulls for a column the file
  * lacks, so before the frame is built every data file's footer is read on
- * the driver (`SKIP_ROW_GROUPS`: schema only, ~1 ms, no job), converted as
+ * the driver (~1 ms, no job), converted as
  * Spark's own inference converts it, and compared with the declared schema
  * ignoring nullability. Any difference — a missing, renamed, reordered or
  * retyped column, or a UTC-adjusted timestamp — throws [[SchemaMismatch]].
@@ -33,14 +35,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
  * scan task, so every per-row-expensive stage fused onto the scan (from_json,
  * regex extraction, per-token md5, higher-order array folds) runs on one core.
  * `wide` adds one round-robin repartition to the session default parallelism
- * iff the scan plans fewer partitions than that, and is a no-op when the input
- * already splits that wide (the 100-TB case, where an extra exchange of the
- * payload would be pure loss). The scan's partition count comes from the file
+ * iff fewer scan partitions than that read rows, and is a no-op when the input
+ * already reads that wide (the 100-TB case, where an extra exchange of the
+ * payload would be pure loss). The scan's partitions come from the file
  * listing through Spark's own split rule (`FilePartition.maxSplitBytes`,
  * `PartitionedFileUtil.splitFiles`, `FilePartition.getFilePartitions`), so no
- * physical plan is built to ask `df.rdd.getNumPartitions`. Every declared query
- * is reshard-stable (detcheck: bit-identical at 4 vs 32 cores), so the
- * repartition is never a correctness input.
+ * physical plan is built to ask `df.rdd.getNumPartitions`. A split reads a row
+ * group iff it holds the row group's midpoint (parquet's own split rule), so a
+ * one-row-group file split by bytes still reads on one core: the gate counts
+ * only the partitions holding a midpoint, taken from the footers the schema
+ * check already opens. Every declared query is reshard-stable (detcheck:
+ * bit-identical at 4 vs 32 cores), so the repartition is never a correctness
+ * input.
  */
 object Tables {
 
@@ -74,19 +80,20 @@ object Tables {
 
   /** `table`'s declared schema, once every data file under `dir` holds it. */
   def schema(s: SparkSession, dir: String, table: String): StructType =
-    checked(s, table, dataFiles(s, path(dir, table)))
+    checked(s, table, dataFiles(s, path(dir, table)))._1
 
   /** Open `table` under `dir` with its declared schema. */
   def read(s: SparkSession, dir: String, table: String): DataFrame =
     s.read.schema(schema(s, dir, table)).parquet(path(dir, table))
 
   /** [[read]], round-robin widened to the session default parallelism iff
-    * the scan plans fewer partitions (small local inputs); no-op at scale. */
+    * fewer scan partitions read rows (small local inputs); no-op at scale. */
   def wide(s: SparkSession, dir: String, table: String): DataFrame = {
     val files = dataFiles(s, path(dir, table))
-    val df = s.read.schema(checked(s, table, files)).parquet(path(dir, table))
+    val (schema, midpoints) = checked(s, table, files)
+    val df = s.read.schema(schema).parquet(path(dir, table))
     val p = s.sparkContext.defaultParallelism
-    if (scanPartitions(s, files) < p) df.repartition(p) else df
+    if (readingPartitions(s, files, midpoints) < p) df.repartition(p) else df
   }
 
   /** The data files a parquet scan of `path` reads: the file itself, or the
@@ -105,29 +112,46 @@ object Tables {
     leaves(fs.getFileStatus(p))
   }
 
-  /** The number of partitions Spark's file scan plans over `files`. */
-  private[graft] def scanPartitions(s: SparkSession, files: Seq[FileStatus]): Int = {
+  /** The partitions Spark's file scan plans over `files`. */
+  private def filePartitions(s: SparkSession, files: Seq[FileStatus]): Seq[FilePartition] = {
     val openCost = s.sessionState.conf.filesOpenCostInBytes
     val maxSplit = FilePartition.maxSplitBytes(s, files.map(_.getLen + openCost).sum)
     val splits = files.flatMap { f =>
       PartitionedFileUtil.splitFiles(FileStatusWithMetadata(f), f.getPath,
         isSplitable = true, maxSplit, InternalRow.empty)
     }.sortBy(_.length)(Ordering[Long].reverse)
-    FilePartition.getFilePartitions(s, splits, maxSplit).size
+    FilePartition.getFilePartitions(s, splits, maxSplit)
   }
 
-  private def checked(s: SparkSession, table: String, files: Seq[FileStatus]): StructType = {
+  /** The number of partitions Spark's file scan plans over `files`. */
+  private[graft] def scanPartitions(s: SparkSession, files: Seq[FileStatus]): Int =
+    filePartitions(s, files).size
+
+  /** The number of planned partitions that read rows: those holding a split
+    * that holds a row-group midpoint of its file (`midpoints`, per file path). */
+  private def readingPartitions(s: SparkSession, files: Seq[FileStatus],
+                                midpoints: Map[Path, Seq[Long]]): Int =
+    filePartitions(s, files).count(_.files.exists { f =>
+      midpoints(f.toPath).exists(m => m >= f.start && m < f.start + f.length)
+    })
+
+  /** `table`'s declared schema, once every file in `files` holds it, and
+    * each file's row-group midpoints (first column chunk's offset plus half
+    * the group's compressed size, as parquet assigns row groups to splits). */
+  private def checked(s: SparkSession, table: String,
+                      files: Seq[FileStatus]): (StructType, Map[Path, Seq[Long]]) = {
     val want = declared.getOrElse(table,
       throw new IllegalArgumentException(s"unknown input table $table"))
     val conf = s.sparkContext.hadoopConfiguration
     val converter = new ParquetToSparkSchemaConverter(s.sessionState.conf)
-    files.foreach { f =>
-      val footer = ParquetFileReader.readFooter(conf, f, ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val midpoints = files.map { f =>
+      val footer = ParquetFileReader.readFooter(conf, f, ParquetMetadataConverter.NO_FILTER)
       val found = converter.convert(footer.getFileMetaData.getSchema)
       if (loose(found) != loose(want))
         throw new SchemaMismatch(table, f.getPath.toString, want, found)
+      f.getPath -> footer.getBlocks.asScala.map(b => b.getStartingPos + b.getCompressedSize / 2).toSeq
     }
-    want
+    (want, midpoints.toMap)
   }
 
   /** `t` with every nullability flag set and no field metadata: the

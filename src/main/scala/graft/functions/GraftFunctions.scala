@@ -34,8 +34,6 @@ object GraftFunctions {
 
   def dot_d(a: Column, b: Column): Column = call("graft_dot", a, b)
 
-  def dot_l(a: Column, b: Column): Column = call("graft_idot", a, b)
-
   def count_eq(toks: Column, needle: Column): Column = call("graft_count_eq", toks, needle)
 
   def count_in(toks: Column, set: Column): Column = call("graft_count_in", toks, set)

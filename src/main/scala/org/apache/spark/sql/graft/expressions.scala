@@ -363,24 +363,14 @@ object TextKernels {
 /** Embedding kernels for the ANN/near-dup hot loops. */
 object AnnKernels {
   /**
-   * All `planes` sign bits of one hyperplane table in a single pass over the
-   * vector — bit p of the result is (w_tp . v) >= 0 with the deterministic
-   * integer-ladder weights w_tp[d] = (((t*61+p)*131 + d*31) % 17) - 8.
-   * Accumulation is per-plane left-to-right over d: bit-identical to the
-   * aggregate(zip_with(...)) Column pipeline it replaces (and to the DuckDB
-   * list_dot_product replay), but one allocation-free call per row instead
-   * of `planes` zipped-array materializations.
-   */
-  /**
    * Left-to-right dot product over two EQUAL-LENGTH double arrays — the
    * accumulation order is exactly `aggregate(zip_with(a, b, (x, y) => x*y),
    * 0.0, (acc, x) => acc + x)`: s = ((0.0 + a0*b0) + a1*b1) + ..., so the
    * result is bit-identical to the HOF pipeline it replaces (including NaN
    * propagation), without the per-row zipped-array materialization and
    * per-element boxing of the CodegenFallback ZipWith/ArrayAggregate chain.
-   * Callers own the equal-length invariant (64-dim vectors against 64-dim
-   * codebook rows everywhere this is used), like graft_jaccard owns
-   * sortedness.
+   * Callers own the equal-length invariant (two 64-dim embeddings
+   * everywhere this is used), like graft_jaccard owns sortedness.
    */
   def dotD(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements()
@@ -390,18 +380,15 @@ object AnnKernels {
     s
   }
 
-  /** Integer twin of [[dotD]] for quantized vectors (q44's exact Lloyd
-    * arithmetic): same left-to-right fold over longs. All call sites keep
-    * |a_i * b_i| * 64 far below 2^63 (documented at the codebook
-    * definitions), so wrap-vs-ANSI overflow semantics never diverge. */
-  def dotL(a: ArrayData, b: ArrayData): Long = {
-    val n = a.numElements()
-    var s = 0L
-    var i = 0
-    while (i < n) { s += a.getLong(i) * b.getLong(i); i += 1 }
-    s
-  }
-
+  /**
+   * All `planes` sign bits of one hyperplane table in a single pass over the
+   * vector — bit p of the result is (w_tp . v) >= 0 with the deterministic
+   * integer-ladder weights w_tp[d] = (((t*61+p)*131 + d*31) % 17) - 8.
+   * Accumulation is per-plane left-to-right over d: bit-identical to the
+   * aggregate(zip_with(...)) Column pipeline it replaces (and to the DuckDB
+   * list_dot_product replay), but one allocation-free call per row instead
+   * of `planes` zipped-array materializations.
+   */
   def hyperplaneBucket(v: ArrayData, table: Int, planes: Int): Long = {
     val n = v.numElements()
     var bucket = 0L
@@ -497,7 +484,6 @@ object GraftKernel {
     (a, b, c) => f(a.asInstanceOf[A], b.asInstanceOf[B], c.asInstanceOf[C])
 
   private val Doubles = ArrayType(DoubleType, containsNull = false)
-  private val Longs = ArrayType(LongType, containsNull = false)
   private val Strings = ArrayType(StringType, containsNull = false)
 
   /** Every native kernel, keyed by its SQL name: the Column wrappers in
@@ -526,12 +512,9 @@ object GraftKernel {
     // q36: replaces the explode + 16-sum groupBy, so the plan has no shuffle
     "graft_simhash16" -> Signature(TextKernels.getClass, "simhash16",
       Seq(Strings), LongType, k1(TextKernels.simhash16)),
-    // every ANN assignment/refine (q40-q44, q97, q102/q103/q108): replaces aggregate(zip_with)
+    // the ANN norms and cosine refines (q40-q44, q97, q102/q103/q108): replaces aggregate(zip_with)
     "graft_dot" -> Signature(AnnKernels.getClass, "dotD",
       Seq(Doubles, Doubles), DoubleType, k2(AnnKernels.dotD)),
-    // q44's exact Lloyd arithmetic over quantized vectors
-    "graft_idot" -> Signature(AnnKernels.getClass, "dotL",
-      Seq(Longs, Longs), LongType, k2(AnnKernels.dotL)),
     // q31 token count: replaces size(filter(...)), whose ArrayFilter is CodegenFallback
     "graft_count_eq" -> Signature(TextKernels.getClass, "countEq",
       Seq(Strings, StringType), LongType, k2(TextKernels.countEq)),

@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The native graft_dot / graft_idot must be bit-identical to the
-  * aggregate(zip_with(...)) HOF fold they replaced in the ANN hot paths
-  * (assignment dots, cosine refines, integer Lloyd arithmetic) — same
-  * left-to-right accumulation order, same NaN/Inf propagation, same
-  * empty-array result. */
+/** The native graft_dot must be bit-identical to the
+  * aggregate(zip_with(...)) HOF fold it replaced in the ANN norms and
+  * cosine refines — same left-to-right accumulation order, same NaN/Inf
+  * propagation, same empty-array result. */
 class DotProductSpec extends AnyFunSuite with SparkSuite {
 
   test("graft_dot equals the aggregate(zip_with) fold bitwise") {
@@ -32,50 +31,29 @@ class DotProductSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("graft_idot equals the long aggregate(zip_with) fold") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = (0 until 100).map { i =>
-      val n = if (i == 0) 0 else 64
-      // the call sites' documented bound: |a_i| <= ~3e6 quantized values
-      (Array.fill(n)(rnd.nextLong() % 3000000L), Array.fill(n)(rnd.nextLong() % 3000000L))
-    }
-    val df = rows.toDF("a", "b")
-    val reference = aggregate(zip_with($"a", $"b", (x, y) => x * y),
-                              lit(0L), (acc, x) => acc + x)
-    val native = graft.functions.GraftFunctions.dot_l($"a", $"b")
-    df.select(reference.as("ref"), native.as("got")).collect().foreach { r =>
-      assert(r.getLong(0) == r.getLong(1), s"ref=${r.getLong(0)} got=${r.getLong(1)}")
-    }
-  }
-
-  test("graft_dot and graft_idot in generated code equal the folds") {
+  test("graft_dot in generated code equals the fold") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val rows = (0 until 50).map { i =>
       val n = if (i == 0) 0 else 64
       (Array.fill(n)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(7) - 3)),
-       Array.fill(n)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(7) - 3)),
-       Array.fill(n)(rnd.nextLong() % 3000000L), Array.fill(n)(rnd.nextLong() % 3000000L))
+       Array.fill(n)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(7) - 3)))
     }
     // an RDD source: a Project over a local relation is folded on the
     // driver by the interpreted path and never reaches generated code
-    val df = spark.sparkContext.parallelize(rows, 2).toDF("a", "b", "la", "lb")
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("a", "b")
     val confs = Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
                     "spark.sql.codegen.fallback" -> "false")
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val q = df.select(
         aggregate(zip_with($"a", $"b", (x, y) => x * y), lit(0.0), (acc, x) => acc + x),
-        graft.functions.GraftFunctions.dot_d($"a", $"b"),
-        aggregate(zip_with($"la", $"lb", (x, y) => x * y), lit(0L), (acc, x) => acc + x),
-        graft.functions.GraftFunctions.dot_l($"la", $"lb"))
+        graft.functions.GraftFunctions.dot_d($"a", $"b"))
       assert(q.queryExecution.executedPlan.collect {
         case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }.nonEmpty)
       q.collect().foreach { r =>
         assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
                java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r)
-        assert(r.getLong(2) == r.getLong(3), r)
       }
     } finally confs.keys.foreach(spark.conf.unset)
   }
@@ -88,8 +66,7 @@ class DotProductSpec extends AnyFunSuite with SparkSuite {
     val got = df.select(graft.functions.GraftFunctions.dot_d($"a", $"b")).collect()
     assert(got(0).isNullAt(0))
     assert(got(1).getDouble(0) == 11.0)
-    val viaSql = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)), " +
-                           "graft_idot(array(1L, 2L), array(3L, 4L))").collect().head
-    assert(viaSql.getDouble(0) == 11.0 && viaSql.getLong(1) == 11L)
+    val viaSql = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").collect().head
+    assert(viaSql.getDouble(0) == 11.0)
   }
 }

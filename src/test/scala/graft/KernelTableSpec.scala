@@ -67,10 +67,6 @@ class KernelTableSpec extends AnyFunSuite with SparkSuite {
       Seq(Seq(Seq(1.0, 2.0, 3.0), Seq(0.5, -1.0, 0.25)), Seq(Seq(0.1, 0.2), Seq(0.3, 0.4))),
       c => GraftFunctions.dot_d(c(0), c(1)),
       a => AnnKernels.dotD(arr(a(0)), arr(a(1)))),
-    "graft_idot" -> Sample(
-      Seq(Seq(Seq(1L, 2L, 3L), Seq(4L, -5L, 6L)), Seq(Seq(-7L), Seq(7L))),
-      c => GraftFunctions.dot_l(c(0), c(1)),
-      a => AnnKernels.dotL(arr(a(0)), arr(a(1)))),
     "graft_count_eq" -> Sample(
       Seq(Seq(toks, "the"), Seq(toks, "cat")),
       c => GraftFunctions.count_eq(c(0), c(1)),

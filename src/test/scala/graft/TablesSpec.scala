@@ -39,6 +39,10 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
   private def planned(dir: String, table: String): Int =
     spark.read.schema(Tables.declared(table)).parquet(Tables.path(dir, table)).rdd.getNumPartitions
 
+  private def repartitions(df: DataFrame): Int = df.queryExecution.logical.collect {
+    case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+  }.size
+
   test("declared schema == inferred schema for every table at sf0.001, sf0.01, sf0.1") {
     assert(Tables.declared.keySet == tables.toSet)
     for (d <- sfDirs; t <- tables) {
@@ -90,9 +94,6 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     val li = s"$testdata/sf0.1"
     assert(Tables.dataFiles(spark, Tables.path(li, "lineitem")).size == 1)
     assert(listed(li, "lineitem") > 1 && listed(li, "lineitem") == planned(li, "lineitem"))
-    def repartitions(df: DataFrame) = df.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
-    }.size
     val sf001 = s"$testdata/sf0.01"
     assert(listed(sf001, "documents") < p)
     assert(repartitions(Tables.wide(spark, sf001, "documents")) == 1)
@@ -109,12 +110,41 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
       assert(planned(manyFiles, "documents") == p + 2)
       assert(repartitions(Tables.wide(spark, manyFiles, "documents")) == 0)
     } finally spark.conf.unset("spark.sql.files.openCostInBytes")
-    // the rule follows the session's split settings
+    // the rule follows the session's split settings; the file is one row
+    // group, so only one of those splits reads rows and the gate still widens
     spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
     try {
       assert(listed(sf001, "documents") > p)
       assert(listed(sf001, "documents") == planned(sf001, "documents"))
-      assert(repartitions(Tables.wide(spark, sf001, "documents")) == 0)
+      assert(repartitions(Tables.wide(spark, sf001, "documents")) == 1)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  test("the widen gate counts the scan partitions that read rows, not the planned splits") {
+    val p = spark.sparkContext.defaultParallelism
+    // scan partitions that return at least one row, counted by running the scan
+    def reading(dir: String, table: String): Int =
+      spark.read.schema(Tables.declared(table)).parquet(Tables.path(dir, table))
+        .queryExecution.toRdd.mapPartitions(it => Iterator(if (it.hasNext) 1 else 0))
+        .collect().sum
+    // lineitem at sf0.1 is one file of one row group: split by bytes, every
+    // split but the one holding the row group's midpoint reads nothing
+    val sf01 = s"$testdata/sf0.1"
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (1 << 20).toString)
+    try {
+      assert(listed(sf01, "lineitem") >= 4 && listed(sf01, "lineitem") >= p)
+      assert(reading(sf01, "lineitem") == 1)
+      assert(repartitions(Tables.wide(spark, sf01, "lineitem")) == 1)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    // sf0.01 lineitem rewritten in many small row groups: every split
+    // reads rows, so the gate takes its no-op branch
+    val groups = freshDir()
+    Tables.read(spark, s"$testdata/sf0.01", "lineitem").repartition(1).write
+      .option("parquet.block.size", (64 << 10).toString).parquet(Tables.path(groups, "lineitem"))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (128 << 10).toString)
+    try {
+      assert(reading(groups, "lineitem") >= p)
+      assert(repartitions(Tables.wide(spark, groups, "lineitem")) == 0)
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
