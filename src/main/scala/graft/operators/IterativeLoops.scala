@@ -9,8 +9,6 @@ import org.apache.spark.sql.DataFrame
  */
 object IterativeLoops {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /**
    * Materialize + SEVER: `localCheckpoint` truncates the execution lineage,
    * but the returned LogicalRDD still carries origin constraints/stats
@@ -91,10 +89,8 @@ object IterativeLoops {
       state = next(state)
       count = moving(prev, state)
     }
-    // info, not warn: round progress is normal operation (warn is reserved
-    // for data-affecting events, matching BucketedSelfJoin's convention)
-    log.info(s"$what: $round rounds, $count still moving")
-    require(count == 0L, s"$what did not converge in $maxRounds rounds")
+    require(count == 0L,
+      s"$what did not converge in $maxRounds rounds ($round run, $count still moving)")
     state
   }
 }

@@ -145,7 +145,7 @@ object Crs {
 
   /**
    * Envelope transform for join prefilters: sample the source envelope's
-   * boundary (corners + `samples` points per edge) in the destination CRS
+   * boundary (its 4 vertices + `samples` points per edge) in the destination CRS
    * and take the hull bbox. Exact for the axis-monotone 4326<->3857 pair;
    * the edge samples cover the slight curvature of UTM meridians/parallels.
    * Callers still refine per cell, so a prefilter envelope only needs to be

@@ -8,25 +8,20 @@ import graft.model.{Raster, TileGeometry}
  * Focal (neighborhood) operators over tiled rasters with DISTRIBUTED HALO
  * EXCHANGE — the hard part the reference sidesteps by fetching overlapping
  * coverage per tile (SURVEY.md §7.4.4). Tiles here are disjoint, so each
- * tile ships its 1-cell border strips to the neighbors that need them, and
- * every tile computes its kernel over (own cells + received strips) without
- * ever materializing the full grid on one machine.
+ * tile ships its 1-cell border strips and corner cells to the neighbors
+ * that need them, as patches through the mosaic's tile exchange
+ * (`Mosaic.exchange`), and computes its kernel over (own cells + received
+ * halo) without ever materializing the full grid on one machine. Corner
+ * cells always ship; 4-neighborhood kernels never read them.
  *
  * Slope is the HortonMachine gradient the reference's `hm.geomorphology`
  * library declares (HMGeomorphology.java):
  *   p = (E - W) / (2 dx), q = (N - S) / (2 dy), slope = sqrt(p^2 + q^2);
  * cells whose 4-neighborhood leaves the region (or hits NaN) become NaN.
  */
-/** One shipped border strip: cells of `values` at global column/row
-  * coordinates (sx0, sy0), destined for tile `targetIdx`. Top-level (not
-  * nested) because Catalyst's encoder codegen cannot reference classes
-  * nested inside an object cleanly. */
-final case class FocalStrip(targetIdx: Int, sx0: Int, sy0: Int, sw: Int, sh: Int,
-                            values: Array[Double])
-
 /** One labeled predicate cell from tile-local region labeling: global cell
   * id, grid coordinates, and the tile-local component root's global id.
-  * Top-level for the same encoder-codegen reason as [[FocalStrip]]. */
+  * Top-level for Catalyst's encoder codegen, like [[CogFile]]. */
 final case class CellRoot(cell: Long, cx: Long, cy: Long, root: Long)
 
 object Focal {
@@ -102,7 +97,7 @@ object Focal {
               maxCells: Long = 1000000L): Dataset[Raster] = {
     val dw = region.cellWidth; val dh = region.cellHeight
     val ddiag = math.sqrt(dw * dw + dh * dh)
-    focalPad(tiles, region, maxCells, corners = true, "flowdir", 1) { (pad, w, h, out) =>
+    focalPad(tiles, region, maxCells, "flowdir", 1) { (pad, w, h, out) =>
       val s2 = h + 2
       @inline def p(lx: Int, ly: Int) = pad((lx + 1) * s2 + (ly + 1))
       var x = 0
@@ -147,7 +142,7 @@ object Focal {
     val dx = region.cellWidth; val dy = region.cellHeight
     val dx2 = dx * dx; val dy2 = dy * dy; val dxy4 = 4.0 * dx * dy
     val tdx = 2.0 * dx; val tdy = 2.0 * dy
-    focalPad(tiles, region, maxCells, corners = true, "curv", 2) { (pad, w, h, out) =>
+    focalPad(tiles, region, maxCells, "curv", 2) { (pad, w, h, out) =>
       val s2 = h + 2
       @inline def pv(lx: Int, ly: Int) = pad((lx + 1) * s2 + (ly + 1))
       var x = 0
@@ -186,15 +181,15 @@ object Focal {
 
   /**
    * Generic 4-neighborhood focal operator: one distributed halo exchange
-   * (each tile ships 1-cell border strips to its 4 neighbors), then
-   * `kernel(E, W, N, S, out, cellIdx)` fills `nBands` output bands per
-   * cell. Neighbors outside the region (or never received) are NaN.
+   * ([[focalPad]]), then `kernel(E, W, N, S, out, cellIdx)` fills `nBands`
+   * output bands per cell. Neighbors outside the region (or never
+   * received) are NaN.
    */
   def focal4(tiles: Dataset[Raster], region: TileGeometry,
              maxCells: Long, namePrefix: String, nBands: Int)
             (kernel: (Double, Double, Double, Double, Array[Array[Double]], Int) => Unit)
       : Dataset[Raster] =
-    focalPad(tiles, region, maxCells, corners = false, namePrefix, nBands) { (pad, w, h, out) =>
+    focalPad(tiles, region, maxCells, namePrefix, nBands) { (pad, w, h, out) =>
       val s2 = h + 2
       @inline def p(lx: Int, ly: Int) = pad((lx + 1) * s2 + (ly + 1))
       var x = 0
@@ -209,85 +204,42 @@ object Focal {
     }
 
   /**
-   * The halo-exchange core: each tile keeps itself and ships 1-cell border
-   * strips to its 4 edge neighbors (plus 1x1 corner cells to its 4 diagonal
-   * neighbors when `corners` — 8-neighborhood kernels need them); the
-   * kernel receives the assembled (w+2)x(h+2) NaN-padded window
-   * (column-major, cell (x, y) at (x+1)*(h+2)+(y+1)) and fills `nBands`
-   * outputs for the tile's own w*h cells.
+   * The halo-exchange core: each tile sends its own block and, to each of
+   * its <= 8 neighbors, the edge strip or corner cell that neighbor's
+   * window needs; the kernel receives the assembled (w+2)x(h+2) NaN-padded
+   * window (column-major, cell (x, y) at (x+1)*(h+2)+(y+1)) and fills
+   * `nBands` outputs for the tile's own w*h cells.
    */
   def focalPad(tiles: Dataset[Raster], region: TileGeometry,
-               maxCells: Long, corners: Boolean, namePrefix: String, nBands: Int)
+               maxCells: Long, namePrefix: String, nBands: Int)
               (kernel: (Array[Double], Int, Int, Array[Array[Double]]) => Unit)
       : Dataset[Raster] = {
     val spark = tiles.sparkSession
     import spark.implicits._
+    val gridB = spark.sparkContext.broadcast(new Mosaic.TileGrid(region, maxCells))
 
-    val layout = Mosaic.splitTilesWithOffsets(region, maxCells).toArray
-    val layoutB = spark.sparkContext.broadcast(layout)
-    // the layout is a regular tx-major grid (idx = tx*ny + ty, side-sized
-    // tiles except the last row/column) — neighbor indices are O(1)
-    // arithmetic, never a layout scan (10^6 tiles at the 10^12-cell design
-    // point would make any O(T) per-tile scan a 10^12-step stage)
-    val side = math.max(1, math.sqrt(maxCells.toDouble).toInt)
-    val nx = (region.width + side - 1) / side
-    val ny = (region.height + side - 1) / side
-
-    // each tile keeps itself and ships 1-cell border strips to its 4
-    // neighbors (E/W strips = last/first column; N/S strips = last/first row)
-    val keyed = tiles.flatMap { r =>
-      val (x0, y0) = region.tileOffset(r)
-      require(x0 % side == 0 && y0 % side == 0,
-        s"tile ${r.item_id} does not sit on the region layout")
-      val tx = x0 / side; val ty = y0 / side
-      val idx = tx * ny + ty
+    val patches = tiles.flatMap { r =>
+      val grid = gridB.value
+      val idx = grid.indexOf(r)
+      val (_, x0, y0) = grid.tiles(idx)
       val vals = r.bands.head
       val w = r.width; val h = r.height
-      def colStrip(col: Int) = Array.tabulate(h)(y => vals(col * h + y))
-      def rowStrip(row: Int) = Array.tabulate(w)(x => vals(x * h + row))
-      val out = Seq.newBuilder[(Int, FocalStrip)]
-      out += idx -> FocalStrip(idx, x0, y0, w, h, vals)
-      if (tx + 1 < nx) out += (idx + ny) -> FocalStrip(idx + ny, x0 + w - 1, y0, 1, h, colStrip(w - 1))
-      if (tx > 0)      out += (idx - ny) -> FocalStrip(idx - ny, x0, y0, 1, h, colStrip(0))
-      if (ty + 1 < ny) out += (idx + 1)  -> FocalStrip(idx + 1, x0, y0 + h - 1, w, 1, rowStrip(h - 1))
-      if (ty > 0)      out += (idx - 1)  -> FocalStrip(idx - 1, x0, y0, w, 1, rowStrip(0))
-      if (corners) {
-        def cell(cx: Int, cy: Int) = Array(vals(cx * h + cy))
-        if (tx + 1 < nx && ty + 1 < ny)
-          out += (idx + ny + 1) -> FocalStrip(idx + ny + 1, x0 + w - 1, y0 + h - 1, 1, 1, cell(w - 1, h - 1))
-        if (tx + 1 < nx && ty > 0)
-          out += (idx + ny - 1) -> FocalStrip(idx + ny - 1, x0 + w - 1, y0, 1, 1, cell(w - 1, 0))
-        if (tx > 0 && ty + 1 < ny)
-          out += (idx - ny + 1) -> FocalStrip(idx - ny + 1, x0, y0 + h - 1, 1, 1, cell(0, h - 1))
-        if (tx > 0 && ty > 0)
-          out += (idx - ny - 1) -> FocalStrip(idx - ny - 1, x0, y0, 1, 1, cell(0, 0))
+      for (dx <- -1 to 1; dy <- -1 to 1; n <- grid.neighbor(idx, dx, dy)) yield {
+        // the tile's cells inside neighbor n's window: its last column or
+        // row toward a later neighbor, its first toward an earlier one
+        val c0 = if (dx > 0) w - 1 else 0; val cw = if (dx == 0) w else 1
+        val r0 = if (dy > 0) h - 1 else 0; val rh = if (dy == 0) h else 1
+        val (_, nx0, ny0) = grid.tiles(n)
+        MosaicPatch(n, 0L, "", x0 + c0 - nx0, y0 + r0 - ny0, cw, rh,
+          if (cw == w && rh == h) vals
+          else Array.tabulate(cw * rh)(k => vals((c0 + k / rh) * h + r0 + k % rh)))
       }
-      out.result()
     }
-
-    keyed.groupByKey(_._1).mapGroups { (idx, rows) =>
-      val (t, x0, y0) = layoutB.value(idx)
-      val w = t.width; val h = t.height
-      // padded window: own tile + 1-cell apron, NaN where nothing arrived
-      val pad = Array.fill((w + 2) * (h + 2))(Double.NaN)
-      @inline def pidx(gx: Int, gy: Int) = (gx - x0 + 1) * (h + 2) + (gy - y0 + 1)
-      rows.foreach { case (_, s) =>
-        var i = 0
-        while (i < s.sw) {
-          var j = 0
-          while (j < s.sh) {
-            val gx = s.sx0 + i; val gy = s.sy0 + j
-            if (gx >= x0 - 1 && gx <= x0 + w && gy >= y0 - 1 && gy <= y0 + h)
-              pad(pidx(gx, gy)) = s.values(i * s.sh + j)
-            j += 1
-          }
-          i += 1
-        }
-      }
-      val out = Array.fill(nBands)(new Array[Double](w * h))
-      kernel(pad, w, h, out)
-      Raster(f"$namePrefix-$idx%04d", 0L, w, h, t.minX, t.maxX, t.minY, t.maxY, t.epsg,
-             out.toSeq)
+    Mosaic.exchange(patches, gridB, Mosaic.Substitute, 1) { (idx, t, pad) =>
+      val out = Array.fill(nBands)(new Array[Double](t.width * t.height))
+      kernel(pad, t.width, t.height, out)
+      Raster(f"$namePrefix-$idx%04d", 0L, t.width, t.height, t.minX, t.maxX, t.minY, t.maxY,
+             t.epsg, out.toSeq)
     }
   }
 

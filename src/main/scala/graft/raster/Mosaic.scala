@@ -56,23 +56,8 @@ object Mosaic {
     * (the reference's minSizeForSplitting rule, WCSAdapter.java:60-61),
     * with each tile's global (x0, y0) cell offset in the region grid. */
   def splitTilesWithOffsets(region: TileGeometry,
-                            maxCells: Long = 1000000L): Seq[(TileGeometry, Int, Int)] = {
-    val side = math.max(1, math.sqrt(maxCells.toDouble).toInt)
-    val nx = (region.width + side - 1) / side
-    val ny = (region.height + side - 1) / side
-    for {
-      tx <- 0 until nx
-      ty <- 0 until ny
-    } yield {
-      val x0 = tx * side; val x1 = math.min(region.width, x0 + side)
-      val y0 = ty * side; val y1 = math.min(region.height, y0 + side)
-      (TileGeometry(
-        x1 - x0, y1 - y0,
-        region.minX + x0 * region.cellWidth, region.minX + x1 * region.cellWidth,
-        region.minY + y0 * region.cellHeight, region.minY + y1 * region.cellHeight,
-        region.epsg, region.t0, region.t1), x0, y0)
-    }
-  }
+                            maxCells: Long = 1000000L): Seq[(TileGeometry, Int, Int)] =
+    new TileGrid(region, maxCells).tiles.toSeq
 
   def splitTiles(region: TileGeometry, maxCells: Long = 1000000L): Seq[TileGeometry] =
     splitTilesWithOffsets(region, maxCells).map(_._1)
@@ -123,16 +108,41 @@ object Mosaic {
                           r.width, r.height, eMinX, eMaxX, eMinY, eMaxY, kernel)
       }
     }
-    mergeAssigned(patches, gridB, mode)
+    exchange(patches, gridB, mode, 0)(mosaicTile)
   }
 
-  /** A region's regular tx-major tile grid (tile i = tx * ny + ty), with
-    * each tile's global cell offset. */
-  private final class TileGrid(val region: TileGeometry, maxCells: Long) extends Serializable {
-    val tiles: Array[(TileGeometry, Int, Int)] = splitTilesWithOffsets(region, maxCells).toArray
+  /** The raster layer's one tile layout: a region's regular tx-major grid
+    * (tile i = tx * ny + ty) with each tile's global cell offset; lookups
+    * are O(1) arithmetic, never a layout scan. */
+  private[raster] final class TileGrid(val region: TileGeometry, maxCells: Long)
+      extends Serializable {
     private val side = math.max(1, math.sqrt(maxCells.toDouble).toInt)
     private val nx = (region.width + side - 1) / side
     private val ny = (region.height + side - 1) / side
+    val tiles: Array[(TileGeometry, Int, Int)] =
+      Array.tabulate(nx * ny) { i =>
+        val x0 = i / ny * side; val x1 = math.min(region.width, x0 + side)
+        val y0 = i % ny * side; val y1 = math.min(region.height, y0 + side)
+        (TileGeometry(
+          x1 - x0, y1 - y0,
+          region.minX + x0 * region.cellWidth, region.minX + x1 * region.cellWidth,
+          region.minY + y0 * region.cellHeight, region.minY + y1 * region.cellHeight,
+          region.epsg, region.t0, region.t1), x0, y0)
+      }
+
+    /** The index of a tile raster that sits on this layout. */
+    def indexOf(r: Raster): Int = {
+      val (x0, y0) = region.tileOffset(r)
+      require(x0 % side == 0 && y0 % side == 0,
+        s"tile ${r.item_id} does not sit on the region layout")
+      x0 / side * ny + y0 / side
+    }
+
+    /** The tile (dx, dy) tiles away from tile idx, if the region has one. */
+    def neighbor(idx: Int, dx: Int, dy: Int): Option[Int] = {
+      val tx = idx / ny + dx; val ty = idx % ny + dy
+      if (tx >= 0 && tx < nx && ty >= 0 && ty < ny) Some(tx * ny + ty) else None
+    }
 
     /** The tiles whose bbox grown by the apron (ax, ay) meets the envelope.
       * The window of candidate tile indices is O(1) arithmetic per item
@@ -187,13 +197,17 @@ object Mosaic {
     }
   }
 
-  /** Composite the patches into one Raster per tile of the grid; every tile
-    * is emitted, nodata-filled where no patch lands. Partition p of the
-    * tile-addressed shuffle holds the tiles i with i mod P == p; sorted by
-    * tile, it is composited one tile at a time, so a task holds one tile's
-    * patches however many tiles share its partition. */
-  private def mergeAssigned(patches: Dataset[MosaicPatch], gridB: Broadcast[TileGrid],
-                            mode: MergeMode): Dataset[Raster] = {
+  /** The one tile exchange: one Raster per tile of the grid, every tile
+    * emitted. A tile's patches (offsets in its frame) are pasted in
+    * (ts, item_id) order onto a NaN grid of the tile grown by `apron` cells
+    * per side, which `finish(tile, geometry, grid)` turns into the output.
+    * Partition p of the tile-addressed shuffle holds the tiles i with
+    * i mod P == p; sorted by tile, it is composited one tile at a time, so a
+    * task holds one tile's patches however many tiles share its partition. */
+  private[raster] def exchange(patches: Dataset[MosaicPatch], gridB: Broadcast[TileGrid],
+                               mode: MergeMode, apron: Int)
+                              (finish: (Int, TileGeometry, Array[Double]) => Raster)
+      : Dataset[Raster] = {
     val spark = patches.sparkSession
     import spark.implicits._
     val nTiles = gridB.value.tiles.length
@@ -211,25 +225,31 @@ object Mosaic {
             val i = it.head.tile
             val tilePatches = Array.newBuilder[MosaicPatch]
             while (it.hasNext && it.head.tile == i) tilePatches += it.next()
-            composite(i, tilePatches.result(), gridB.value.tiles(i)._1, mode)
+            val t = gridB.value.tiles(i)._1
+            finish(i, t, composite(tilePatches.result(), t, mode, apron))
           }
         }
       }
   }
 
-  /** Paste one tile's patches onto a nodata grid. */
-  private def composite(tileIdx: Int, patches: Array[MosaicPatch], t: TileGeometry,
-                        mode: MergeMode): Raster = {
+  /** The mosaic's finish: the composite is the tile. */
+  private def mosaicTile(i: Int, t: TileGeometry, acc: Array[Double]): Raster =
+    Raster(s"tile-$i", 0L, t.width, t.height, t.minX, t.maxX, t.minY, t.maxY, t.epsg, Seq(acc))
+
+  /** Paste one tile's patches onto a nodata grid grown by `apron`. */
+  private def composite(patches: Array[MosaicPatch], t: TileGeometry,
+                        mode: MergeMode, apron: Int): Array[Double] = {
     // determinism: sort by (ts, item_id) so SUBSTITUTE's later items win
     // independently of shuffle arrival order
     val sorted = patches.sortBy(p => (p.ts, p.item_id))
-    val acc = new Array[Double](t.width * t.height)
+    val gh = t.height + 2 * apron
+    val acc = new Array[Double]((t.width + 2 * apron) * gh)
     java.util.Arrays.fill(acc, Double.NaN)
     val sum = mode == Sum
     sorted.foreach { p =>
       var x = 0
       while (x < p.w) {
-        val dst = (p.px + x) * t.height + p.py
+        val dst = (p.px + apron + x) * gh + p.py + apron
         val src = x * p.h
         var y = 0
         while (y < p.h) {
@@ -243,8 +263,7 @@ object Mosaic {
         x += 1
       }
     }
-    Raster(s"tile-$tileIdx", 0L, t.width, t.height,
-           t.minX, t.maxX, t.minY, t.maxY, t.epsg, Seq(acc))
+    acc
   }
 
   /**
@@ -315,6 +334,6 @@ object Mosaic {
                                    eMinX, eMaxX, eMinY, eMaxY, kernel)
       } yield patch
     }
-    mergeAssigned(patches, gridB, mode)
+    exchange(patches, gridB, mode, 0)(mosaicTile)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{Raster, TileGeometry}
@@ -56,23 +57,36 @@ class FocalSpec extends AnyFunSuite with SparkSuite {
     assert(interior === 38 * 28 && border === 40 * 30 - 38 * 28)
   }
 
+  // slope, aspect/hillshade and curvatures, every band
   test("slope split-transparency: one tile == many tiles bit-exact") {
-    import spark.implicits._
     val region = TileGeometry(60, 40, 0, 6, 0, 4, 4326, 0, 0)
-    def run(maxCells: Long): Map[(Int, Int), Double] = {
+    type Op = (Dataset[Raster], TileGeometry, Long) => Dataset[Raster]
+    def run(op: Op, maxCells: Long): Map[(Int, Int), Seq[Double]] = {
       val terrain = Focal.terrainTiles(spark, region, maxCells = maxCells)
-      Focal.slope(terrain, region, maxCells = maxCells).collect().flatMap { r =>
+      op(terrain, region, maxCells).collect().flatMap { r =>
         val x0 = math.round((r.minX - region.minX) / region.cellWidth).toInt
         val y0 = math.round((r.minY - region.minY) / region.cellHeight).toInt
         for (x <- 0 until r.width; y <- 0 until r.height)
-          yield ((x0 + x, y0 + y), r.bands.head(x * r.height + y))
+          yield ((x0 + x, y0 + y), r.bands.map(_(x * r.height + y)))
       }.toMap
     }
-    val one = run(1000000); val many = run(300)
-    assert(one.size === 2400 && many.size === 2400)
-    one.foreach { case (k, v) =>
-      val w = many(k)
-      assert((v.isNaN && w.isNaN) || v === w, s"$k: $v vs $w")
+    // curvatures reads the diagonal neighbors, so its split cells need the
+    // corner cells of the halo
+    for ((name, op) <- Seq[(String, Op)]("slope" -> (Focal.slope(_, _, _)),
+                                         "aspect" -> (Focal.aspectHillshade(_, _, _)),
+                                         "curv" -> (Focal.curvatures(_, _, _)))) {
+      val one = run(op, 1000000)
+      assert(one.size === 2400, name)
+      assert(one.values.head.indices.forall(b => one.values.exists(v => !v(b).isNaN)), name)
+      for (maxCells <- Seq(60L, 300L)) {
+        val many = run(op, maxCells)
+        assert(many.size === 2400, s"$name/$maxCells")
+        one.foreach { case (k, v) =>
+          // bit-equal, every NaN equal to every NaN
+          assert(v.map(java.lang.Double.doubleToLongBits) ==
+                 many(k).map(java.lang.Double.doubleToLongBits), s"$name/$maxCells $k: $v vs ${many(k)}")
+        }
+      }
     }
   }
 

@@ -61,6 +61,7 @@ class IterativeLoopsSpec extends AnyFunSuite with SparkSuite {
       loop(0, maxRounds = 6, blockCap = 4) { s => steps += 1; s.select(($"v" + 1).as("v")) }
     }
     assert(e.getMessage.contains("toy did not converge in 6 rounds"))
+    assert(e.getMessage.endsWith("(7 run, 1 still moving)"), e.getMessage)
     assert(steps === 7)
   }
 }

@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{Raster, TileGeometry}
-import graft.raster.{Crs, Mosaic, Resample}
+import graft.raster.{Crs, Focal, Mosaic, Resample}
 
 /** The tile-addressed mosaic merge: patches resampled on the map side and
   * composited per tile must equal the whole-tile resample of every item
@@ -92,15 +93,21 @@ class MosaicMergeSpec extends AnyFunSuite with SparkSuite {
   test("the reduce stage runs min(tiles, shuffle partitions) tasks, every tile in one") {
     import spark.implicits._
     for (parts <- Seq(1, 4, 9)) withShufflePartitions(parts) {
-      val perTask = Mosaic.mergeToTiles(spark.createDataset(items), region, Mosaic.Sum,
-                                        Resample.Nearest, maxCells)
-        .mapPartitions(rows => Iterator(rows.map(_.item_id).toSeq))
-        .collect()
-      assert(perTask.length == math.min(tileAt.length, parts), s"partitions=$parts")
-      assert(perTask.flatten.sorted.toSeq == tileAt.indices.map(i => s"tile-$i").sorted)
-      // tile i lands in reduce partition i mod P
-      perTask.zipWithIndex.foreach { case (tiles, p) =>
-        assert(tiles.forall(_.stripPrefix("tile-").toInt % perTask.length == p), s"$parts/$p")
+      val merged = Mosaic.mergeToTiles(spark.createDataset(items), region, Mosaic.Sum,
+                                       Resample.Nearest, maxCells)
+      // the mosaic's composite and the focal halo share the one exchange
+      for ((out, name) <- Seq[(Dataset[Raster], Int => String)](
+             merged -> (i => s"tile-$i"),
+             Focal.slope(merged, region, maxCells) -> (i => f"slope-$i%04d"))) {
+        val perTask = out.mapPartitions(rows => Iterator(rows.map(_.item_id).toSeq)).collect()
+        val label = s"${name(0)} partitions=$parts"
+        val tileOf = tileAt.indices.map(i => name(i) -> i).toMap
+        assert(perTask.length == math.min(tileAt.length, parts), label)
+        assert(perTask.flatten.sorted.toSeq == tileOf.keys.toSeq.sorted, label)
+        // tile i lands in reduce partition i mod P
+        perTask.zipWithIndex.foreach { case (ids, p) =>
+          assert(ids.forall(id => tileOf(id) % perTask.length == p), s"$label/$p: $ids")
+        }
       }
     }
   }
