@@ -4,26 +4,27 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{Raster, TileGeometry}
 
+/** One labeled predicate cell from tile-local region labeling: global cell
+  * id, grid coordinates, and the tile-local component root's global id.
+  * Top-level for Catalyst's encoder codegen, like [[CogFile]]. */
+final case class CellRoot(cell: Long, cx: Long, cy: Long, root: Long)
+
 /**
  * Focal (neighborhood) operators over tiled rasters with DISTRIBUTED HALO
  * EXCHANGE — the hard part the reference sidesteps by fetching overlapping
  * coverage per tile (SURVEY.md §7.4.4). Tiles here are disjoint, so each
  * tile ships its 1-cell border strips and corner cells to the neighbors
  * that need them, as patches through the mosaic's tile exchange
- * (`Mosaic.exchange`), and computes its kernel over (own cells + received
- * halo) without ever materializing the full grid on one machine. Corner
- * cells always ship; 4-neighborhood kernels never read them.
+ * (`Mosaic.exchange`: one RDD shuffle keyed by tile, so an action on a
+ * focal output runs one job), and computes its kernel over (own cells +
+ * received halo) without ever materializing the full grid on one machine.
+ * Corner cells always ship; 4-neighborhood kernels never read them.
  *
  * Slope is the HortonMachine gradient the reference's `hm.geomorphology`
  * library declares (HMGeomorphology.java):
  *   p = (E - W) / (2 dx), q = (N - S) / (2 dy), slope = sqrt(p^2 + q^2);
  * cells whose 4-neighborhood leaves the region (or hits NaN) become NaN.
  */
-/** One labeled predicate cell from tile-local region labeling: global cell
-  * id, grid coordinates, and the tile-local component root's global id.
-  * Top-level for Catalyst's encoder codegen, like [[CogFile]]. */
-final case class CellRoot(cell: Long, cx: Long, cy: Long, root: Long)
-
 object Focal {
 
   /**
@@ -215,10 +216,9 @@ object Focal {
               (kernel: (Array[Double], Int, Int, Array[Array[Double]]) => Unit)
       : Dataset[Raster] = {
     val spark = tiles.sparkSession
-    import spark.implicits._
     val gridB = spark.sparkContext.broadcast(new Mosaic.TileGrid(region, maxCells))
 
-    val patches = tiles.flatMap { r =>
+    val patches = tiles.rdd.flatMap { r =>
       val grid = gridB.value
       val idx = grid.indexOf(r)
       val (_, x0, y0) = grid.tiles(idx)
@@ -235,7 +235,7 @@ object Focal {
           else Array.tabulate(cw * rh)(k => vals((c0 + k / rh) * h + r0 + k % rh)))
       }
     }
-    Mosaic.exchange(patches, gridB, Mosaic.Substitute, 1) { (idx, t, pad) =>
+    Mosaic.exchange(spark, patches, gridB, Mosaic.Substitute, 1) { (idx, t, pad) =>
       val out = Array.fill(nBands)(new Array[Double](t.width * t.height))
       kernel(pad, t.width, t.height, out)
       Raster(f"$namePrefix-$idx%04d", 0L, t.width, t.height, t.minX, t.maxX, t.minY, t.maxY,

@@ -1,8 +1,9 @@
 package graft.raster
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
-import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -14,9 +15,7 @@ import graft.sources.GeoTiff
 final case class CogFile(item_id: String, ts: Long, bytes: Array[Byte])
 
 /** One item resampled onto the region cells it covers in one target tile:
-  * a (w x h) D2_XY block at cell offset (px, py) inside tile `tile`. Every
-  * tile also gets one empty (0 x 0) placeholder, so it is emitted.
-  * (Top-level for the Catalyst encoder, like [[CogFile]].) */
+  * a (w x h) D2_XY block at cell offset (px, py) inside tile `tile`. */
 private[raster] final case class MosaicPatch(tile: Int, ts: Long, item_id: String,
                                              px: Int, py: Int, w: Int, h: Int,
                                              values: Array[Double])
@@ -40,11 +39,11 @@ private[raster] final case class MosaicPatch(tile: Int, ts: Long, item_id: Strin
  * cell tiles is a small list); items are range-joined to the tiles they
  * intersect, and each (tile, item) pair is resampled where the item is
  * read, on the map side, into a patch covering only the item's footprint
- * in that tile. The one shuffle is addressed by tile (repartitionById into
- * min(tiles, spark.sql.shuffle.partitions) partitions, a count AQE never
- * coalesces), so every tile's composite gets its own reduce task up to the
- * shuffle width; it moves covered-window grids, never whole items or the
- * dense target grid.
+ * in that tile. The one shuffle is an RDD shuffle keyed by tile into
+ * min(tiles, spark.sql.shuffle.partitions) partitions (tile i in partition
+ * i mod P), so every tile's composite gets its own reduce task up to the
+ * shuffle width and an action runs as one job; it moves covered-window
+ * grids, never whole items or the dense target grid.
  */
 object Mosaic {
 
@@ -87,8 +86,6 @@ object Mosaic {
                    kernel: Resample.Kernel = Resample.Nearest,
                    maxCells: Long = 1000000L): Dataset[Raster] = {
     val spark = items.sparkSession
-    import spark.implicits._
-
     val gridB = spark.sparkContext.broadcast(new TileGrid(region, maxCells))
     // apron: 2 source cells (bicubic support) expressed in world units of the
     // item's own resolution, applied on the tile bbox intersection test.
@@ -97,7 +94,7 @@ object Mosaic {
     // boundary-sampled bbox, Crs.transformEnvelope) — the per-cell coverage
     // test in the resample refines exactly, so over-assignment only costs a
     // little extra work.
-    val patches = items.flatMap { r =>
+    val patches = items.rdd.flatMap { r =>
       val (eMinX, eMaxX, eMinY, eMaxY) =
         if (r.epsg == region.epsg) (r.minX, r.maxX, r.minY, r.maxY)
         else Crs.transformEnvelope(r.epsg, region.epsg, r.minX, r.maxX, r.minY, r.maxY)
@@ -108,7 +105,7 @@ object Mosaic {
                           r.width, r.height, eMinX, eMaxX, eMinY, eMaxY, kernel)
       }
     }
-    exchange(patches, gridB, mode, 0)(mosaicTile)
+    exchange(spark, patches, gridB, mode, 0)(mosaicTile)
   }
 
   /** The raster layer's one tile layout: a region's regular tx-major grid
@@ -187,11 +184,10 @@ object Mosaic {
       val (r0, r1) = span(eMinY, eMaxY, region.minY, region.cellHeight, y0, t.height)
       if (c1 <= c0 || r1 <= r0) None
       else {
-        // mixed-CRS items sample through the world->source CRS hook (the
-        // reference's resample-with-CRS, RasterEncoder.java:376-389)
-        val hook = if (src.epsg == region.epsg) null else Crs.transform(region.epsg, src.epsg)
+        // mixed-CRS items sample through the region -> source CRS transform
+        // (the reference's resample-with-CRS, RasterEncoder.java:376-389)
         val vals = Resample.toGridAnchoredWindow(values, src, ox, oy, vw, vh, region,
-                                                 c0, r0, c1 - c0, r1 - r0, kernel, hook)
+                                                 c0, r0, c1 - c0, r1 - r0, kernel)
         Some(MosaicPatch(i, ts, itemId, c0 - x0, r0 - y0, c1 - c0, r1 - r0, vals))
       }
     }
@@ -201,36 +197,33 @@ object Mosaic {
     * emitted. A tile's patches (offsets in its frame) are pasted in
     * (ts, item_id) order onto a NaN grid of the tile grown by `apron` cells
     * per side, which `finish(tile, geometry, grid)` turns into the output.
-    * Partition p of the tile-addressed shuffle holds the tiles i with
-    * i mod P == p; sorted by tile, it is composited one tile at a time, so a
-    * task holds one tile's patches however many tiles share its partition. */
-  private[raster] def exchange(patches: Dataset[MosaicPatch], gridB: Broadcast[TileGrid],
-                               mode: MergeMode, apron: Int)
+    * Patches shuffle keyed by tile into P = min(tiles, shuffle partitions)
+    * partitions, tile i to partition i mod P (an Int key's hash is itself),
+    * sorted by tile. Every reduce partition of an RDD shuffle runs, empty or
+    * not, so partition p emits tiles p, p + P, ... in order, compositing one
+    * tile's patches at a time; a tile no patch reaches comes out all NaN.
+    * The action on the result runs as one job (map stage + reduce stage). */
+  private[raster] def exchange(spark: SparkSession, patches: RDD[MosaicPatch],
+                               gridB: Broadcast[TileGrid], mode: MergeMode, apron: Int)
                               (finish: (Int, TileGeometry, Array[Double]) => Raster)
       : Dataset[Raster] = {
-    val spark = patches.sparkSession
-    import spark.implicits._
     val nTiles = gridB.value.tiles.length
     val parts = math.min(nTiles, spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt)
-    val placeholders = spark.createDataset(0 until nTiles)
-      .map(i => MosaicPatch(i, 0L, "", 0, 0, 0, 0, Array.emptyDoubleArray))
-    patches.union(placeholders)
-      .repartitionById(parts, pmod(col("tile"), lit(parts)))
-      .sortWithinPartitions("tile")
-      .mapPartitions { rows =>
+    val tiles = patches.map(p => (p.tile, p))
+      .repartitionAndSortWithinPartitions(new HashPartitioner(parts))
+      .mapPartitionsWithIndex { (part, rows) =>
         val it = rows.buffered
-        new Iterator[Raster] {
-          def hasNext: Boolean = it.hasNext
-          def next(): Raster = {
-            val i = it.head.tile
-            val tilePatches = Array.newBuilder[MosaicPatch]
-            while (it.hasNext && it.head.tile == i) tilePatches += it.next()
-            val t = gridB.value.tiles(i)._1
-            finish(i, t, composite(tilePatches.result(), t, mode, apron))
-          }
+        Iterator.range(part, nTiles, parts).map { i =>
+          val tilePatches = Array.newBuilder[MosaicPatch]
+          while (it.hasNext && it.head._1 == i) tilePatches += it.next()._2
+          val t = gridB.value.tiles(i)._1
+          finish(i, t, composite(tilePatches.result(), t, mode, apron))
         }
       }
+    spark.createDataset(tiles)(rasterEncoder)
   }
+
+  private lazy val rasterEncoder: Encoder[Raster] = Encoders.product[Raster]
 
   /** The mosaic's finish: the composite is the tile. */
   private def mosaicTile(i: Int, t: TileGeometry, acc: Array[Double]): Raster =
@@ -291,11 +284,9 @@ object Mosaic {
                       band: Int = 0,
                       targetCellWidth: Double = 0.0): Dataset[Raster] = {
     val spark = files.sparkSession
-    import spark.implicits._
-
     val gridB = spark.sparkContext.broadcast(new TileGrid(region, maxCells))
 
-    val patches = files.flatMap { f =>
+    val patches = files.rdd.flatMap { f =>
       val p = GeoTiff.probe(f.bytes, f.item_id)
       val (eMinX, eMaxX, eMinY, eMaxY) =
         if (p.epsg == region.epsg) (p.minX, p.maxX, p.minY, p.maxY)
@@ -334,6 +325,6 @@ object Mosaic {
                                    eMinX, eMaxX, eMinY, eMaxY, kernel)
       } yield patch
     }
-    exchange(patches, gridB, mode, 0)(mosaicTile)
+    exchange(spark, patches, gridB, mode, 0)(mosaicTile)
   }
 }

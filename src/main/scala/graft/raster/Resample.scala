@@ -131,11 +131,8 @@ object Resample {
     * world -> source coords (through the CRS transform when the frames
     * differ) -> source fractional cell (the grid<->world affine F10) and
     * sample. Out-of-coverage -> NaN. */
-  def toGrid(src: Raster, target: TileGeometry, kernel: Kernel, band: Int = 0): Array[Double] = {
-    val hook = if (src.epsg == target.epsg) null
-               else Crs.transform(target.epsg, src.epsg)
-    toGridAnchored(src, target, 0, 0, target.width, target.height, kernel, band, hook)
-  }
+  def toGrid(src: Raster, target: TileGeometry, kernel: Kernel, band: Int = 0): Array[Double] =
+    toGridAnchored(src, target, 0, 0, target.width, target.height, kernel, band)
 
   /**
    * Tile-anchored variant: sample a (w x h) window of `region` starting at
@@ -144,18 +141,18 @@ object Resample {
    * computation (tile.minX + (x+0.5)*cw and region.minX + (gx+0.5)*cw differ
    * in the last ulp otherwise; split size must never change results).
    *
-   * `worldToSrc` is the CRS hook (J3, the engine analog of
-   * Operations.DEFAULT.resample with a target CRS, RasterEncoder.java:376-389):
-   * region cell centers are mapped into the SOURCE's coordinate frame before
-   * the source-grid affine; null means same-CRS (the fast separable path).
-   * Coverage is tested in source coordinates, so a reprojected sample is
-   * nodata exactly when it falls outside the source grid.
+   * When the source's EPSG differs from the region's (J3, the engine analog
+   * of Operations.DEFAULT.resample with a target CRS,
+   * RasterEncoder.java:376-389), region cell centers are mapped into the
+   * SOURCE's frame before the source-grid affine, one column at a time
+   * (Crs.columnTransform). Coverage is tested in source coordinates, so a
+   * reprojected sample is nodata exactly when it falls outside the source
+   * grid.
    */
   def toGridAnchored(src: Raster, region: TileGeometry, x0: Int, y0: Int,
-                     w: Int, h: Int, kernel: Kernel, band: Int = 0,
-                     worldToSrc: (Double, Double) => (Double, Double) = null): Array[Double] =
+                     w: Int, h: Int, kernel: Kernel, band: Int = 0): Array[Double] =
     toGridAnchoredWindow(src.bands(band), src.geom, 0, 0, src.width, src.height,
-                         region, x0, y0, w, h, kernel, worldToSrc)
+                         region, x0, y0, w, h, kernel)
 
   /** [[toGridAnchored]] over a (vw x vh) window at cell offset (ox, oy) of
     * the source grid `grid` (its full envelope and dimensions): sample
@@ -164,17 +161,16 @@ object Resample {
   private[raster] def toGridAnchoredWindow(values: Array[Double], grid: TileGeometry,
                                            ox: Int, oy: Int, vw: Int, vh: Int,
                                            region: TileGeometry, x0: Int, y0: Int,
-                                           w: Int, h: Int, kernel: Kernel,
-                                           worldToSrc: (Double, Double) => (Double, Double)): Array[Double] = {
+                                           w: Int, h: Int, kernel: Kernel): Array[Double] = {
     val out = new Array[Double](w * h)
     val cw = grid.cellWidth; val ch = grid.cellHeight
     @inline def at(sx: Double, sy: Double): Double =
       sample(values, grid.width, grid.height, ox, oy, vw, vh, sx, sy, kernel)
-    var x = 0
-    while (x < w) {
-      val wx = region.cellCenterX(x0 + x)
-      if (worldToSrc == null) {
-        // same-CRS fast path: column coordinate hoisted, no per-cell tuples
+    if (grid.epsg == region.epsg) {
+      var x = 0
+      while (x < w) {
+        // same CRS: column coordinate hoisted
+        val wx = region.cellCenterX(x0 + x)
         val sx = (wx - grid.minX) / cw
         var y = 0
         while (y < h) {
@@ -184,18 +180,25 @@ object Resample {
             else at(sx, (wy - grid.minY) / ch)
           y += 1
         }
-      } else {
+        x += 1
+      }
+    } else {
+      val toSrc = Crs.columnTransform(region.epsg, grid.epsg,
+                                      Array.tabulate(h)(y => region.cellCenterY(y0 + y)))
+      val us = new Array[Double](h); val vs = new Array[Double](h)
+      var x = 0
+      while (x < w) {
+        toSrc.column(region.cellCenterX(x0 + x), us, vs)
         var y = 0
         while (y < h) {
-          val wy = region.cellCenterY(y0 + y)
-          val (u, v) = worldToSrc(wx, wy)
+          val u = us(y); val v = vs(y)
           out(x * h + y) =
             if (u < grid.minX || u >= grid.maxX || v < grid.minY || v >= grid.maxY) Double.NaN
             else at((u - grid.minX) / cw, (v - grid.minY) / ch)
           y += 1
         }
+        x += 1
       }
-      x += 1
     }
     out
   }

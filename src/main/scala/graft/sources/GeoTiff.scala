@@ -1118,24 +1118,23 @@ object GeoTiff {
     sel.zipWithIndex.foreach { case (b, i) => destOf(b) = i }
     val bands = Array.fill(sel.length)(new Array[Double](vw * vh))
 
-    val nodata: Option[Double] = geoTags.ascii(TGdalNodata).flatMap { s =>
+    // GDAL_NODATA; a NaN nodata (or none) never equals a sample, so one
+    // compare per sample tests it
+    val nd = geoTags.ascii(TGdalNodata).flatMap { s =>
       val t = s.trim
-      if (t.isEmpty) None
-      else if (t.equalsIgnoreCase("nan")) Some(Double.NaN)
-      else t.toDoubleOption
-    }
-    @inline def toNaN(v: Double): Double =
-      if (nodata.exists(nd => !nd.isNaN && v == nd)) Double.NaN else v
-
-    @inline def sampleAt(bb: ByteBuffer, idx: Int): Double = (sampleFormat, bits) match {
-      case (3, 32) => bb.getFloat(idx).toDouble
-      case (3, 64) => bb.getDouble(idx)
-      case (2, 16) => bb.getShort(idx).toDouble
-      case (2, 32) => bb.getInt(idx).toDouble
-      case (1, 8)  => (bb.get(idx) & 0xff).toDouble
-      case (1, 16) => (bb.getShort(idx) & 0xffff).toDouble
-      case (1, 32) => (bb.getInt(idx).toLong & 0xffffffffL).toDouble
-      case other   => throw new IllegalArgumentException(
+      if (t.equalsIgnoreCase("nan")) None else t.toDoubleOption
+    }.getOrElse(Double.NaN)
+    // the sample reader, picked once per subfile; an unsupported format
+    // fails when a sample is read, so a decode that reads none succeeds
+    val sampleAt: SampleReader = (sampleFormat, bits) match {
+      case (3, 32) => (bb, idx) => bb.getFloat(idx).toDouble
+      case (3, 64) => (bb, idx) => bb.getDouble(idx)
+      case (2, 16) => (bb, idx) => bb.getShort(idx).toDouble
+      case (2, 32) => (bb, idx) => bb.getInt(idx).toDouble
+      case (1, 8)  => (bb, idx) => (bb.get(idx) & 0xff).toDouble
+      case (1, 16) => (bb, idx) => (bb.getShort(idx) & 0xffff).toDouble
+      case (1, 32) => (bb, idx) => (bb.getInt(idx).toLong & 0xffffffffL).toDouble
+      case other   => (_, _) => throw new IllegalArgumentException(
         s"unsupported sample format/bits $other")
     }
 
@@ -1168,26 +1167,28 @@ object GeoTiff {
         case _ => data0
       }
       val bb = ByteBuffer.wrap(data).order(order)
-      var rr = 0
-      while (rr < ch_) {
-        val row = row0 + rr
-        if (row >= vrow0 && row < vrow0 + vh && row < h) {
-          val y = vh - 1 - (row - vrow0)
-          var xi = 0
-          while (xi < cw_) {
-            val x = x0 + xi
-            if (x >= vx0 && x < vx0 + vw && x < w) {
-              val base = (rr * rw + xi) * sppC * bps
-              var b = 0
-              while (b < sppC) {
-                val dst = destOf(if (plane >= 0) plane else b)
-                if (dst >= 0)
-                  bands(dst)((x - vx0) * vh + y) = toNaN(sampleAt(bb, base + b * bps))
-                b += 1
-              }
+      // the chunk's rows and columns inside the window (and the image: edge
+      // chunks are padded), clamped once per chunk
+      val rrEnd = math.min(ch_, math.min(vrow0 + vh, h) - row0)
+      val xiLo = math.max(0, vx0 - x0); val xiEnd = math.min(cw_, math.min(vx0 + vw, w) - x0)
+      // output band of each interleaved sample (-1 = not selected)
+      val dsts = if (plane >= 0) Array(destOf(plane)) else destOf
+      var rr = math.max(0, vrow0 - row0)
+      while (rr < rrEnd) {
+        val y = vh - 1 - (row0 + rr - vrow0)
+        var b = 0
+        while (b < sppC) {
+          val dst = dsts(b)
+          if (dst >= 0) {
+            val band = bands(dst)
+            var xi = xiLo
+            while (xi < xiEnd) {
+              val v = sampleAt(bb, ((rr * rw + xi) * sppC + b) * bps)
+              band((x0 + xi - vx0) * vh + y) = if (v == nd) Double.NaN else v
+              xi += 1
             }
-            xi += 1
           }
+          b += 1
         }
         rr += 1
       }
@@ -1256,6 +1257,11 @@ object GeoTiff {
            if (vrow0 + vh == h) minY else maxY - (vrow0 + vh) * chSub,
            if (vrow0 == 0) maxY else maxY - vrow0 * chSub,
            epsg, bands.toSeq)
+  }
+
+  /** Reads the sample at a byte offset of a decoded chunk. */
+  private abstract class SampleReader {
+    def apply(bb: ByteBuffer, idx: Int): Double
   }
 
   private def firstValue(inline: Array[Byte], tpe: Int, order: ByteOrder): Long = {

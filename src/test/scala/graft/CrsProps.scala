@@ -56,6 +56,33 @@ object CrsProps extends Properties("Crs") {
       id(u, v) == ((u, v)) && math.abs(both._1 - u) < 1e-9 && math.abs(both._2 - v) < 1e-9
     }
 
+  // 3 x 4 sample grids over every ordered pair, UTM source frames included;
+  // the grid is axis-aligned in the source frame, spaced ~10 km
+  private val epsgs = Seq(4326, 3857, 32618, 32733)
+
+  property("column transform == point transform, bit for bit, for every frame pair") =
+    forAll(Gen.chooseNum(-80.0, 20.0), Gen.chooseNum(-60.0, 60.0)) { (lon0, lat0) =>
+      epsgs.forall { src =>
+        val (ax, ay) = Crs.transform(4326, src)(lon0, lat0)
+        val step = if (src == 4326) 0.1 else 10000.0
+        val ys = Array.tabulate(4)(j => ay + j * step)
+        epsgs.forall { dst =>
+          val ct = Crs.columnTransform(src, dst, ys)
+          val pt = Crs.transform(src, dst)
+          val u = new Array[Double](ys.length); val v = new Array[Double](ys.length)
+          (0 until 3).forall { i =>
+            val x = ax + i * step
+            ct.column(x, u, v)
+            ys.indices.forall { j =>
+              val (pu, pv) = pt(x, ys(j))
+              java.lang.Double.doubleToRawLongBits(u(j)) == java.lang.Double.doubleToRawLongBits(pu) &&
+                java.lang.Double.doubleToRawLongBits(v(j)) == java.lang.Double.doubleToRawLongBits(pv)
+            }
+          }
+        }
+      }
+    }
+
   property("envelope transform contains random interior points (4326->3857)") =
     forAll(Gen.chooseNum(-170.0, 150.0), Gen.chooseNum(-80.0, 60.0),
            Gen.chooseNum(0.1, 19.0), Gen.chooseNum(0.1, 19.0)) { (x0, y0, dx, dy) =>

@@ -344,22 +344,144 @@ class GeoTiffSpec extends AnyFunSuite {
     reader.dispose()
   }
 
+  /** A hand-built uncompressed little-endian GeoTIFF of `spp` chunky
+    * samples per pixel in (sampleFormat, bits), over [0, w) x [0, h) in
+    * unit cells: 16x16 tiles, or strips of 5 rows. `raw(x, row, b)` is the
+    * sample at column x of top-down row `row`; padding samples of edge
+    * tiles are 0. `nodata` is the GDAL_NODATA tag's text. */
+  private def craftTiff(w: Int, h: Int, spp: Int, sampleFormat: Int, bits: Int,
+                        tiled: Boolean, nodata: String)
+                       (raw: (Int, Int, Int) => Long): Array[Byte] = {
+    import java.nio.{ByteBuffer, ByteOrder}
+    val bps = bits / 8
+    val (cw, ch) = if (tiled) (16, 16) else (w, 5)
+    val across = (w + cw - 1) / cw; val down = (h + ch - 1) / ch
+    val chunkRows = (c: Int) => if (tiled) ch else math.min(ch, h - (c / across) * ch)
+    val sizes = Array.tabulate(across * down)(c => cw * chunkRows(c) * spp * bps)
+    val ascii = nodata.getBytes("US-ASCII") :+ 0.toByte
+    val dataOff = 8
+    val scaleOff = dataOff + sizes.sum; val tieOff = scaleOff + 24
+    val offsOff = tieOff + 48; val cntsOff = offsOff + 4 * sizes.length
+    val ndOff = cntsOff + 4 * sizes.length
+    val ifdOff = ndOff + ascii.length + 1 & ~1
+    require(spp <= 2)
+    val nE = if (tiled) 14 else 13
+    val buf = ByteBuffer.allocate(ifdOff + 2 + nE * 12 + 4).order(ByteOrder.LITTLE_ENDIAN)
+    buf.put('I'.toByte).put('I'.toByte).putShort(42).putInt(ifdOff)
+    for (c <- sizes.indices; rr <- 0 until chunkRows(c); xi <- 0 until cw; b <- 0 until spp) {
+      val x = (c % across) * cw + xi; val row = (c / across) * ch + rr
+      val v = if (x < w && row < h) raw(x, row, b) else 0L
+      bits match {
+        case 8 => buf.put(v.toByte)
+        case 16 => buf.putShort(v.toShort)
+        case 32 => buf.putInt(v.toInt)
+        case 64 => buf.putLong(v)
+      }
+    }
+    Array(1.0, 1.0, 0.0).foreach(buf.putDouble)
+    Array(0.0, 0.0, 0.0, 0.0, h.toDouble, 0.0).foreach(buf.putDouble)
+    sizes.scanLeft(dataOff)(_ + _).init.foreach(buf.putInt)
+    sizes.foreach(buf.putInt)
+    buf.put(ascii)
+    buf.position(ifdOff)
+    def entry(tag: Int, tpe: Int, count: Int)(wv: ByteBuffer => Unit): Unit = {
+      buf.putShort(tag.toShort).putShort(tpe.toShort).putInt(count)
+      val before = buf.position(); wv(buf)
+      while (buf.position() < before + 4) buf.put(0.toByte)
+    }
+    // per-sample SHORTs fit inline for spp <= 2; one chunk's LONG inline
+    val perSample = (v: Int) => (bb: ByteBuffer) => (0 until spp).foreach(_ => bb.putShort(v.toShort))
+    val n = sizes.length
+    val offsets = (bb: ByteBuffer) => { bb.putInt(if (n == 1) dataOff else offsOff); () }
+    val counts = (bb: ByteBuffer) => { bb.putInt(if (n == 1) sizes(0) else cntsOff); () }
+    buf.putShort(nE.toShort)
+    entry(256, 4, 1)(_.putInt(w)); entry(257, 4, 1)(_.putInt(h))
+    entry(258, 3, spp)(perSample(bits)); entry(259, 3, 1)(_.putShort(1))
+    entry(262, 3, 1)(_.putShort(1))
+    if (!tiled) entry(273, 4, n)(offsets)
+    entry(277, 3, 1)(_.putShort(spp.toShort))
+    if (!tiled) { entry(278, 4, 1)(_.putInt(ch)); entry(279, 4, n)(counts) }
+    if (tiled) {
+      entry(322, 4, 1)(_.putInt(cw)); entry(323, 4, 1)(_.putInt(ch))
+      entry(324, 4, n)(offsets); entry(325, 4, n)(counts)
+    }
+    entry(339, 3, spp)(perSample(sampleFormat))
+    entry(33550, 12, 3)(_.putInt(scaleOff)); entry(33922, 12, 6)(_.putInt(tieOff))
+    entry(42113, 2, ascii.length)(bb => if (ascii.length <= 4) bb.put(ascii) else bb.putInt(ndOff))
+    buf.putInt(0)
+    buf.array()
+  }
+
   test("windowed decode equals a manual crop of the full parse") {
+    def crop(bytes: Array[Byte], full: Raster, x0: Int, x1: Int, y0: Int, y1: Int,
+             label: String): Unit = {
+      val wr = GeoTiff.parseWindow(bytes, full.item_id, full.ts,
+                                   x0.toDouble, x1.toDouble, y0.toDouble, y1.toDouble)
+      assert((wr.minX, wr.maxX, wr.minY, wr.maxY) ==
+             (x0.toDouble, x1.toDouble, y0.toDouble, y1.toDouble), label)
+      assert((wr.width, wr.height) == (x1 - x0, y1 - y0), label)
+      for (b <- full.bands.indices; x <- 0 until wr.width; y <- 0 until wr.height) {
+        val want = full.bands(b)((x + x0) * full.height + (y + y0))
+        val got = wr.bands(b)(x * wr.height + y)
+        assert(java.lang.Double.doubleToRawLongBits(want) == java.lang.Double.doubleToRawLongBits(got),
+               s"$label b=$b ($x,$y)")
+      }
+    }
+    // windows whose edges fall inside 16x16 tiles and 5-row strips, one
+    // chunk wide, and the whole image
+    val windows = Seq((5, 21, 3, 14), (17, 18, 6, 7), (0, 37, 0, 23), (15, 33, 1, 22), (31, 37, 19, 23))
     val r = mkMulti(37, 23) // deliberately straddles 16x16 tile edges
     for (tile <- Seq(None, Some((16, 16))); planar <- Seq(1, 2)) {
       val f = tmp(".tif")
       GeoTiff.writeFull(r, f, deflate = true, tile = tile, planar = planar)
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)
       val full = GeoTiff.parse(bytes, "m1", 7L)
-      // world window [5, 21) x [3, 14) -> pixel window cols 5..20, rows...
-      val wr = GeoTiff.parseWindow(bytes, "m1", 7L, 5.0, 21.0, 3.0, 14.0)
-      val label = s"tile=$tile planar=$planar"
-      assert((wr.minX, wr.maxX, wr.minY, wr.maxY) == (5.0, 21.0, 3.0, 14.0), label)
-      assert((wr.width, wr.height) == (16, 11), label)
-      for (b <- 0 until 3; x <- 0 until wr.width; y <- 0 until wr.height) {
-        val want = full.bands(b)((x + 5) * full.height + (y + 3))
-        val got = wr.bands(b)(x * wr.height + y)
-        assert((want.isNaN && got.isNaN) || want == got, s"$label b=$b ($x,$y)")
+      windows.foreach { case (x0, x1, y0, y1) =>
+        crop(bytes, full, x0, x1, y0, y1, s"tile=$tile planar=$planar window=($x0,$x1,$y0,$y1)")
+      }
+    }
+    // every sample format and width the reader supports, two chunky samples
+    // per pixel, with a numeric GDAL_NODATA: the full parse reads the values
+    // (nodata -> NaN) and every window crops it
+    val w = 37; val h = 23
+    for ((fmt, bits, nd) <- Seq((1, 8, 200L), (1, 16, 60000L), (1, 32, 4000000000L),
+                                (2, 16, -300L), (2, 32, -2000000000L),
+                                (3, 32, java.lang.Float.floatToRawIntBits(-9999.5f).toLong),
+                                (3, 64, java.lang.Double.doubleToRawLongBits(-9999.25)));
+         tiled <- Seq(false, true)) {
+      def value(x: Int, row: Int, b: Int): Double = (x * 7 + row * 3 + b * 5) % 41 - 20.5
+      // the sample's stored bits; every 11th cell of band b holds nodata
+      def raw(x: Int, row: Int, b: Int): Long =
+        if ((x * h + row + b) % 11 == 0) nd
+        else fmt match {
+          case 3 if bits == 32 => java.lang.Float.floatToRawIntBits(value(x, row, b).toFloat).toLong
+          case 3 => java.lang.Double.doubleToRawLongBits(value(x, row, b))
+          case 2 => (value(x, row, b) * 2).toLong
+          case _ => (value(x, row, b) * 2 + 41).toLong
+        }
+      val ndText = fmt match {
+        case 3 if bits == 32 => "-9999.5"
+        case 3 => "-9999.25"
+        case _ => nd.toString
+      }
+      val label = s"format=$fmt bits=$bits tiled=$tiled"
+      val bytes = craftTiff(w, h, 2, fmt, bits, tiled, ndText)(raw)
+      val full = GeoTiff.parse(bytes, "c", 3L)
+      assert(full.bands.length == 2 && (full.width, full.height) == (w, h), label)
+      for (b <- 0 until 2; x <- 0 until w; row <- 0 until h) {
+        val got = full.bands(b)(x * h + (h - 1 - row))
+        val want =
+          if ((x * h + row + b) % 11 == 0) Double.NaN
+          else fmt match {
+            case 3 if bits == 32 => value(x, row, b).toFloat.toDouble
+            case 3 => value(x, row, b)
+            case 2 => value(x, row, b) * 2
+            case _ => value(x, row, b) * 2 + 41
+          }
+        assert((want.isNaN && got.isNaN) || want == got, s"$label b=$b ($x,$row): $got vs $want")
+      }
+      windows.foreach { case (x0, x1, y0, y1) =>
+        crop(bytes, full, x0, x1, y0, y1, s"$label window=($x0,$x1,$y0,$y1)")
       }
     }
   }

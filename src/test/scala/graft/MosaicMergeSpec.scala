@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{Raster, TileGeometry}
-import graft.raster.{Crs, Focal, Mosaic, Resample}
+import graft.raster.{CogFile, Crs, Focal, Mosaic, Resample}
+import graft.sources.GeoTiff
 
 /** The tile-addressed mosaic merge: patches resampled on the map side and
   * composited per tile must equal the whole-tile resample of every item
@@ -43,8 +45,7 @@ class MosaicMergeSpec extends AnyFunSuite with SparkSuite {
     tileAt.zipWithIndex.map { case ((t, x0, y0), i) =>
       val acc = Array.fill(t.width * t.height)(Double.NaN)
       items.sortBy(r => (r.ts, r.item_id)).foreach { r =>
-        val hook = if (r.epsg == region.epsg) null else Crs.transform(region.epsg, r.epsg)
-        val vals = Resample.toGridAnchored(r, region, x0, y0, t.width, t.height, kernel, 0, hook)
+        val vals = Resample.toGridAnchored(r, region, x0, y0, t.width, t.height, kernel)
         vals.indices.foreach { c =>
           val v = vals(c)
           if (!v.isNaN) acc(c) =
@@ -110,6 +111,68 @@ class MosaicMergeSpec extends AnyFunSuite with SparkSuite {
         }
       }
     }
+  }
+
+  test("no items still give every tile of the layout, all NaN") {
+    import spark.implicits._
+    for (parts <- Seq(1, 4, 9)) withShufflePartitions(parts) {
+      for ((out, name) <- Seq(
+             Mosaic.mergeToTiles(spark.emptyDataset[Raster], region, Mosaic.Sum,
+                                 Resample.Nearest, maxCells) -> "mergeToTiles",
+             Mosaic.mergeToTilesCog(spark.emptyDataset[CogFile], region, Mosaic.Substitute,
+                                    Resample.Bilinear, maxCells) -> "mergeToTilesCog")) {
+        val got = out.collect()
+        val label = s"$name partitions=$parts"
+        assert(got.map(_.item_id).sorted.toSeq == tileAt.indices.map(i => s"tile-$i").sorted, label)
+        got.foreach { r =>
+          val (t, _, _) = tileAt(r.item_id.stripPrefix("tile-").toInt)
+          assert((r.width, r.height, r.minX, r.maxX, r.minY, r.maxY, r.epsg) ==
+                 (t.width, t.height, t.minX, t.maxX, t.minY, t.maxY, t.epsg), label)
+          assert(r.bands.length == 1 && r.bands.head.length == t.width * t.height, label)
+          assert(r.bands.head.forall(_.isNaN), s"$label ${r.item_id}")
+        }
+      }
+    }
+  }
+
+  test("collecting a mosaic, a COG mosaic or a slope runs one job") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    }
+    val files = items.map(r => CogFile(r.item_id, r.ts,
+      GeoTiff.encode(r, bits = 64, tile = Some((16, 16)), deflate = true)))
+    sc.addSparkListener(listener)
+    try {
+      val groups = for (parts <- Seq(1, 4, 9)) yield withShufflePartitions(parts) {
+        def merged = Mosaic.mergeToTiles(spark.createDataset(items), region, Mosaic.Sum,
+                                         Resample.Bicubic, maxCells)
+        val actions = Seq[(String, () => Array[Raster])](
+          "mergeToTiles" -> (() => merged.collect()),
+          "mergeToTilesCog" -> (() => Mosaic.mergeToTilesCog(spark.createDataset(files), region,
+            Mosaic.Substitute, Resample.Nearest, maxCells).collect()),
+          "slope" -> (() => Focal.slope(merged, region, maxCells).collect()))
+        // build and collect inside the group: a job the build starts counts too
+        for ((name, run) <- actions) yield {
+          val g = s"$name/partitions=$parts"
+          sc.setJobGroup(g, g)
+          try assert(run().length == tileAt.length, g) finally sc.clearJobGroup()
+          g
+        }
+      }
+      // listener events arrive in order: once the marker job is seen, every
+      // job the actions started has been seen too
+      sc.setJobGroup("marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains("marker"))
+      val jobs = started.toArray.toSeq.groupBy(identity).map(kv => kv._1 -> kv._2.size)
+      groups.flatten.foreach(g => assert(jobs.getOrElse(g, 0) == 1, s"$g: $jobs"))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("cellRows: many tiles give the rows of one region-sized tile") {
