@@ -153,52 +153,41 @@ object Crs {
 
   /** src -> dst over a grid, one column at a time: `column(x, u, v)` maps
     * the points (x, ys(j)) to (u(j), v(j)). Bit for bit what [[transform]]
-    * gives point by point, at less cost: 4326 and 3857 map each axis from
-    * one coordinate (lon from x, lat from y, and back), so from such a
-    * source frame every term of lat is computed once per row here and every
-    * term of lon once per column, and a cell pays only for what couples the
-    * two (UTM's series); a UTM source frame transforms point by point. */
+    * gives point by point. From a 4326 or 3857 source frame (each axis maps
+    * from one coordinate: lon from x, lat from y) into a UTM frame, every
+    * term of lat is computed once per row here and every term of lon once
+    * per column, and a cell pays only for UTM's series; every other pair
+    * transforms point by point. */
   abstract class ColumnTransform {
     def column(x: Double, u: Array[Double], v: Array[Double]): Unit
   }
 
   def columnTransform(srcEpsg: Int, dstEpsg: Int, ys: Array[Double]): ColumnTransform = {
     val n = ys.length
-    val s = forEpsg(srcEpsg); val d = forEpsg(dstEpsg)
-    if (srcEpsg == dstEpsg || s.isInstanceOf[Utm]) {
-      val f = transform(srcEpsg, dstEpsg)
-      (x, u, v) => {
-        var j = 0
-        while (j < n) {
-          val (a, b) = f(x, ys(j))
-          u(j) = a; v(j) = b
-          j += 1
+    (forEpsg(srcEpsg), forEpsg(dstEpsg)) match {
+      case (s, utm: Utm) if !s.isInstanceOf[Utm] =>
+        val t = ys.map(y => utm.tOf(s.toLonLat(0.0, y)._2))
+        val st = t.map(ti => math.sqrt(1 + ti * ti))
+        (x, u, v) => {
+          val lam = utm.lamOf(s.toLonLat(x, 0.0)._1)
+          val cosLam = math.cos(lam); val sinLam = math.sin(lam)
+          var j = 0
+          while (j < n) {
+            val (e, nn) = utm.series(math.atan2(t(j), cosLam), atanh(sinLam / st(j)))
+            u(j) = e; v(j) = nn
+            j += 1
+          }
         }
-      }
-    } else {
-      val lat = ys.map(s.toLonLat(0.0, _)._2)
-      @inline def lon(x: Double): Double = s.toLonLat(x, 0.0)._1
-      d match {
-        case utm: Utm =>
-          val t = lat.map(utm.tOf)
-          val st = t.map(ti => math.sqrt(1 + ti * ti))
-          (x, u, v) => {
-            val lam = utm.lamOf(lon(x))
-            val cosLam = math.cos(lam); val sinLam = math.sin(lam)
-            var j = 0
-            while (j < n) {
-              val (e, nn) = utm.series(math.atan2(t(j), cosLam), atanh(sinLam / st(j)))
-              u(j) = e; v(j) = nn
-              j += 1
-            }
+      case _ =>
+        val f = transform(srcEpsg, dstEpsg)
+        (x, u, v) => {
+          var j = 0
+          while (j < n) {
+            val (a, b) = f(x, ys(j))
+            u(j) = a; v(j) = b
+            j += 1
           }
-        case _ =>
-          val dy = lat.map(d.fromLonLat(0.0, _)._2)
-          (x, u, v) => {
-            java.util.Arrays.fill(u, d.fromLonLat(lon(x), 0.0)._1)
-            System.arraycopy(dy, 0, v, 0, n)
-          }
-      }
+        }
     }
   }
 

@@ -218,7 +218,7 @@ object Focal {
     val spark = tiles.sparkSession
     val gridB = spark.sparkContext.broadcast(new Mosaic.TileGrid(region, maxCells))
 
-    val patches = tiles.rdd.flatMap { r =>
+    val patches = Mosaic.lazyRdd(tiles).flatMap { r =>
       val grid = gridB.value
       val idx = grid.indexOf(r)
       val (_, x0, y0) = grid.tiles(idx)

@@ -1,6 +1,8 @@
 package graft.raster
 
-import org.apache.spark.HashPartitioner
+import scala.reflect.ClassTag
+
+import org.apache.spark.{Dependency, HashPartitioner, OneToOneDependency, Partition, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
@@ -94,7 +96,7 @@ object Mosaic {
     // boundary-sampled bbox, Crs.transformEnvelope) — the per-cell coverage
     // test in the resample refines exactly, so over-assignment only costs a
     // little extra work.
-    val patches = items.rdd.flatMap { r =>
+    val patches = lazyRdd(items).flatMap { r =>
       val (eMinX, eMaxX, eMinY, eMaxY) =
         if (r.epsg == region.epsg) (r.minX, r.maxX, r.minY, r.maxY)
         else Crs.transformEnvelope(r.epsg, region.epsg, r.minX, r.maxX, r.minY, r.maxY)
@@ -202,7 +204,8 @@ object Mosaic {
     * sorted by tile. Every reduce partition of an RDD shuffle runs, empty or
     * not, so partition p emits tiles p, p + P, ... in order, compositing one
     * tile's patches at a time; a tile no patch reaches comes out all NaN.
-    * The action on the result runs as one job (map stage + reduce stage). */
+    * An action on the result runs as one job (map stage + reduce stage),
+    * after the jobs of any shuffle inside the input (see [[lazyRdd]]). */
   private[raster] def exchange(spark: SparkSession, patches: RDD[MosaicPatch],
                                gridB: Broadcast[TileGrid], mode: MergeMode, apron: Int)
                               (finish: (Int, TileGeometry, Array[Double]) => Raster)
@@ -224,6 +227,23 @@ object Mosaic {
   }
 
   private lazy val rasterEncoder: Encoder[Raster] = Encoders.product[Raster]
+
+  /** The rows of `ds` as an RDD for [[exchange]]'s patches, planned only
+    * when a job first asks for its partitions. `Dataset.rdd` plans at once,
+    * and under adaptive execution planning runs the input's own shuffle
+    * stages; deferring it keeps building a mosaic or focal Dataset free of
+    * Spark jobs whatever its input, as building any Dataset is. */
+  private[raster] def lazyRdd[T: ClassTag](ds: Dataset[T]): RDD[T] = new DeferredRDD(ds)
+
+  private final class DeferredRDD[T: ClassTag](@transient ds: Dataset[T])
+      extends RDD[T](ds.sparkSession.sparkContext, Nil) {
+    @transient private lazy val source = ds.rdd
+    override protected def getDependencies: Seq[Dependency[_]] =
+      Seq(new OneToOneDependency(source))
+    override protected def getPartitions: Array[Partition] = source.partitions
+    override def compute(split: Partition, context: TaskContext): Iterator[T] =
+      firstParent[T].iterator(split, context)
+  }
 
   /** The mosaic's finish: the composite is the tile. */
   private def mosaicTile(i: Int, t: TileGeometry, acc: Array[Double]): Raster =
@@ -286,7 +306,7 @@ object Mosaic {
     val spark = files.sparkSession
     val gridB = spark.sparkContext.broadcast(new TileGrid(region, maxCells))
 
-    val patches = files.rdd.flatMap { f =>
+    val patches = lazyRdd(files).flatMap { f =>
       val p = GeoTiff.probe(f.bytes, f.item_id)
       val (eMinX, eMaxX, eMinY, eMaxY) =
         if (p.epsg == region.epsg) (p.minX, p.maxX, p.minY, p.maxY)

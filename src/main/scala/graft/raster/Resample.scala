@@ -74,7 +74,7 @@ object Resample {
     * full grid, and only the final tap index subtracts the integer offset
     * (exact), so a window samples bit-identically to the whole grid wherever
     * its taps lie inside it. Taps outside the window clamp to its border. */
-  private def sample(values: Array[Double], gw: Int, gh: Int, ox: Int, oy: Int,
+  private[graft] def sample(values: Array[Double], gw: Int, gh: Int, ox: Int, oy: Int,
                      vw: Int, vh: Int, sx: Double, sy: Double, kernel: Kernel): Double = {
     @inline def col(x: Int): Int = clamp(clamp(x, gw - 1) - ox, vw - 1)
     @inline def row(y: Int): Int = clamp(clamp(y, gh - 1) - oy, vh - 1)

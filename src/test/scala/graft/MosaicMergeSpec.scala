@@ -39,17 +39,24 @@ class MosaicMergeSpec extends AnyFunSuite with SparkSuite {
   }
   private val emptyTile = 5
 
-  /** The merge the patches must reproduce: every item resampled over the
-    * whole tile, merged cell-wise in (ts, item_id) order. */
+  /** The merge the patches must reproduce: every item sampled at every cell
+    * of the whole tile, each cell center mapped into the item's frame point
+    * by point (Crs.transform), merged cell-wise in (ts, item_id) order. */
   private def reference(mode: Mosaic.MergeMode, kernel: Resample.Kernel): Map[String, Array[Double]] =
     tileAt.zipWithIndex.map { case ((t, x0, y0), i) =>
       val acc = Array.fill(t.width * t.height)(Double.NaN)
       items.sortBy(r => (r.ts, r.item_id)).foreach { r =>
-        val vals = Resample.toGridAnchored(r, region, x0, y0, t.width, t.height, kernel)
-        vals.indices.foreach { c =>
-          val v = vals(c)
-          if (!v.isNaN) acc(c) =
-            if (mode == Mosaic.Sum && !acc(c).isNaN) acc(c) + v else v
+        val toItem = Crs.transform(region.epsg, r.epsg)
+        for (x <- 0 until t.width; y <- 0 until t.height) {
+          val (u, v) = toItem(region.cellCenterX(x0 + x), region.cellCenterY(y0 + y))
+          val c = x * t.height + y
+          if (u >= r.minX && u < r.maxX && v >= r.minY && v < r.maxY) {
+            val s = Resample.sample(r.bands.head, r.width, r.height, 0, 0, r.width, r.height,
+                                    (u - r.minX) / r.geom.cellWidth,
+                                    (v - r.minY) / r.geom.cellHeight, kernel)
+            if (!s.isNaN) acc(c) =
+              if (mode == Mosaic.Sum && !acc(c).isNaN) acc(c) + s else s
+          }
         }
       }
       s"tile-$i" -> acc
@@ -135,7 +142,7 @@ class MosaicMergeSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("collecting a mosaic, a COG mosaic or a slope runs one job") {
+  test("collecting a mosaic, a COG mosaic or a slope runs one job; building runs none") {
     import spark.implicits._
     val sc = spark.sparkContext
     val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -163,6 +170,19 @@ class MosaicMergeSpec extends AnyFunSuite with SparkSuite {
           g
         }
       }
+      // an input with a shuffle of its own: building still starts no job
+      // (its shuffle runs when the result is acted on)
+      val builds = Seq[(String, () => Dataset[Raster])](
+        "build mergeToTiles" -> (() => Mosaic.mergeToTiles(
+          spark.createDataset(items).repartition(3), region, Mosaic.Sum, Resample.Bicubic, maxCells)),
+        "build mergeToTilesCog" -> (() => Mosaic.mergeToTilesCog(
+          spark.createDataset(files).repartition(3), region, Mosaic.Sum, Resample.Nearest, maxCells)),
+        "build slope" -> (() => Focal.slope(Mosaic.mergeToTiles(spark.createDataset(items),
+          region, Mosaic.Sum, Resample.Nearest, maxCells).repartition(3), region, maxCells)))
+      val built = for ((g, build) <- builds) yield {
+        sc.setJobGroup(g, g)
+        try build() finally sc.clearJobGroup()
+      }
       // listener events arrive in order: once the marker job is seen, every
       // job the actions started has been seen too
       sc.setJobGroup("marker", "marker")
@@ -172,6 +192,8 @@ class MosaicMergeSpec extends AnyFunSuite with SparkSuite {
       assert(started.contains("marker"))
       val jobs = started.toArray.toSeq.groupBy(identity).map(kv => kv._1 -> kv._2.size)
       groups.flatten.foreach(g => assert(jobs.getOrElse(g, 0) == 1, s"$g: $jobs"))
+      builds.foreach { case (g, _) => assert(!jobs.contains(g), s"$g: $jobs") }
+      built.foreach(ds => assert(ds.collect().length == tileAt.length))
     } finally sc.removeSparkListener(listener)
   }
 
