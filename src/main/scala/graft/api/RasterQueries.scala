@@ -346,7 +346,7 @@ object RasterQueries {
     // subsampling behavior): 25 items written as tiled DEFLATE GeoTIFFs
     // with overview IFD chains — even keys carry x2 AND x4 overviews, odd
     // keys only x2 — then scanned distributed and decoded via
-    // parseOverview(targetCellWidth = 4.0), which must pick the COARSEST
+    // GeoTiff.parse(targetCellWidth = 4.0), which must pick the COARSEST
     // subfile that still resolves the 4-unit target cells: factor 4 for
     // even items, factor 2 for odd. The mosaic values are therefore
     // nearest-decimated full-res values at stride 4 or 2 per parity — the
@@ -355,7 +355,7 @@ object RasterQueries {
     "q73_cog_overview_mosaic" -> { (s, dir) =>
       import s.implicits._
       val items = overviewTiffs(s, dir, "q73", bigTiff = false).map { f =>
-        GeoTiff.parseOverview(f.bytes, f.item_id, f.ts, targetCellWidth = 4.0)
+        GeoTiff.parse(f.bytes, f.item_id, f.ts, targetCellWidth = 4.0)
       }
       regionCells(Mosaic.mergeToTiles(items, OverviewRegion, Mosaic.Substitute,
                                       maxCells = 2000L), OverviewRegion)

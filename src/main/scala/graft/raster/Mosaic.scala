@@ -283,15 +283,17 @@ object Mosaic {
    * COG-native mosaic: files stay WHERE THEY ARE; only resampled patches
    * move. Each file is header-probed (GeoTiff.probe — no pixel decode) for
    * tile assignment, then for every intersecting tile the executor decodes
-   * ONLY the strips/tiles under that tile's bbox + kernel apron, at the
-   * overview level matching the region's cell size (GeoTiff.parseWindow),
-   * and resamples that window into the tile's patch. Decode work is
-   * therefore O(window) regardless of source resolution — mosaicking a
-   * 100x80-cell region out of 10^5-pixel COGs inflates kilobytes per
-   * (item, tile) pair, where [[mergeToTiles]] needs the full grids decoded.
-   * A window is sampled in its subfile's full grid, indexed by its integer
-   * pixel offset, so the result equals [[mergeToTiles]] over the fully
-   * decoded subfile bit for bit, for every kernel (CogMosaicSpec).
+   * ONLY the chunks under that tile's bbox + kernel apron, at the overview
+   * level matching the region's cell size (GeoTiff.parseWindow; a window
+   * that misses the file is skipped, a corrupt file fails the task), and
+   * resamples that window into the tile's patch. Decode work is therefore
+   * O(window) regardless of source resolution — mosaicking a 100x80-cell
+   * region out of 10^5-pixel COGs inflates kilobytes per (item, tile) pair,
+   * where [[mergeToTiles]] needs the full grids decoded. parseWindow also
+   * reports the window's integer pixel offset in its subfile, so the window
+   * is sampled in that subfile's full grid and the result equals
+   * [[mergeToTiles]] over the fully decoded subfile bit for bit, for every
+   * kernel (CogMosaicSpec).
    *
    * @param band            band to mosaic (the reference's BAND_PARAM /
    *                        selectSampleDimension, RasterEncoder.java:107-113)
@@ -334,8 +336,8 @@ object Mosaic {
                                      t.minX - ax, t.maxX + ax, t.minY - ay, t.maxY + ay)
         // None = the (conservative, apron-padded) window missed — cheap and
         // silent; a CORRUPT file still throws and fails the task loudly
-        win <- GeoTiff.parseSubfileWindow(f.bytes, f.item_id, f.ts, wx0, wx1, wy0, wy1,
-                                          Some(Seq(band)), targetCellWidth)
+        win <- GeoTiff.parseWindow(f.bytes, f.item_id, f.ts, wx0, wx1, wy0, wy1,
+                                   Some(Seq(band)), targetCellWidth)
         // sample in the chosen subfile's full grid (the IFD0 envelope over
         // its dimensions), exactly as the full decode of that subfile does
         grid = TileGeometry(win.gridW, win.gridH, p.minX, p.maxX, p.minY, p.maxY,

@@ -22,19 +22,26 @@ import graft.model.Raster
  * reduced-resolution subfiles chained after IFD0, NewSubfileType=1,
  * nearest top-left decimation — GDAL's overview convention).
  *
+ * Both sides lay pixels out on ONE chunk grid: a strip is a tile as wide
+ * as the image and RowsPerStrip tall, except that strips carry no padding
+ * and the last one may be short.
+ *
  * Reader: either byte order, strips or tiles, chunky or planar interleave,
  * any SamplesPerPixel (the multi-band COG shape the reference selects bands
  * from — adapters/raster/RasterEncoder.java:107-113,
- * adapters/stac/StacResource.java:433-437), uncompressed or DEFLATE, sample
- * formats IEEE-float 32/64 and signed/unsigned int 8/16/32 (ints are widened
- * to the double plane; a GDAL_NODATA value maps to NaN). Band selection
- * happens AT DECODE ([[parseBands]]): with planar interleave the unselected
- * planes' strips/tiles are never even inflated. Overview selection
- * ([[parseOverview]]) walks the IFD chain and decodes the COARSEST subfile
- * that still resolves the requested cell size — the GeoTools/GDAL
+ * adapters/stac/StacResource.java:433-437), uncompressed, LZW or DEFLATE,
+ * sample formats IEEE-float 32/64 and signed/unsigned int 8/16/32 (ints are
+ * widened to the double plane; a GDAL_NODATA value maps to NaN). Two decode
+ * entries: [[parse]] decodes a whole subfile, [[parseWindow]] only the
+ * chunks under a world-coordinate window. Both select bands AT DECODE (with
+ * planar interleave the unselected planes' chunks are never even inflated)
+ * and, given a target cell width, walk the IFD chain and decode the
+ * COARSEST subfile that still resolves it — the GeoTools/GDAL
  * read-with-subsampling-hints behavior the reference gets from its
- * GridCoverage readers. Both classic TIFF (version 42) and BigTIFF
- * (version 43: 8-byte IFD offsets/counts, LONG8 strip/tile offset arrays —
+ * GridCoverage readers. A chunk, image or cell count past what a byte or
+ * double array can hold fails with an IllegalArgumentException, as does an
+ * uncompressed chunk shorter than its rows. Both classic TIFF (version 42)
+ * and BigTIFF (version 43: 8-byte IFD offsets/counts, LONG8 offset arrays —
  * what GDAL emits for large COGs, and what the reference accepts
  * transparently through GeoTools' TIFFImageReader) are read; the writer
  * emits either via `bigTiff = true`. The ingest unit is a single byte
@@ -161,8 +168,11 @@ object GeoTiff {
     require(predictor != 2 || palette.isDefined,
             "predictor 2 (horizontal differencing) applies to integer samples " +
               "— the writer's integer path is palette mode")
+    // the reader rejects an image without cells, so the writer does too
+    require(r.width > 0 && r.height > 0, s"empty raster ${r.width}x${r.height}")
     tile.foreach { case (tw, th) =>
-      require(tw % 16 == 0 && th % 16 == 0, s"tile dims must be multiples of 16: ${tw}x$th")
+      require(tw > 0 && th > 0 && tw % 16 == 0 && th % 16 == 0,
+              s"tile dims must be positive multiples of 16: ${tw}x$th")
     }
     val bps = bits / 8
     val spp = r.bands.length
@@ -172,71 +182,44 @@ object GeoTiff {
         if (bits == 8) bb.put(v.toInt.toByte) else bb.putShort(v.toInt.toShort)
       } else if (bits == 64) bb.putDouble(v) else bb.putFloat(v.toFloat)
 
-    // ---- image data chunks for one subfile, in file order ----
+    // ---- image data chunks for one subfile, in file order: chunks
+    // left-to-right, top-to-bottom, planes consecutive (planar). A strip is
+    // a tile as wide and as tall as the subfile, so a stripped file holds
+    // one chunk per plane; edge tiles are padded per the TIFF spec ----
     def chunksOf(s: Raster): Seq[Array[Byte]] = {
       val w = s.width; val h = s.height
-      val raw: Seq[Array[Byte]] = tile match {
-        case None =>
-          // one strip per plane; chunky = a single strip with per-pixel
-          // interleave, planar = spp strips each holding one full band
-          val planes = if (planar == 2) spp else 1
-          (0 until planes).map { p =>
-            val sppC = if (planar == 2) 1 else spp
-            val bb = ByteBuffer.allocate(w * h * sppC * bps).order(ByteOrder.LITTLE_ENDIAN)
-            var row = 0
-            while (row < h) {
-              val y = h - 1 - row // top-down rows from the south-up grid
-              var x = 0
-              while (x < w) {
-                var b = 0
-                while (b < sppC) {
-                  putVal(bb, s.bands(if (planar == 2) p else b)(x * h + y)); b += 1
-                }
-                x += 1
-              }
-              row += 1
-            }
-            bb.array()
-          }
-        case Some((tw, th)) =>
-          // tiles left-to-right, top-to-bottom, planes consecutive (planar);
-          // edge tiles are padded to the full tile size per the TIFF spec
-          val ta = (w + tw - 1) / tw; val td = (h + th - 1) / th
-          val planes = if (planar == 2) spp else 1
-          for {
-            p <- 0 until planes
-            tyi <- 0 until td
-            txi <- 0 until ta
-          } yield {
-            val sppC = if (planar == 2) 1 else spp
-            val bb = ByteBuffer.allocate(tw * th * sppC * bps).order(ByteOrder.LITTLE_ENDIAN)
-            var rr = 0
-            while (rr < th) {
-              val row = tyi * th + rr
-              var xi = 0
-              while (xi < tw) {
-                val x = txi * tw + xi
-                var b = 0
-                while (b < sppC) {
-                  val v = if (row < h && x < w)
-                    s.bands(if (planar == 2) p else b)(x * h + (h - 1 - row))
-                  else 0.0
-                  putVal(bb, v); b += 1
-                }
-                xi += 1
-              }
-              rr += 1
-            }
-            bb.array()
-          }
-      }
+      val (tw, th) = tile.getOrElse((w, h))
+      val ta = (w + tw - 1) / tw; val td = (h + th - 1) / th
+      val planes = if (planar == 2) spp else 1
       val sppC = if (planar == 2) 1 else spp
-      val rowBytes = (tile.map(_._1).getOrElse(w)) * sppC * bps
-      raw.map { c0 =>
+      val rowBytes = tw * sppC * bps
+      for {
+        p <- 0 until planes
+        tyi <- 0 until td
+        txi <- 0 until ta
+      } yield {
+        val bb = ByteBuffer.allocate(th * rowBytes).order(ByteOrder.LITTLE_ENDIAN)
+        var rr = 0
+        while (rr < th) {
+          val row = tyi * th + rr // top-down rows from the south-up grid
+          var xi = 0
+          while (xi < tw) {
+            val x = txi * tw + xi
+            var b = 0
+            while (b < sppC) {
+              val v = if (row < h && x < w)
+                s.bands(if (planar == 2) p else b)(x * h + (h - 1 - row))
+              else 0.0
+              putVal(bb, v); b += 1
+            }
+            xi += 1
+          }
+          rr += 1
+        }
         val c =
-          if (predictor == 3) fpPredictEncode(c0, rowBytes, bps)
-          else if (predictor == 2) intPredictEncode(c0, rowBytes, bps, sppC)
-          else c0
+          if (predictor == 3) fpPredictEncode(bb.array(), rowBytes, bps)
+          else if (predictor == 2) intPredictEncode(bb.array(), rowBytes, bps, sppC)
+          else bb.array()
         if (deflate) deflateBytes(c) else if (lzw) lzwEncode(c) else c
       }
     }
@@ -888,16 +871,25 @@ object GeoTiff {
     * (NewSubfileType bit 0). */
   final case class IfdInfo(offset: Long, width: Int, height: Int, reduced: Boolean)
 
-  /** Walk the IFD chain (IFD0 first). A COG carries 1 + #overviews entries. */
+  /** The IFD chain (IFD0 first). A COG carries 1 + #overviews entries. */
   def ifdChain(bytes: Array[Byte], itemId: String = "tiff"): Seq[IfdInfo] = {
     val (buf, order, first, big) = openTiff(bytes, itemId)
-    val out = Seq.newBuilder[IfdInfo]
-    var off = first
+    walkChain(bytes, buf, order, first, big).map { case (off, tags) =>
+      IfdInfo(off, tags.scalar(TImageWidth).toInt, tags.scalar(TImageLength).toInt,
+              (tags.scalar(TNewSubfileType, 0) & 1L) == 1L)
+    }
+  }
+
+  /** The IFDs chained from offset `from` (0 = none), as (offset, tags); at
+    * most 64 of them, so a cyclic chain ends. */
+  private def walkChain(bytes: Array[Byte], buf: ByteBuffer, order: ByteOrder,
+                        from: Long, big: Boolean): Seq[(Long, Tags)] = {
+    val out = Seq.newBuilder[(Long, Tags)]
+    var off = from
     var guard = 0
     while (off != 0 && guard < 64) {
       val (tags, next) = readIfd(bytes, buf, order, off, big)
-      out += IfdInfo(off, tags.scalar(TImageWidth).toInt, tags.scalar(TImageLength).toInt,
-                     (tags.scalar(TNewSubfileType, 0) & 1L) == 1L)
+      out += off -> tags
       off = next; guard += 1
     }
     out.result()
@@ -944,27 +936,47 @@ object GeoTiff {
            keyMap.get(3072L).orElse(keyMap.get(2048L)).getOrElse(4326))
   }
 
-  /** Overview selection: the COARSEST subfile of the chain whose cell width
-    * still resolves `targetCellWidth` (cell <= target); IFD0 when every
+  /** The subfile a decode reads, and IFD0, whose georeferencing and nodata
+    * every subfile inherits (overview subfiles carry none). */
+  private final case class Subfile(order: ByteOrder, tags: Tags, tags0: Tags)
+
+  /** Open `bytes` at the subfile a decode of `targetCellWidth` reads: IFD0
+    * when the target is 0, else the COARSEST subfile of the chain whose
+    * cell width still resolves the target (cell <= target), IFD0 when every
     * overview is coarser than requested. */
-  private def coarsestSubfile(bytes: Array[Byte], buf: ByteBuffer, order: ByteOrder,
-                              big: Boolean, tags0: Tags, next0: Long,
-                              targetCellWidth: Double, itemId: String): Tags = {
-    val w0 = tags0.scalar(TImageWidth).toInt
-    val scale0 = tags0.doubles(TModelPixelScale)
-    require(scale0.length >= 2, s"$itemId: missing GeoTIFF georeferencing tags")
-    val spanX = w0 * scale0(0)
+  private def openSubfile(bytes: Array[Byte], itemId: String,
+                          targetCellWidth: Double): Subfile = {
+    val (buf, order, first, big) = openTiff(bytes, itemId)
+    val (tags0, next0) = readIfd(bytes, buf, order, first, big)
     var best = tags0
-    var bestCw = spanX / w0
-    var off = next0
-    var guard = 0
-    while (off != 0 && guard < 64) {
-      val (t, next) = readIfd(bytes, buf, order, off, big)
-      val cw = spanX / t.scalar(TImageWidth).toInt
-      if (cw <= targetCellWidth && cw > bestCw) { best = t; bestCw = cw }
-      off = next; guard += 1
+    if (targetCellWidth > 0) {
+      val w0 = tags0.scalar(TImageWidth).toInt
+      val scale0 = tags0.doubles(TModelPixelScale)
+      require(scale0.length >= 2, s"$itemId: missing GeoTIFF georeferencing tags")
+      val spanX = w0 * scale0(0)
+      var bestCw = spanX / w0
+      walkChain(bytes, buf, order, next0, big).foreach { case (_, t) =>
+        val cw = spanX / t.scalar(TImageWidth).toInt
+        if (cw <= targetCellWidth && cw > bestCw) { best = t; bestCw = cw }
+      }
     }
-    best
+    Subfile(order, best, tags0)
+  }
+
+  /** A subfile's width and height: positive, and small enough to index. */
+  private def dims(tags: Tags, itemId: String): (Int, Int) = {
+    val w = tags.scalar(TImageWidth); val h = tags.scalar(TImageLength)
+    require(w > 0 && h > 0 && w <= Int.MaxValue && h <= Int.MaxValue,
+            s"$itemId: bad image dimensions ${w}x$h")
+    (w.toInt, h.toInt)
+  }
+
+  /** The product of `factors` as an array length, or an
+    * IllegalArgumentException naming `what` when it exceeds one. */
+  private def arrayLength(what: => String, factors: Long*): Int = {
+    val n = factors.foldLeft(BigInt(1))(_ * _)
+    require(n <= Int.MaxValue, s"$what: $n exceeds byte-array ingest")
+    n.toInt
   }
 
   /** Read a GeoTIFF into a [[Raster]] (all bands, full resolution).
@@ -975,76 +987,53 @@ object GeoTiff {
     parse(Files.readAllBytes(Paths.get(file.getPath)), id, ts)
   }
 
-  /** Parse GeoTIFF bytes, all bands, full resolution (the distributed-scan
-    * entry: pair with Spark's binaryFile source — each executor decodes its
-    * own files). */
-  def parse(bytes: Array[Byte], itemId: String, ts: Long = 0L): Raster =
-    parseBands(bytes, itemId, ts, None)
-
   /**
-   * Parse GeoTIFF bytes decoding only `select`ed bands (in the given order —
-   * the reference's BAND_PARAM / selectSampleDimension path,
-   * RasterEncoder.java:107-113, StacResource.java:433-437). None = all bands.
-   * With planar interleave the unselected planes' strips/tiles are skipped
-   * without decompression.
+   * Parse GeoTIFF bytes into a [[Raster]] (the distributed-scan entry: pair
+   * with Spark's binaryFile source — each executor decodes its own files).
+   * @param select          the bands to decode, in the given order (the
+   *                        reference's BAND_PARAM / selectSampleDimension
+   *                        path, RasterEncoder.java:107-113,
+   *                        StacResource.java:433-437); None = all. With
+   *                        planar interleave the unselected planes' chunks
+   *                        are skipped without decompression.
+   * @param targetCellWidth 0 = IFD0 at full resolution; else the COARSEST
+   *                        subfile whose cell width still resolves the
+   *                        target (the COG read path: a 4x overview for a
+   *                        4x-coarser mosaic touches 1/16th of the bytes).
+   *                        Georeferencing and nodata always come from IFD0.
    */
-  def parseBands(bytes: Array[Byte], itemId: String, ts: Long,
-                 select: Option[Seq[Int]]): Raster = {
-    val (buf, order, first, big) = openTiff(bytes, itemId)
-    val (tags, _) = readIfd(bytes, buf, order, first, big)
-    decodeSubfile(bytes, buf, order, tags, tags, itemId, ts, select, None)
+  def parse(bytes: Array[Byte], itemId: String, ts: Long = 0L,
+            select: Option[Seq[Int]] = None, targetCellWidth: Double = 0.0): Raster = {
+    val s = openSubfile(bytes, itemId, targetCellWidth)
+    decodeSubfile(bytes, s, itemId, ts, select, None)
   }
 
+  /** A decoded window and its place in the subfile it was cut from: the
+    * subfile's width and height, and the window's cell offset in the
+    * Raster frame (ox columns from the left, oy rows from the bottom), so a
+    * sampler can work in that subfile's full grid. */
+  final case class SubfileWindow(raster: Raster, gridW: Int, gridH: Int, ox: Int, oy: Int)
+
   /**
-   * Windowed decode (the COG partial-read shape): decode ONLY the
-   * strips/tiles intersecting the world-coordinate window — on a tiled
-   * file the bytes inflated are proportional to the window, not the image
-   * (a mosaic tile touching one corner of a 10^5-pixel COG must not
-   * decompress the whole grid). `targetCellWidth > 0` composes with
-   * overview selection: the window is cut from the chosen subfile.
-   * Returns the window's raster with its own (cell-aligned, clamped)
-   * envelope; throws when the window misses the image entirely.
+   * Windowed decode (the COG partial-read shape): decode ONLY the chunks
+   * intersecting the world-coordinate window — on a tiled file the bytes
+   * inflated are proportional to the window, not the image (a mosaic tile
+   * touching one corner of a 10^5-pixel COG must not decompress the whole
+   * grid). `select` and `targetCellWidth` are [[parse]]'s: the window is
+   * cut from the chosen subfile. The window's raster has its own
+   * (cell-aligned, clamped) envelope. None when the window misses the
+   * image, so a bulk pipeline's MISS is cheap and silent while a corrupt
+   * file still throws (an ingest must never drop unreadable items as
+   * "missed windows").
    */
   def parseWindow(bytes: Array[Byte], itemId: String, ts: Long,
                   wMinX: Double, wMaxX: Double, wMinY: Double, wMaxY: Double,
                   select: Option[Seq[Int]] = None,
-                  targetCellWidth: Double = 0.0): Raster =
-    parseWindowOpt(bytes, itemId, ts, wMinX, wMaxX, wMinY, wMaxY, select, targetCellWidth)
-      .getOrElse(throw new IllegalArgumentException(s"$itemId: window misses the image"))
-
-  /** [[parseWindow]] returning None on a disjoint window — the form bulk
-    * pipelines consume so that a MISS is cheap and silent while a corrupt
-    * file still throws (a 100-TB ingest must never silently drop unreadable
-    * items as "missed windows"). */
-  def parseWindowOpt(bytes: Array[Byte], itemId: String, ts: Long,
-                     wMinX: Double, wMaxX: Double, wMinY: Double, wMaxY: Double,
-                     select: Option[Seq[Int]] = None,
-                     targetCellWidth: Double = 0.0): Option[Raster] =
-    parseSubfileWindow(bytes, itemId, ts, wMinX, wMaxX, wMinY, wMaxY, select, targetCellWidth)
-      .map(_.raster)
-
-  /** A decoded window and its place in the subfile it was cut from: the
-    * subfile's width and height, and the window's cell offset in the
-    * Raster frame (ox columns from the left, oy rows from the bottom). */
-  private[graft] final case class SubfileWindow(raster: Raster, gridW: Int, gridH: Int,
-                                                ox: Int, oy: Int)
-
-  /** [[parseWindowOpt]] that also reports where the window sits in the
-    * chosen subfile, so a sampler can work in that subfile's full grid. */
-  private[graft] def parseSubfileWindow(bytes: Array[Byte], itemId: String, ts: Long,
-                                        wMinX: Double, wMaxX: Double,
-                                        wMinY: Double, wMaxY: Double,
-                                        select: Option[Seq[Int]],
-                                        targetCellWidth: Double): Option[SubfileWindow] = {
-    val (buf, order, first, big) = openTiff(bytes, itemId)
-    val (tags0, next0) = readIfd(bytes, buf, order, first, big)
-    val chosen =
-      if (targetCellWidth > 0)
-        coarsestSubfile(bytes, buf, order, big, tags0, next0, targetCellWidth, itemId)
-      else tags0
+                  targetCellWidth: Double = 0.0): Option[SubfileWindow] = {
+    val s = openSubfile(bytes, itemId, targetCellWidth)
     // world window -> pixel window in the chosen subfile's grid
-    val Georef(minX, maxX, minY, maxY, _) = georef(tags0, itemId)
-    val w = chosen.scalar(TImageWidth).toInt; val h = chosen.scalar(TImageLength).toInt
+    val Georef(minX, maxX, minY, maxY, _) = georef(s.tags0, itemId)
+    val (w, h) = dims(s.tags, itemId)
     val cw = (maxX - minX) / w; val chh = (maxY - minY) / h
     @inline def clampI(v: Int, hi: Int) = math.max(0, math.min(v, hi))
     val px0 = clampI(math.floor((wMinX - minX) / cw).toInt, w - 1)
@@ -1054,38 +1043,19 @@ object GeoTiff {
     if (wMaxX <= minX || wMinX >= maxX || wMaxY <= minY || wMinY >= maxY ||
         px1 <= px0 || row1 <= row0) None
     else Some(SubfileWindow(
-      decodeSubfile(bytes, buf, order, chosen, tags0, itemId, ts, select,
-                    Some((px0, row0, px1 - px0, row1 - row0))),
+      decodeSubfile(bytes, s, itemId, ts, select, Some((px0, row0, px1 - px0, row1 - row0))),
       w, h, px0, h - row1))
   }
 
-  /**
-   * Overview-aware parse (the COG read path): decode the COARSEST subfile
-   * whose cell width still resolves `targetCellWidth` (cell <= target) —
-   * reading a 4x overview for a 4x-coarser mosaic touches 1/16th of the
-   * bytes. Falls back to full resolution when every overview is coarser
-   * than requested. Georeferencing/nodata always come from IFD0 (overview
-   * subfiles inherit the envelope).
-   */
-  def parseOverview(bytes: Array[Byte], itemId: String, ts: Long,
-                    targetCellWidth: Double,
-                    select: Option[Seq[Int]] = None): Raster = {
-    val (buf, order, first, big) = openTiff(bytes, itemId)
-    val (tags0, next0) = readIfd(bytes, buf, order, first, big)
-    val best = coarsestSubfile(bytes, buf, order, big, tags0, next0, targetCellWidth, itemId)
-    decodeSubfile(bytes, buf, order, best, tags0, itemId, ts, select, None)
-  }
-
   /** Decode one subfile's pixel grid; georeferencing, EPSG and nodata are
-    * read from `geoTags` (IFD0 — overview subfiles carry none). `window`
-    * (col0, topRow0, width, height in this subfile's pixel grid) restricts
-    * the decode: chunks outside it are never read or inflated. */
-  private def decodeSubfile(bytes: Array[Byte], buf: ByteBuffer, order: ByteOrder,
-                            tags: Tags, geoTags: Tags, itemId: String, ts: Long,
+    * read from IFD0. `window` (col0, topRow0, width, height in this
+    * subfile's pixel grid) restricts the decode: chunks outside it are
+    * never read or inflated. */
+  private def decodeSubfile(bytes: Array[Byte], s: Subfile, itemId: String, ts: Long,
                             select: Option[Seq[Int]],
                             window: Option[(Int, Int, Int, Int)]): Raster = {
-    val w = tags.scalar(TImageWidth).toInt; val h = tags.scalar(TImageLength).toInt
-    require(w > 0 && h > 0, s"$itemId: missing image dimensions")
+    val tags = s.tags; val order = s.order
+    val (w, h) = dims(tags, itemId)
     val (vx0, vrow0, vw, vh) = window.getOrElse((0, 0, w, h))
     val spp = math.max(1, tags.scalar(TSamplesPerPixel, 1).toInt)
     val planarCfg = tags.scalar(TPlanarConfig, 1).toInt
@@ -1111,17 +1081,40 @@ object GeoTiff {
             s"$itemId: predictor 3 applies to floating-point samples")
     val bps = (bits + 7) / 8
 
+    // the chunk grid: tiles (tags 322-325) left-to-right, top-to-bottom,
+    // planes consecutive, edge tiles padded to the full tile size. A strip
+    // is a tile as wide as the image and RowsPerStrip tall (TIFF 6.0's
+    // default, 2^32-1, means one strip), unpadded, so the last may be short
+    val planes = if (planarCfg == 2) spp else 1
+    val sppC = if (planarCfg == 2) 1 else spp
+    val tiled = tags.entries.contains(TTileOffsets)
+    val (cwL, chL) =
+      if (tiled) (tags.scalar(TTileWidth), tags.scalar(TTileLength))
+      else (w.toLong, math.min(tags.scalar(TRowsPerStrip, h), h.toLong))
+    require(cwL > 0 && chL > 0, s"$itemId: bad chunk dimensions ${cwL}x$chL")
+    arrayLength(s"$itemId: bytes in a ${cwL}x$chL chunk", cwL, chL, sppC, bps)
+    val cw = cwL.toInt; val ch = chL.toInt
+    val rowBytes = cw * sppC * bps
+    val across = ((w + cwL - 1) / cwL).toInt; val down = (h + chL - 1) / chL
+    val offsets = tags.longs(if (tiled) TTileOffsets else TStripOffsets)
+    val counts = tags.longs(if (tiled) TTileByteCounts else TStripByteCounts)
+    require(offsets.length == across * down * planes && counts.length == offsets.length,
+            s"$itemId: ${offsets.length} chunk offsets and ${counts.length} byte counts, " +
+              s"expected ${across * down * planes}")
+    val perPlane = offsets.length / planes
+
     // band selection: plane -> output slot (-1 = skip)
     val sel = select.getOrElse(0 until spp)
     sel.foreach(b => require(b >= 0 && b < spp, s"$itemId: band $b of $spp"))
     val destOf = Array.fill(spp)(-1)
     sel.zipWithIndex.foreach { case (b, i) => destOf(b) = i }
-    val bands = Array.fill(sel.length)(new Array[Double](vw * vh))
+    val bands = Array.fill(sel.length)(
+      new Array[Double](arrayLength(s"$itemId: ${vw}x$vh cells", vw, vh)))
 
     // GDAL_NODATA; a NaN nodata (or none) never equals a sample, so one
     // compare per sample tests it
-    val nd = geoTags.ascii(TGdalNodata).flatMap { s =>
-      val t = s.trim
+    val nd = s.tags0.ascii(TGdalNodata).flatMap { txt =>
+      val t = txt.trim
       if (t.equalsIgnoreCase("nan")) None else t.toDoubleOption
     }.getOrElse(Double.NaN)
     // the sample reader, picked once per subfile; an unsupported format
@@ -1138,23 +1131,25 @@ object GeoTiff {
         s"unsupported sample format/bits $other")
     }
 
-    // decode one data chunk covering image rect (x0, top-down row0, cw_ x
-    // ch_) with padded row width rw and sppC interleaved samples per pixel;
-    // `plane` >= 0 pins the band (planar config), else samples map to bands
-    // 0..sppC-1 (chunky)
-    def decodeChunk(off: Long, cnt: Long, expected: Int, x0: Int, row0: Int,
-                    cw_ : Int, ch_ : Int, rw: Int, sppC: Int, plane: Int): Unit = {
+    // decode chunk i, whose top-left cell is (x0, top-down row0); `plane`
+    // >= 0 pins the band (planar config), else the sppC interleaved samples
+    // map to bands 0..sppC-1 (chunky)
+    def decodeChunk(i: Int, x0: Int, row0: Int, plane: Int): Unit = {
+      val rows = if (tiled) ch else math.min(ch, h - row0)
       // window skip: a chunk wholly outside the decode window is never
       // copied or inflated (the COG partial-read property)
-      if (x0 >= vx0 + vw || x0 + cw_ <= vx0 || row0 >= vrow0 + vh || row0 + ch_ <= vrow0)
+      if (x0 >= vx0 + vw || vx0 - x0 >= cw || row0 >= vrow0 + vh || vrow0 - row0 >= rows)
         return
       chunksDecoded.incrementAndGet()
+      val off = offsets(i); val cnt = counts(i); val expected = rows * rowBytes
       // overflow-safe bounds guard (ADVICE r5): a corrupt BigTIFF LONG8
       // offset would otherwise alias through off.toInt (2^32+100 -> 100)
       // and decode the wrong bytes into pixel values instead of failing
       // with a diagnostic — mirror Tags.checkPayload for the chunk values
       require(off >= 0 && cnt >= 0 && off <= bytes.length.toLong - cnt,
         s"chunk offset/count out of range: off=$off cnt=$cnt file=${bytes.length}B")
+      require(compression != 1 || cnt >= expected,
+              s"$itemId: uncompressed chunk $i holds $cnt bytes, its $rows rows need $expected")
       val raw = java.util.Arrays.copyOfRange(bytes, off.toInt, (off + cnt).toInt)
       val data0 = compression match {
         case 8 => inflateBytes(raw, expected)
@@ -1162,15 +1157,15 @@ object GeoTiff {
         case _ => raw
       }
       val data = predictor match {
-        case 3 => fpPredictDecode(data0, rw * sppC * bps, bps, order)
-        case 2 => intPredictDecode(data0, rw * sppC * bps, bps, sppC, order)
+        case 3 => fpPredictDecode(data0, rowBytes, bps, order)
+        case 2 => intPredictDecode(data0, rowBytes, bps, sppC, order)
         case _ => data0
       }
       val bb = ByteBuffer.wrap(data).order(order)
       // the chunk's rows and columns inside the window (and the image: edge
-      // chunks are padded), clamped once per chunk
-      val rrEnd = math.min(ch_, math.min(vrow0 + vh, h) - row0)
-      val xiLo = math.max(0, vx0 - x0); val xiEnd = math.min(cw_, math.min(vx0 + vw, w) - x0)
+      // tiles are padded), clamped once per chunk
+      val rrEnd = math.min(rows, math.min(vrow0 + vh, h) - row0)
+      val xiLo = math.max(0, vx0 - x0); val xiEnd = math.min(cw, math.min(vx0 + vw, w) - x0)
       // output band of each interleaved sample (-1 = not selected)
       val dsts = if (plane >= 0) Array(destOf(plane)) else destOf
       var rr = math.max(0, vrow0 - row0)
@@ -1183,7 +1178,7 @@ object GeoTiff {
             val band = bands(dst)
             var xi = xiLo
             while (xi < xiEnd) {
-              val v = sampleAt(bb, ((rr * rw + xi) * sppC + b) * bps)
+              val v = sampleAt(bb, ((rr * cw + xi) * sppC + b) * bps)
               band((x0 + xi - vx0) * vh + y) = if (v == nd) Double.NaN else v
               xi += 1
             }
@@ -1194,57 +1189,20 @@ object GeoTiff {
       }
     }
 
-    val planes = if (planarCfg == 2) spp else 1
-    val sppC = if (planarCfg == 2) 1 else spp
-    if (tags.entries.contains(TTileOffsets)) {
-      // tiled layout (tags 322-325): tiles left-to-right top-to-bottom,
-      // planes consecutive; edge tiles padded to the full tile size
-      val tw = tags.scalar(TTileWidth).toInt; val tl = tags.scalar(TTileLength).toInt
-      require(tw > 0 && tl > 0, s"$itemId: bad tile dimensions ${tw}x$tl")
-      val ta = (w + tw - 1) / tw; val td = (h + tl - 1) / tl
-      val offsets = tags.longs(TTileOffsets); val counts = tags.longs(TTileByteCounts)
-      require(offsets.length == ta * td * planes,
-              s"$itemId: ${offsets.length} tiles, expected ${ta * td * planes}")
-      val expected = tw * tl * sppC * bps
-      var p = 0
-      while (p < planes) {
-        if (planarCfg != 2 || destOf(p) >= 0) { // skip unselected planes wholesale
-          var t = 0
-          while (t < ta * td) {
-            val i = p * ta * td + t
-            decodeChunk(offsets(i), counts(i), expected,
-                        (t % ta) * tw, (t / ta) * tl, tw, tl, tw, sppC,
-                        if (planarCfg == 2) p else -1)
-            t += 1
-          }
+    var p = 0
+    while (p < planes) {
+      if (planarCfg != 2 || destOf(p) >= 0) { // skip unselected planes wholesale
+        var c = 0
+        while (c < perPlane) {
+          decodeChunk(p * perPlane + c, (c % across) * cw, (c / across) * ch,
+                      if (planarCfg == 2) p else -1)
+          c += 1
         }
-        p += 1
       }
-    } else {
-      val offsets = tags.longs(TStripOffsets)
-      val counts = tags.longs(TStripByteCounts)
-      val rowsPerStrip = tags.scalar(TRowsPerStrip, h).toInt
-      val spi = (h + rowsPerStrip - 1) / rowsPerStrip // strips per plane
-      require(offsets.length == spi * planes,
-              s"$itemId: ${offsets.length} strips, expected ${spi * planes}")
-      var p = 0
-      while (p < planes) {
-        if (planarCfg != 2 || destOf(p) >= 0) {
-          var s = 0
-          while (s < spi) {
-            val i = p * spi + s
-            val rows = math.min(rowsPerStrip, h - s * rowsPerStrip)
-            decodeChunk(offsets(i), counts(i), rows * w * sppC * bps,
-                        0, s * rowsPerStrip, w, rows, w, sppC,
-                        if (planarCfg == 2) p else -1)
-            s += 1
-          }
-        }
-        p += 1
-      }
+      p += 1
     }
 
-    val Georef(minX, maxX, minY, maxY, epsg) = georef(geoTags, itemId)
+    val Georef(minX, maxX, minY, maxY, epsg) = georef(s.tags0, itemId)
 
     // window envelope: cut from the full envelope along this subfile's
     // grid. Edges that coincide with the image keep the ORIGINAL bound

@@ -88,13 +88,13 @@ class CogMosaicSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("overview target composes: cog path == full path over parseOverview rasters") {
+  test("overview target composes: cog path == full path over overview-decoded rasters") {
     import spark.implicits._
     val item = mkItem("ov", 1L, 128, 64, 0.0, 0.0, 1.0)
     val bytes = GeoTiff.encode(item, bits = 64, deflate = true,
                                tile = Some((16, 16)), overviews = Seq(2, 4))
     val region = TileGeometry(32, 16, 0.0, 256.0, 0.0, 128.0, 4326, 0L, 0L) // 8-unit cells
-    val decoded = GeoTiff.parseOverview(bytes, "ov", 1L, region.cellWidth)
+    val decoded = GeoTiff.parse(bytes, "ov", 1L, targetCellWidth = region.cellWidth)
     assert(decoded.width == 32) // factor-4 overview chosen
     // all kernels: at overview factor f the fragment cells are f x wider, so
     // Bilinear/Bicubic taps need the apron sized by the CHOSEN subfile's
@@ -126,7 +126,7 @@ class CogMosaicSpec extends AnyFunSuite with SparkSuite {
     val bytes = GeoTiff.encode(item, bits = 64, deflate = true,
                                tile = Some((16, 16)), overviews = Seq(2, 4, 8))
     val region = TileGeometry(32, 16, 0.0, 256.0, 0.0, 128.0, 4326, 0L, 0L)
-    val decoded = GeoTiff.parseOverview(bytes, "ov2", 1L, region.cellWidth)
+    val decoded = GeoTiff.parse(bytes, "ov2", 1L, targetCellWidth = region.cellWidth)
     for (kernel <- Seq(Resample.Bilinear, Resample.Bicubic)) {
       val viaCog = Mosaic.mergeToTilesCog(
         spark.createDataset(Seq(CogFile("ov2", 1L, bytes))), region,

@@ -238,7 +238,7 @@ class GeoTiffSpec extends AnyFunSuite {
       val f = tmp(".tif")
       GeoTiff.writeFull(r, f, deflate = true, tile = tile, planar = planar)
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      val back = GeoTiff.parseBands(bytes, "m1", 7L, Some(Seq(2, 0)))
+      val back = GeoTiff.parse(bytes, "m1", 7L, Some(Seq(2, 0)))
       assert(back.bands.length == 2)
       sameValues(r.bands(2), back.bands(0))
       sameValues(r.bands(0), back.bands(1))
@@ -303,7 +303,7 @@ class GeoTiffSpec extends AnyFunSuite {
       sameValues(full.bands.head, GeoTiff.parse(bytes, "ov").bands.head)
       // target cell 2.0 -> factor-2 overview; values = full(2x, 2y);
       // envelope and epsg inherited from IFD0
-      val ov2 = GeoTiff.parseOverview(bytes, "ov", 5L, targetCellWidth = 2.0)
+      val ov2 = GeoTiff.parse(bytes, "ov", 5L, targetCellWidth = 2.0)
       assert((ov2.width, ov2.height) == (16, 8), label)
       assert((ov2.minX, ov2.maxX, ov2.minY, ov2.maxY) == (0.0, 32.0, 0.0, 16.0))
       assert(ov2.epsg == 32618 && ov2.ts == 5L)
@@ -312,9 +312,9 @@ class GeoTiffSpec extends AnyFunSuite {
                s"$label ($x,$y)")
       // target cell 4.0 -> factor-4; 3.9 -> factor-2 (coarsest that still
       // resolves); 0.5 -> full resolution (no overview fine enough)
-      assert(GeoTiff.parseOverview(bytes, "ov", 5L, 4.0).width == 8, label)
-      assert(GeoTiff.parseOverview(bytes, "ov", 5L, 3.9).width == 16, label)
-      assert(GeoTiff.parseOverview(bytes, "ov", 5L, 0.5).width == 32, label)
+      assert(GeoTiff.parse(bytes, "ov", 5L, targetCellWidth = 4.0).width == 8, label)
+      assert(GeoTiff.parse(bytes, "ov", 5L, targetCellWidth = 3.9).width == 16, label)
+      assert(GeoTiff.parse(bytes, "ov", 5L, targetCellWidth = 0.5).width == 32, label)
     }
   }
 
@@ -323,7 +323,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val f = tmp(".tif")
     GeoTiff.writeFull(r, f, bits = 64, deflate = true, planar = 2, overviews = Seq(2))
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-    val ov = GeoTiff.parseOverview(bytes, "m1", 7L, 2.0, Some(Seq(2)))
+    val ov = GeoTiff.parse(bytes, "m1", 7L, Some(Seq(2)), 2.0)
     assert(ov.bands.length == 1 && (ov.width, ov.height) == (16, 8))
     for (x <- 0 until 16; y <- 0 until 8) {
       val want = r.bands(2)(2 * x * 16 + 2 * y)
@@ -416,7 +416,7 @@ class GeoTiffSpec extends AnyFunSuite {
     def crop(bytes: Array[Byte], full: Raster, x0: Int, x1: Int, y0: Int, y1: Int,
              label: String): Unit = {
       val wr = GeoTiff.parseWindow(bytes, full.item_id, full.ts,
-                                   x0.toDouble, x1.toDouble, y0.toDouble, y1.toDouble)
+                                   x0.toDouble, x1.toDouble, y0.toDouble, y1.toDouble).get.raster
       assert((wr.minX, wr.maxX, wr.minY, wr.maxY) ==
              (x0.toDouble, x1.toDouble, y0.toDouble, y1.toDouble), label)
       assert((wr.width, wr.height) == (x1 - x0, y1 - y0), label)
@@ -510,22 +510,23 @@ class GeoTiffSpec extends AnyFunSuite {
     GeoTiff.writeFull(m, fp, deflate = true, planar = 2)
     val bp = java.nio.file.Files.readAllBytes(fp.toPath)
     val c2 = GeoTiff.chunksDecoded.get()
-    GeoTiff.parseBands(bp, "m1", 7L, Some(Seq(1)))
+    GeoTiff.parse(bp, "m1", 7L, Some(Seq(1)))
     assert(GeoTiff.chunksDecoded.get() - c2 == 1L)
   }
 
-  test("windowed decode: clamping, full-cover bitwise envelope, miss errors") {
+  test("windowed decode: clamping, full-cover bitwise envelope, None on a miss") {
     val r = mkRaster(4326) // 17x11 over [10,27]x[-5,6]
     val f = tmp(".tif")
     GeoTiff.writeFull(r, f, tile = Some((16, 16)), deflate = true)
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     // window larger than the image clamps to the exact original envelope
-    val all = GeoTiff.parseWindow(bytes, "t1", 0L, -100.0, 100.0, -100.0, 100.0)
+    val all = GeoTiff.parseWindow(bytes, "t1", 0L, -100.0, 100.0, -100.0, 100.0).get.raster
     assert((all.minX, all.maxX, all.minY, all.maxY) == (10.0, 27.0, -5.0, 6.0))
     sameValues(r.bands.head, all.bands.head)
-    // disjoint window errors
+    // a disjoint window is a miss, not an error; a corrupt file still throws
+    assert(GeoTiff.parseWindow(bytes, "t1", 0L, 200.0, 300.0, 0.0, 1.0).isEmpty)
     intercept[IllegalArgumentException](
-      GeoTiff.parseWindow(bytes, "t1", 0L, 200.0, 300.0, 0.0, 1.0))
+      GeoTiff.parseWindow("not a tiff at all".getBytes, "t1", 0L, 200.0, 300.0, 0.0, 1.0))
   }
 
   test("windowed decode composes with overview selection") {
@@ -537,7 +538,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     // factor-2 overview grid: cells of 2 world units; window [4,12)x[2,10)
     val wr = GeoTiff.parseWindow(bytes, "ov", 5L, 4.0, 12.0, 2.0, 10.0,
-                                 targetCellWidth = 2.0)
+                                 targetCellWidth = 2.0).get.raster
     assert((wr.width, wr.height) == (4, 4))
     assert((wr.minX, wr.maxX, wr.minY, wr.maxY) == (4.0, 12.0, 2.0, 10.0))
     for (x <- 0 until 4; y <- 0 until 4) {
@@ -923,6 +924,38 @@ class GeoTiffSpec extends AnyFunSuite {
       "74f22e8ffe47174defc7ac94a3b0d619d8e373fc933fb22a2d456eead2a0c567")
   }
 
+  test("writer golden: encode bytes are pinned across layouts, codecs and sample types") {
+    // one digest over every writer shape: strips and 16x16 tiles, chunky and
+    // planar, float32/64, none/DEFLATE/LZW, overviews, BigTIFF, 8/16-bit
+    // palettes with predictor 2 and floats with predictor 3. The DEFLATE
+    // chunks are java.util.zip's output, so a JDK whose zlib emits other
+    // bytes changes the digest too.
+    val m = mkMulti(37, 23)
+    val codes = Array.tabulate(37 * 23)(i => ((i * 31 + i / 23 * 17) % 300).toDouble)
+    val pal = Raster("pal", 1L, 37, 23, 0.0, 37.0, 0.0, 23.0, 4326, Seq(codes))
+    val colors = Seq.tabulate(300)(c => (c % 256, (c * 7) % 256, (c * 13) % 256))
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    for (tile <- Seq(None, Some((16, 16)))) {
+      for (planar <- Seq(1, 2); bits <- Seq(32, 64);
+           (deflate, lzw) <- Seq((false, false), (true, false), (false, true)))
+        sha.update(GeoTiff.encode(m, bits = bits, deflate = deflate, lzw = lzw,
+                                  tile = tile, planar = planar))
+      sha.update(GeoTiff.encode(m, deflate = true, tile = tile, planar = 2,
+                                overviews = Seq(2, 4)))
+      sha.update(GeoTiff.encode(m, bits = 32, lzw = true, tile = tile,
+                                overviews = Seq(2, 4), bigTiff = true))
+      sha.update(GeoTiff.encode(pal.copy(bands = Seq(codes.map(_ % 256))), bits = 8,
+                                lzw = true, tile = tile, palette = Some(colors.take(256)),
+                                predictor = 2))
+      sha.update(GeoTiff.encode(pal, bits = 16, deflate = true, tile = tile,
+                                palette = Some(colors), predictor = 2))
+      for (bits <- Seq(32, 64))
+        sha.update(GeoTiff.encode(m, bits = bits, deflate = true, tile = tile, predictor = 3))
+    }
+    assert(sha.digest().map(b => f"$b%02x").mkString ==
+      "aed478b6d717b3364835841a7db1eaf38ee09ea9630a1ff62d449229845675bc")
+  }
+
   test("fuzz: corrupt/random bytes fail fast (no hang, no OOM) on every entry point") {
     // binaryFile content is untrusted at ingest; every decode entry must
     // throw a diagnosable exception promptly rather than spin or allocate
@@ -1018,6 +1051,39 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(exPtr.getMessage.contains("out of bounds"))
   }
 
+  /** `bytes` (a classic little-endian file, as [[GeoTiff.encode]] writes it)
+    * with the inline LONG value of IFD0's `tag` replaced by `v`. */
+  private def patchTag(bytes: Array[Byte], tag: Int, v: Long): Array[Byte] = {
+    val out = bytes.clone()
+    val bb = java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val ifd = bb.getInt(4)
+    val entry = (0 until (bb.getShort(ifd) & 0xffff)).map(i => ifd + 2 + 12 * i)
+      .find(e => (bb.getShort(e) & 0xffff) == tag).getOrElse(fail(s"no tag $tag"))
+    assert(bb.getShort(entry + 2) == 4 && bb.getInt(entry + 4) == 1, s"tag $tag is not one LONG")
+    bb.putInt(entry + 8, v.toInt)
+    out
+  }
+
+  test("strip grid: RowsPerStrip 2^32-1 is one strip; corrupt chunk grids fail typed") {
+    val r = Raster("s", 0L, 5, 4, 0.0, 5.0, 0.0, 4.0, 4326,
+                   Seq(Array.tabulate(20)(i => if (i == 7) Double.NaN else i * 1.25 - 3.0)))
+    val bytes = GeoTiff.encode(r) // float64, uncompressed, one 4-row strip
+    // TIFF 6.0's default RowsPerStrip, 2^32-1, means "the whole image"
+    val one = GeoTiff.parse(patchTag(bytes, 278, 0xFFFFFFFFL), "rps")
+    assert(one.bands.head.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+           r.bands.head.map(java.lang.Double.doubleToRawLongBits).toSeq)
+    // RowsPerStrip 0 has no strips to read
+    intercept[IllegalArgumentException](GeoTiff.parse(patchTag(bytes, 278, 0L), "rps0"))
+    // 65536x65536 cells in one strip: past an array both as cells and as
+    // strip bytes, whole or windowed
+    val huge = Seq((256, 65536L), (257, 65536L), (278, 65536L))
+      .foldLeft(bytes) { case (b, (tag, v)) => patchTag(b, tag, v) }
+    intercept[IllegalArgumentException](GeoTiff.parse(huge, "huge"))
+    intercept[IllegalArgumentException](GeoTiff.parseWindow(huge, "huge", 0L, 0.0, 1.0, 0.0, 1.0))
+    // an uncompressed strip one row short of its 4 rows
+    intercept[IllegalArgumentException](GeoTiff.parse(patchTag(bytes, 279, 3 * 5 * 8L), "short"))
+  }
+
   test("BigTIFF single-strip round-trip is bit-exact (inline LONG8 offsets)") {
     val r = mkRaster(4326)
     // single strip => the one-element LONG8 offset/bytecount arrays fit the
@@ -1056,12 +1122,12 @@ class GeoTiffSpec extends AnyFunSuite {
       assert(pr.epsg == full.epsg, label)
     }
     assert(GeoTiff.probe(GeoTiff.encode(utm), "utm").epsg == 32633)
-    // and one overview selector: parseOverview at t == the full-extent
+    // and one overview selector: parse at t == the full-extent
     // window at the same t, down to the envelope bits
     for (t <- Seq(0.5, 1.0, 2.0, 3.9, 4.0, 100.0)) {
-      val ov = GeoTiff.parseOverview(bytes, "bigcog", 7L, t)
-      val win = GeoTiff.parseWindowOpt(bytes, "bigcog", 7L, p.minX, p.maxX, p.minY, p.maxY,
-                                       targetCellWidth = t).get
+      val ov = GeoTiff.parse(bytes, "bigcog", 7L, targetCellWidth = t)
+      val win = GeoTiff.parseWindow(bytes, "bigcog", 7L, p.minX, p.maxX, p.minY, p.maxY,
+                                    targetCellWidth = t).get.raster
       assert((win.width, win.height, win.epsg) == (ov.width, ov.height, ov.epsg), s"t=$t")
       assert(envBits(win.minX, win.maxX, win.minY, win.maxY) ==
              envBits(ov.minX, ov.maxX, ov.minY, ov.maxY), s"t=$t")
@@ -1078,11 +1144,11 @@ class GeoTiffSpec extends AnyFunSuite {
     for (b <- 0 until 3) sameValues(classic.bands(b), big.bands(b))
     // windowed read through the overview chain: identical classic vs big
     val win = (8.0, 24.0, 8.0, 20.0)
-    val wb = GeoTiff.parseWindowOpt(bytes, "bigcog", 7L,
-      win._1, win._2, win._3, win._4, targetCellWidth = 2.0)
-    val wc = GeoTiff.parseWindowOpt(GeoTiff.encode(r, bits = 64, deflate = true,
+    val wb = GeoTiff.parseWindow(bytes, "bigcog", 7L,
+      win._1, win._2, win._3, win._4, targetCellWidth = 2.0).map(_.raster)
+    val wc = GeoTiff.parseWindow(GeoTiff.encode(r, bits = 64, deflate = true,
       tile = Some((16, 16)), overviews = Seq(2, 4)), "classic", 7L,
-      win._1, win._2, win._3, win._4, targetCellWidth = 2.0)
+      win._1, win._2, win._3, win._4, targetCellWidth = 2.0).map(_.raster)
     assert(wb.isDefined && wc.isDefined)
     assert((wb.get.width, wb.get.height) == (wc.get.width, wc.get.height))
     for (b <- 0 until 3) sameValues(wc.get.bands(b), wb.get.bands(b))
